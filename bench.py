@@ -11,7 +11,7 @@ this file (round-1 BENCH artifact was unparseable because the full map
 overflowed the driver's capture window).
 
 Env: ``SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1),
-``SPARK_GRAFT_CPUS`` (default 32).
+``SPARK_GRAFT_CPUS`` (default: the cores this process may run on).
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kafka_bigdata_jobs_spark import suite  # noqa: E402
-from kafka_bigdata_jobs_spark.session import get_spark  # noqa: E402
+from kafka_bigdata_jobs_spark.session import get_spark, host_conf  # noqa: E402
 
 
 def _code_sig(here: str) -> str:
@@ -161,7 +161,7 @@ def main() -> None:
     # cpus-suffixed artifact so they never clobber the 32-core minima.
     here = os.path.dirname(os.path.abspath(__file__))
     code_sig = _code_sig(here)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_conf()[0]
     timings_raw = dict(timings)  # this run's own cold numbers, pre-merge
     default_out = ("BENCH_local.json" if cpus == 32
                    else f"BENCH_local_c{cpus}.json")

@@ -12,9 +12,9 @@ iteration is one equi-join (ranks ⋈ edges on src) plus one aggregation
 (sum contributions by dst) — the two shuffles land on the same key
 space, so a pre-partitioned/bucketed edge table makes each iteration a
 single co-located pass.  Iteration count is fixed and small (power
-iteration converges geometrically at damping^k); lineage is cut with
-``localCheckpoint`` every few rounds so the plan doesn't deepen
-unboundedly (same discipline as ``dedup.connected_components``).
+iteration converges geometrically at damping^k); each round's ranks
+(one row per node) are checkpointed eagerly, so the plan never deepens
+past one round (same discipline as ``dedup.connected_components``).
 
 Determinism discipline
 ----------------------
@@ -32,10 +32,81 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: After this many join+agg rounds the lineage is cut.  Spark's
-#: optimizer re-analyzes the full plan each action; past ~8 self-joined
-#: stages analysis time dominates, so checkpoint earlier than that.
-CHECKPOINT_EVERY = 4
+def _power_iterate(
+    edges: DataFrame,
+    restart: DataFrame | None,
+    fill_bp: int,
+    src: str,
+    dst: str,
+    n_iter: int,
+    damping_bp: int,
+) -> DataFrame:
+    """Integer power iteration shared by :func:`pagerank_bp` and
+    :func:`personalized_pagerank_bp`.
+
+    The node set is the src side of ``edges``.  Each node's restart
+    mass comes from ``restart`` ``(node, restart_bp)`` when given, else
+    ``fill_bp``; it is both the round-0 score and the source of the
+    node's teleport term ``(10000 - damping_bp) * restart_bp // 10000``.
+
+    One persisted relation holds every edge (weight 1) plus a weight-0
+    self row per node carrying that node's restart mass, so a round is
+    one join (relation ⋈ ranks on src) plus one aggregate (sum by dst):
+    every node receives its own teleport row, so no re-anchoring join
+    on the node set is needed.  Nodes that appear only as a dst have no
+    self row and are filtered out, matching the node-set contract.
+    """
+    deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("__outdeg"))
+    nodes = deg.select(F.col(src).alias("node"), "__outdeg")
+    if restart is None:
+        r0 = F.lit(fill_bp)
+    else:
+        nodes = nodes.join(restart, "node", "left")
+        r0 = F.coalesce(F.col("restart_bp"), F.lit(fill_bp))
+    # At scale this is the bucketed artifact every round re-joins
+    # against — so PERSIST it: without this, each round recomputes the
+    # whole upstream edge derivation (measured 7.8 s -> 2 s at sf0.1 on
+    # the customer/supplier graph, where upstream is a lineitem×orders
+    # join + distinct).
+    rel = (
+        edges.join(deg, src)
+        .select(
+            F.col(src).alias("__src"),
+            F.col(dst).alias("node"),
+            "__outdeg",
+            F.lit(1).alias("__w"),
+            F.lit(0).cast("long").alias("__r0"),
+        )
+        .unionByName(nodes.select(
+            F.col("node").alias("__src"),
+            "node",
+            "__outdeg",
+            F.lit(0).alias("__w"),
+            r0.cast("long").alias("__r0"),
+        ))
+        .persist()
+    )
+    # round-0 scores read the persisted relation, so the edge
+    # derivation runs once
+    ranks = rel.where(F.col("__w") == 0).select(
+        "__src", F.col("__r0").alias("score_bp")
+    ).localCheckpoint(eager=True)
+    step = (f"__w * ((score_bp * {damping_bp}) div (10000 * __outdeg))"
+            f" + ((10000 - {damping_bp}) * __r0) div 10000")
+    for _ in range(n_iter):
+        ranks = (
+            rel.join(ranks, "__src")
+            .groupBy("node")
+            .agg(
+                F.sum(F.expr(step)).cast("long").alias("score_bp"),
+                F.min("__w").alias("__minw"),
+            )
+            .where(F.col("__minw") == 0)
+            .select(F.col("node").alias("__src"), "score_bp")
+            .localCheckpoint(eager=True)
+        )
+    rel.unpersist()
+    return ranks.withColumnRenamed("__src", "node")
 
 
 def pagerank_bp(
@@ -61,57 +132,10 @@ def pagerank_bp(
 
     All arithmetic is int64; the teleport term is itself an exact
     integer for the default (1500 bp · init 10000 bp / 10000 = 1500).
+    It is :func:`personalized_pagerank_bp` with every node restarting
+    at ``init_bp``.
     """
-    base_bp = (10000 - damping_bp) * init_bp // 10000
-
-    deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("__outdeg"))
-    # One co-located relation: (src, dst, outdeg_src).  At scale this is
-    # the bucketed artifact every iteration re-joins against — so
-    # PERSIST it: without this, each of the n_iter joins recomputes the
-    # whole upstream edge derivation (measured 7.8 s -> 2 s at sf0.1 on
-    # the customer/supplier graph, where upstream is a lineitem×orders
-    # join + distinct).
-    ed = edges.join(deg, src).persist()
-
-    # Every node is required to have an outgoing edge, so the src side
-    # alone enumerates the node set — and it reads the persisted ed.
-    # Persisted too: every iteration re-anchors on it (see below), and
-    # it is one row per node, far smaller than the edge relation.
-    nodes = ed.select(F.col(src).alias("node")).distinct().persist()
-    ranks = nodes.withColumn("score_bp", F.lit(init_bp).cast("long"))
-
-    for it in range(n_iter):
-        contrib = (
-            ed.join(ranks, ed[src] == ranks["node"])
-            .select(
-                F.col(dst).alias("node"),
-                F.expr(f"(score_bp * {damping_bp}) div (10000 * __outdeg)").alias(
-                    "__c"
-                ),
-            )
-        )
-        # Re-anchor on the FULL node set: a groupBy over contributions
-        # alone only reproduces nodes that receive at least one
-        # contribution, silently dropping source-only nodes (no in-edges)
-        # after the first iteration — they must keep their teleport term
-        # base_bp and continue feeding downstream, matching the pure
-        # integer formulation (and the test twin in test_graph.py).
-        summed = contrib.groupBy("node").agg(F.sum("__c").alias("__s"))
-        ranks = nodes.join(summed, "node", "left").select(
-            "node",
-            (F.lit(base_bp) + F.coalesce(F.col("__s"), F.lit(0)))
-            .cast("long")
-            .alias("score_bp"),
-        )
-        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
-    # Materialize the (small: one row per node) result so the edge
-    # artifact can be released — callers get a checkpointed frame with
-    # no live dependency on ed.
-    ranks = ranks.localCheckpoint(eager=True)
-    nodes.unpersist()
-    ed.unpersist()
-    return ranks
+    return _power_iterate(edges, None, init_bp, src, dst, n_iter, damping_bp)
 
 
 def oriented_triangles(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
@@ -209,8 +233,8 @@ def bfs_distances(
     holds NEW nodes (anti-join against visited), so total work across
     all hops is O(edges touched), not O(hops × nodes) — the
     path-enumeration blowup of a naive recursive expansion never
-    materializes.  Lineage is cut with ``localCheckpoint`` every
-    ``CHECKPOINT_EVERY`` hops, same discipline as :func:`pagerank_bp`.
+    materializes.  Each hop's frontier is checkpointed, same discipline
+    as :func:`pagerank_bp`.
     """
     # Each hop's frontier is materialized (localCheckpoint eager) before
     # it joins into `visited`, so the visited relation is a shallow
@@ -263,47 +287,7 @@ def personalized_pagerank_bp(
 
     with ``score_0 = restart_bp``.  Same iteration shape and
     determinism discipline as :func:`pagerank_bp` (one join + one agg
-    per round on a persisted degree-annotated edge relation, full
-    node-set re-anchor, checkpointed lineage, DuckDB-recursive-CTE
-    reproducible).
+    per round on a persisted degree-annotated edge relation,
+    checkpointed lineage, DuckDB-recursive-CTE reproducible).
     """
-    deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("__outdeg"))
-    ed = edges.join(deg, src).persist()
-
-    nodes = ed.select(F.col(src).alias("node")).distinct()
-    nt = (
-        nodes.join(restart, "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("restart_bp"), F.lit(0)).cast("long").alias(
-                "restart_bp"
-            ),
-        )
-        .withColumn(
-            "__tele",
-            F.expr(f"((10000 - {damping_bp}) * restart_bp) div 10000"),
-        )
-        .persist()
-    )
-    ranks = nt.select("node", F.col("restart_bp").alias("score_bp"))
-
-    for it in range(n_iter):
-        contrib = ed.join(ranks, ed[src] == ranks["node"]).select(
-            F.col(dst).alias("node"),
-            F.expr(f"(score_bp * {damping_bp}) div (10000 * __outdeg)").alias(
-                "__c"
-            ),
-        )
-        summed = contrib.groupBy("node").agg(F.sum("__c").alias("__s"))
-        ranks = nt.join(summed, "node", "left").select(
-            "node",
-            (F.col("__tele") + F.coalesce(F.col("__s"), F.lit(0)))
-            .cast("long")
-            .alias("score_bp"),
-        )
-        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
-    ranks = ranks.localCheckpoint(eager=True)
-    nt.unpersist()
-    ed.unpersist()
-    return ranks
+    return _power_iterate(edges, restart, 0, src, dst, n_iter, damping_bp)

@@ -25,7 +25,9 @@ string is a single call and yields the identical codegen'd plan.
 from __future__ import annotations
 
 import math
-import os
+import time
+from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -243,6 +245,62 @@ class CoveringRadiusBlowupError(RuntimeError):
     """
 
 
+def _lap(into: dict[str, float], name: str, t0: float) -> float:
+    """Add the driver seconds since ``t0`` to ``into[name]``; return
+    the new start time (so consecutive steps chain)."""
+    now = time.monotonic()
+    into[name] = round(into.get(name, 0.0) + (now - t0), 3)
+    return now
+
+
+@dataclass
+class HierStats:
+    """Per-call record of one partitioned exact pair search.
+
+    Pass a fresh instance as ``stats=`` to
+    :func:`embedding_near_dup_pairs_hier`, ``_celled`` or ``_auto``;
+    the call fills in the fields it reaches and leaves the rest
+    ``None``.  Each call writes only its own record, so concurrent or
+    successive calls never overwrite each other's numbers.
+    """
+
+    #: auto dispatch: 'blocked', 'celled', 'hier' or 'semdedup_fallback'
+    path: str | None = None
+    #: auto result semantics: 'exact' or 'semdedup_cells'
+    method: str | None = None
+    #: hier quantizer fit: 'driver' (bounded sample) or 'distributed'
+    #: (two-stage executor fit past the driver sample cap)
+    fit_mode: str | None = None
+    #: hier leaf count K
+    k: int | None = None
+    #: 3 when the hier super level ran, 2 below 24 branches
+    levels: int | None = None
+    #: leaves in the hier replication scan's dense wide tier
+    wide_leaves: int | None = None
+    #: guard-measured mean replication factor (None: guard skipped —
+    #: small corpus or ``max_replication=None``)
+    replication: float | None = None
+    #: driver wall seconds per hier phase (see :meth:`phase`)
+    phase_seconds: dict[str, float] = field(default_factory=dict)
+    #: driver wall seconds per quantizer-fit sub-step
+    fit_seconds: dict[str, float] = field(default_factory=dict)
+
+    @contextmanager
+    def phase(self, spark, name: str):
+        """Time the block into ``phase_seconds[name]`` and tag every
+        Spark job it starts ``hier:<name>`` (the event log records it
+        under ``spark.job.tags``)."""
+        sc = spark.sparkContext
+        tag = f"hier:{name}"
+        sc.addJobTag(tag)
+        t0 = time.monotonic()
+        try:
+            yield
+        finally:
+            sc.removeJobTag(tag)
+            _lap(self.phase_seconds, name, t0)
+
+
 def embedding_near_dup_pairs_blocked(
     df: DataFrame,
     id_col: str,
@@ -417,6 +475,7 @@ def embedding_near_dup_pairs_celled(
     cache_key: str | None = None,
     max_replication: float | None = 32.0,
     guard_min_rows: int = 50_000,
+    stats: HierStats | None = None,
 ) -> DataFrame:
     """Exact-COMPLETE cosine pair search partitioned by k-means cells —
     the 100-TB form of :func:`embedding_near_dup_pairs` (SemDeDup-style
@@ -448,10 +507,13 @@ def embedding_near_dup_pairs_celled(
     threshold keep it near 1; a threshold so low that θ_t rivals the
     inter-centroid angles degenerates toward all-pairs, which is the
     honest cost of asking for *every* pair at that radius.
-    """
-    import math
 
+    ``stats`` (a :class:`HierStats`) receives the guard-measured
+    replication factor.
+    """
     from .relational import spread
+
+    stats = HierStats() if stats is None else stats
 
     # Zero-norm exclusion must precede the fit: l2_normalize inside the
     # quantizer divides by the norm (ANSI: divide-by-zero fails loudly).
@@ -502,7 +564,6 @@ def embedding_near_dup_pairs_celled(
         .where(ang_to <= F.lit(theta_t + eps) + F.col("__radius"))
         .select(F.col("__id").alias("__rid"), F.col("cell_id").alias("__rcell"))
     )
-    embedding_near_dup_pairs_celled.last_replication = None
     if max_replication is not None:
         n_rows = base.count()
         if n_rows >= guard_min_rows:
@@ -511,7 +572,7 @@ def embedding_near_dup_pairs_celled(
             # relation before the per-cell quadratic joins.
             rep, mean_rep = _guard_replication(
                 rep, n_rows, max_replication, threshold)
-            embedding_near_dup_pairs_celled.last_replication = mean_rep
+            stats.replication = mean_rep
     home = base.select(F.col("__id").alias("__hid"), F.col("__cell").alias("__hcell"))
     cands = (
         rep.join(home, (F.col("__rcell") == F.col("__hcell"))
@@ -561,18 +622,8 @@ def _guard_replication(rep: DataFrame, n_rows: int, max_replication: float,
     caches are id+f16 / corpus-sized respectively and evict LRU; a
     long-lived driver looping over MANY corpora should call
     ``spark.catalog.clearCache()`` between them (the probe and bench
-    harnesses do exactly this).
-
-    ``SPARK_GRAFT_GUARD_CACHE_LEVEL`` (probe A/B knob, r10 VERDICT
-    item 1): overrides the storage level — e.g. ``DISK_ONLY`` to
-    measure whether skipping the in-memory columnar build beats
-    MEMORY_AND_DISK's first-touch on a given host."""
-    level = os.environ.get("SPARK_GRAFT_GUARD_CACHE_LEVEL")
-    if level:
-        from pyspark import StorageLevel
-        rep = rep.persist(getattr(StorageLevel, level))
-    else:
-        rep = rep.cache()
+    harnesses do exactly this)."""
+    rep = rep.cache()
     mean_rep = rep.count() / float(n_rows)
     if mean_rep > max_replication:
         rep.unpersist()
@@ -590,26 +641,9 @@ def _guard_replication(rep: DataFrame, n_rows: int, max_replication: float,
     return rep, mean_rep
 
 
-#: Diagnostic twin of the hier attribute (see below).
-embedding_near_dup_pairs_celled.last_replication = None
-
-
 #: Memo for sample-fitted two-level quantizers, keyed like
 #: _KMEANS_MODEL_CACHE (evicted with its session's application id).
 _TWO_LEVEL_FIT_CACHE: dict[tuple, tuple] = {}
-
-#: Probe-only fit sub-step driver timings (seconds) from the most
-#: recent quantizer fit — same process-global introspection contract
-#: as ``last_stage_seconds``.  Cleared at each fit start.
-_FIT_TIMINGS: dict[str, float] = {}
-
-
-def _fit_mark(name: str, t0: float) -> float:
-    import time as _t
-
-    now = _t.monotonic()
-    _FIT_TIMINGS[name] = round(_FIT_TIMINGS.get(name, 0.0) + (now - t0), 3)
-    return now
 
 #: Driver-memory ceiling on the auto-scaled hier fit sample (rows).
 #: 1M rows × 64 dims × 8 B = 512 MB driver-side during the fit — the
@@ -619,51 +653,16 @@ def _fit_mark(name: str, t0: float) -> float:
 #: closures is then K·dim·8 ≈ 128 MB, the matching executor ceiling).
 FIT_SAMPLE_ROWS_CAP = 1 << 20
 
-#: Above this live-leaf count the hier path builds its per-home-leaf
-#: candidate LEAF lists through the branch layer (prune branches by
-#: angle(c0,β) ≤ θ_t+branch_R(β)+R0 first, score only admitted
-#: branches' leaves) instead of the direct chunked K×K angle matrix —
-#: both exact, the direct form is plain BLAS and wins while K²·dim
-#: stays in the tens-of-seconds driver range (2¹⁷ leaves ≈ 1.1e12
-#: flops ≈ 10 s threaded).
-CAND_BUILD_DIRECT_MAX_LEAVES = 1 << 17
-
-#: Driver/closure ceiling on the candidate-leaf-list CSR arrays
-#: (total int32 entries × 4 B).  Blowing past it means essentially
-#: every leaf can host every other leaf's partners — the all-pairs
-#: degeneracy — so the operator raises CoveringRadiusBlowupError
-#: BEFORE any executor pass instead of shipping a gigabyte closure
-#: (an even earlier trip than the replica-count guard).
-CAND_LISTS_MAX_BYTES = 1 << 30
-
-#: Replication-strategy cutover: up to this many branches pass 2 runs
-#: the tiered branch scan ('scan': wide-leaf dense GEMM + tight-branch
-#: prune); past it, the home-conditioned candidate-list scan ('cand',
-#: n-linear, no B term).  CAVEAT (r8, measured): the original
-#: crossover estimate (B ≈ 17k, from a GEMM-only kernel benchmark)
-#: ignored the leaf-filter share of the scan AND the cand path's
-#: per-home-group overhead, which explodes as K outgrows the flush
-#: size — at the x100 probe (B=3652, K=78k, 5M rows) 'cand' measured
-#: 577 s of replication + 129 s of Θ(K²) list build against the tiered
-#: scan's ~200 s.  The dispatch constant is therefore a conservative
-#: knob, not a measured optimum: past it the B-GEMM term Θ(n·B) is
-#: what's being traded away, and a >50M-row deployment should probe
-#: both strategies on its own data (replication_strategy= forces
-#: either; both produce the same replica relation, pinned bit-equal).
-REPLICATION_SCAN_MAX_BRANCHES = 8192
-
 #: Arrow-batch coalescing target for PASS 2 (replication) ONLY: the
 #: replicate map buffers input batches to ~this many rows before
-#: flushing one numpy block through the GEMM pipeline ('scan' streams
-#: chunked dense GEMMs — cache-oblivious — and 'cand' needs large
-#: batches so home groups amortize).  Pass 1 (home assignment)
-#: deliberately does NOT coalesce: its probe passes are gather-bound
-#: (per-super fancy-indexed row gathers), and a 64k flush's ~16 MB
-#: working set falls out of cache between passes — built and A/B'd in
-#: r9, assign_radii ran ~2× SLOWER at x10 AND x30 (see the negative-
-#: result note at ``assign_home``), so the revert is the measured
-#: choice, not an omission.  Per-row results are identical under any
-#: grouping; this is purely a batching constant.
+#: flushing one numpy block through the chunked GEMM scan.  Pass 1
+#: (home assignment) deliberately does NOT coalesce: its probe passes
+#: are gather-bound (per-super fancy-indexed row gathers), and a 64k
+#: flush's ~16 MB working set falls out of cache between passes —
+#: built and A/B'd in r9, assign_radii ran ~2× SLOWER at x10 AND x30
+#: (see the negative-result note at ``assign_home``), so the revert is
+#: the measured choice, not an omission.  Per-row results are
+#: identical under any grouping; this is purely a batching constant.
 COALESCE_ROWS = 1 << 16
 
 #: Per-task byte target for the hier tail's leaf exchange (guide §5 /
@@ -684,22 +683,6 @@ LEAF_PART_TARGET_BYTES = 128 << 20
 TAGGED_ROW_OVERHEAD_BYTES = 32
 
 
-def _guard_mode() -> str:
-    """Replication-guard strategy (r10 VERDICT item 1 A/B knob):
-
-    - ``'cache'``: cache + count the replica relation, tail reads the
-      cache (the r6-r9 form).
-    - ``'recount'``: count with a payload-free twin pass; the tail
-      recomputes pass 2 once, streaming straight into its leaf
-      exchange — no corpus×replication-sized cache is ever built.
-
-    Probe-measured default (see OPTIMIZATION_r10.md for the A/B);
-    ``SPARK_GRAFT_GUARD_MODE`` overrides either way.  Both modes
-    produce identical counts and identical pair outputs (the count
-    twin shares the full pass's admit computation)."""
-    return os.environ.get("SPARK_GRAFT_GUARD_MODE", "cache")
-
-
 def _tail_partition_floor(n_rows: int, mean_rep, dim: int,
                           shuffle_parts: int):
     """Partition count for the hier tail's leaf exchange, or ``None``
@@ -718,6 +701,52 @@ def _tail_partition_floor(n_rows: int, mean_rep, dim: int,
     bytes_tagged = rows_tagged * (dim * 2 + TAGGED_ROW_OVERHEAD_BYTES)
     floor_parts = -(-bytes_tagged // LEAF_PART_TARGET_BYTES)
     return int(floor_parts) if floor_parts > shuffle_parts else None
+
+
+def _branch_leaves(leaf_branch, n_b: int) -> list:
+    """Per-branch ascending leaf-index lists from one stable argsort +
+    searchsorted (r9): the per-branch ``nonzero`` form was Θ(B·K) —
+    ~2.9e8 comparisons at the x100 probe shape — for the same lists."""
+    import numpy as np
+
+    order = np.argsort(leaf_branch, kind="stable")
+    bounds = np.searchsorted(leaf_branch[order], np.arange(n_b + 1))
+    return [order[bounds[b]:bounds[b + 1]] for b in range(n_b)]
+
+
+def _cos_slack(dim: int) -> float:
+    """Over-admit slack for float32 cos-space comparisons of unit
+    vectors: 3× the float32 dot-error bound (dim·2⁻²⁴), floored."""
+    return max(1e-5, 1.2e-7 * dim)
+
+
+def _vecs(batch, dim: int):
+    """Arrow list<double> ``__v`` column -> dense (rows, dim) float64
+    matrix with no per-row Python objects."""
+    import numpy as _np
+
+    col = batch.column(batch.schema.get_field_index("__v"))
+    flat = col.combine_chunks() if hasattr(col, "combine_chunks") else col
+    return (flat.flatten().to_numpy(zero_copy_only=False)
+            .reshape(-1, dim).astype(_np.float64, copy=False))
+
+
+def _f16_list(xn, dim: int, rows=None):
+    """f16 bits of float64-normalized unit rows (gathered by ``rows``
+    when given) as an Arrow list<int16> column: one flat int16 buffer
+    + arithmetic offsets, zero per-row objects.  Both passes emit
+    through this, so a replica row carries the exact bits its home row
+    carries.  The gather runs on the 2-byte bits, after the cast."""
+    import numpy as _np
+    import pyarrow as _pa
+
+    bits = _np.ascontiguousarray(xn.astype(_np.float16)).view(_np.int16)
+    if rows is not None:
+        bits = bits[rows]
+    return _pa.ListArray.from_arrays(
+        _pa.array(_np.arange(0, (len(bits) + 1) * dim, dim,
+                             dtype=_np.int32), type=_pa.int32()),
+        _pa.array(bits.ravel(), type=_pa.int16()))
 
 
 def _lloyd_rounds(points, k: int, seed: int, iters: int = 8):
@@ -779,8 +808,8 @@ def _exact_home_prepare(bcenters, leaf_centers, leaf_branch):
     and three B-row transcendental tables — dominated the batch's
     actual GEMM work (measured: esc_cap 121 s of the 223 s x100 fit
     at HEAD, almost all per-batch setup).  ``leaves_of`` itself now
-    comes from one stable argsort + searchsorted (Θ(K log K)), same
-    ascending index lists as the nonzero form."""
+    comes from :func:`_branch_leaves` (Θ(K log K)), same ascending
+    index lists as the nonzero form."""
     import numpy as np
 
     n_b = len(bcenters)
@@ -791,9 +820,7 @@ def _exact_home_prepare(bcenters, leaf_centers, leaf_branch):
     np.maximum.at(off, leaf_branch, leaf_ang)
     has_leaf = off > -np.inf
     dead = np.nonzero(~has_leaf)[0]
-    order = np.argsort(leaf_branch, kind="stable")
-    bounds = np.searchsorted(leaf_branch[order], np.arange(n_b + 1))
-    leaves_of = [order[bounds[b]:bounds[b + 1]] for b in range(n_b)]
+    leaves_of = _branch_leaves(leaf_branch, n_b)
     bc32 = (bcenters / np.linalg.norm(bcenters, axis=1, keepdims=True)
             ).astype(np.float32)
     offc = np.where(has_leaf, off, 0.0)
@@ -970,8 +997,7 @@ def _esc_cap_max(spark, sample, bcenters, leaf_centers, leaf_branch,
         return float(_exact_home_angles(
             sample, bcenters, leaf_centers, leaf_branch).max())
     # the batch closure references _exact_home_angles BY MODULE
-    # REFERENCE (unlike the hier function's self-contained local
-    # closures), so workers must be able to import this package even
+    # REFERENCE, so workers must be able to import this package even
     # when the driver runs from an arbitrary cwd
     from ..session import ensure_package_shipped
 
@@ -982,7 +1008,6 @@ def _esc_cap_max(spark, sample, bcenters, leaf_centers, leaf_branch,
     _dim = dim
 
     def batch_max(it):
-        import numpy as _np
         import pyarrow as _pa
 
         bcv, lcv, lbv = bc.value
@@ -993,11 +1018,7 @@ def _esc_cap_max(spark, sample, bcenters, leaf_centers, leaf_branch,
         for batch in it:
             if not batch.num_rows:
                 continue
-            col = batch.column(0)
-            flat = (col.combine_chunks()
-                    if hasattr(col, "combine_chunks") else col)
-            mat = (flat.flatten().to_numpy(zero_copy_only=False)
-                   .reshape(-1, _dim).astype(_np.float64, copy=False))
+            mat = _vecs(batch, _dim)
             yield _pa.RecordBatch.from_arrays(
                 [_pa.array(
                     [float(_exact_home_angles(mat, bcv, lcv, lbv,
@@ -1039,7 +1060,8 @@ def _sample_vectors(df, frac: float, seed: int, dim: int):
             .reshape(-1, dim).astype(np.float64))
 
 
-def _fit_two_level(sample_mat, k_leaf: int, n_branches: int, seed: int):
+def _fit_two_level(sample_mat, k_leaf: int, n_branches: int, seed: int,
+                   fit_seconds: dict[str, float] | None = None):
     """Two-level quantizer fit on a bounded sample: branches first, then
     per-branch leaves sized proportionally to branch population — the
     fit cost is Θ(sample · (B + K/B) · dim · iters) regardless of corpus
@@ -1055,19 +1077,19 @@ def _fit_two_level(sample_mat, k_leaf: int, n_branches: int, seed: int):
     well below the full sample.  The full sample is then assigned to
     the fitted branch centers in one chunked pass (the Lloyd
     assignment step, once instead of ×8) so per-branch leaf fits keep
-    the complete sample and the ≥4-points-per-leaf contract."""
-    import time as _time
-
+    the complete sample and the ≥4-points-per-leaf contract.
+    ``fit_seconds`` receives the driver seconds of each sub-step."""
     import numpy as np
 
-    _ft = _time.monotonic()
+    fs = {} if fit_seconds is None else fit_seconds
+    t = time.monotonic()
     b_rows = max(8 * n_branches, 1 << 16)
     if len(sample_mat) > b_rows:
         keep = np.random.default_rng(seed + 13).choice(
             len(sample_mat), size=b_rows, replace=False)
         bcenters, _ = _lloyd_rounds(
             sample_mat[np.sort(keep)], n_branches, seed)
-        _ft = _fit_mark("branch_lloyd", _ft)
+        t = _lap(fs, "branch_lloyd", t)
         pts = sample_mat / np.linalg.norm(
             sample_mat, axis=1, keepdims=True)
         bassign = np.empty(len(pts), dtype=np.int64)
@@ -1075,10 +1097,10 @@ def _fit_two_level(sample_mat, k_leaf: int, n_branches: int, seed: int):
         for lo in range(0, len(pts), chunk):
             bassign[lo:lo + chunk] = (
                 pts[lo:lo + chunk] @ bcenters.T).argmax(axis=1)
-        _ft = _fit_mark("branch_assign", _ft)
+        t = _lap(fs, "branch_assign", t)
     else:
         bcenters, bassign = _lloyd_rounds(sample_mat, n_branches, seed)
-        _ft = _fit_mark("branch_lloyd", _ft)
+        t = _lap(fs, "branch_lloyd", t)
     leaf_centers, leaf_branch = [], []
     n = len(sample_mat)
     # one stable sort + O(1) slices instead of a full boolean mask scan
@@ -1099,7 +1121,7 @@ def _fit_two_level(sample_mat, k_leaf: int, n_branches: int, seed: int):
         for c in cs:
             leaf_centers.append(c)
             leaf_branch.append(b)
-    _fit_mark("leaf_fits", _ft)
+    _lap(fs, "leaf_fits", t)
     return (
         np.asarray(bcenters),
         np.asarray(leaf_centers),
@@ -1108,7 +1130,8 @@ def _fit_two_level(sample_mat, k_leaf: int, n_branches: int, seed: int):
 
 
 def _fit_two_level_distributed(base, n_rows: int, leaf_target: int,
-                               fit_sample_rows: int, seed: int, dim: int):
+                               fit_sample_rows: int, seed: int, dim: int,
+                               fit_seconds: dict[str, float] | None = None):
     """Two-STAGE quantizer fit that lifts the FIT_SAMPLE_ROWS_CAP
     driver ceiling (r7 verdict item 1): the driver-side fit needs ≥4
     sample rows per leaf, so past ~16M-row corpora (4·n/leaf_target >
@@ -1146,11 +1169,9 @@ def _fit_two_level_distributed(base, n_rows: int, leaf_target: int,
     themselves (K·dim·8 B driver + task-closure metadata — 512 MB at
     K=1M ≈ a 64M-row corpus at the default leaf_target; float32
     shipping and per-super center sharding are the next two doublings,
-    documented in SCALE.md)."""
-    import time as _time
-
+    documented in SCALE.md).  ``fit_seconds`` receives the driver
+    seconds of each sub-step."""
     import numpy as np
-    import pyarrow as pa
 
     from ..session import ensure_package_shipped
 
@@ -1163,10 +1184,10 @@ def _fit_two_level_distributed(base, n_rows: int, leaf_target: int,
     a_rows = min(max(fit_sample_rows, 4 * n_branches),
                  FIT_SAMPLE_ROWS_CAP)
     frac = min(1.0, 1.05 * a_rows / n_rows)
-    _FIT_TIMINGS.clear()
-    _ft = _time.monotonic()
+    fs = {} if fit_seconds is None else fit_seconds
+    t = time.monotonic()
     sample = _sample_vectors(base, frac, seed, dim)
-    _ft = _fit_mark("sample_collect", _ft)
+    t = _lap(fs, "sample_collect", t)
     if len(sample) > a_rows:
         keep = np.random.default_rng(seed).choice(
             len(sample), size=a_rows, replace=False)
@@ -1183,7 +1204,7 @@ def _fit_two_level_distributed(base, n_rows: int, leaf_target: int,
                                     n_branches, seed)
     else:
         bcenters, _ = _lloyd_rounds(sample, n_branches, seed)
-    _ft = _fit_mark("branch_lloyd", _ft)
+    t = _lap(fs, "branch_lloyd", t)
     bc32 = (bcenters / np.linalg.norm(bcenters, axis=1, keepdims=True)
             ).astype(np.float32)
 
@@ -1200,16 +1221,13 @@ def _fit_two_level_distributed(base, n_rows: int, leaf_target: int,
         for batch in it:
             if not batch.num_rows:
                 continue
-            col = batch.column(batch.schema.get_field_index("__v"))
-            flat = (col.combine_chunks()
-                    if hasattr(col, "combine_chunks") else col)
-            x = (flat.flatten().to_numpy(zero_copy_only=False)
-                 .reshape(-1, dim).astype(_np.float64, copy=False))
+            x = _vecs(batch, dim)
             xn32 = (x / _np.linalg.norm(x, axis=1, keepdims=True)
                     ).astype(_np.float32)
             b = (xn32 @ bc32.T).argmax(axis=1).astype(_np.int32)
             yield _pa.RecordBatch.from_arrays(
-                [_pa.array(b, type=_pa.int32()), col],
+                [_pa.array(b, type=_pa.int32()),
+                 batch.column(batch.schema.get_field_index("__v"))],
                 names=["__b", "__v"])
 
     leaf_schema = T.StructType([
@@ -1245,240 +1263,31 @@ def _fit_two_level_distributed(base, n_rows: int, leaf_target: int,
     leaf_centers = np.array([r["__c"] for r in leaf_rows],
                             dtype=np.float64)
     leaf_branch = np.array([r["__b"] for r in leaf_rows], dtype=np.int64)
-    _ft = _fit_mark("dist_leaf_fit", _ft)
+    t = _lap(fs, "dist_leaf_fit", t)
     esc_cap = _esc_cap_max(base.sparkSession, sample, bcenters,
                            leaf_centers, leaf_branch,
                            base=base, frac=frac, seed=seed,
                            dim=dim, n_rows=n_rows) + 0.05
-    _fit_mark("esc_cap", _ft)
+    _lap(fs, "esc_cap", t)
     return np.asarray(bcenters), leaf_centers, leaf_branch, esc_cap
 
 
-def embedding_near_dup_pairs_hier(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-    dim: int = 64,
-    leaf_target: int = 64,
-    seed: int = 42,
-    fit_sample_rows: int = 32768,
-    cache_key: str | None = None,
-    home_probes: int = 8,
-    max_replication: float | None = 32.0,
-    guard_min_rows: int = 50_000,
-    replication_strategy: str = "auto",
-    fit_mode: str = "auto",
-) -> DataFrame:
-    """Exact-COMPLETE cosine pair search with a THREE-LEVEL quantizer
-    (supers → branches → leaves) — the 100-TB form.  Same
-    covering-radius completeness argument as
-    :func:`embedding_near_dup_pairs_celled`, lifted level by level:
-    with ``branch_R(β) = max over leaves c∈β of (angle(β,c) + R_c)``,
-    any qualifying partner ``a`` of a point ``b`` home in leaf ``c`` of
-    branch ``β`` satisfies ``angle(a, β) ≤ angle(a,c) + angle(c,β) ≤
-    (θ_t + R_c) + angle(c,β) ≤ θ_t + branch_R(β)`` — so pruning
-    branches first loses nothing, and the leaf filter ``angle(a, c) ≤
-    θ_t + R_c`` finishes exactly as in the flat form.  The identical
-    step applies once more at the super level with ``super_R(σ) = max
-    over branches β∈σ of (angle(σ,β) + branch_R(β))``.  The argument
-    never depends on HOW homes were chosen, only that ``R_c`` is the
-    max home-member angle — so a vectorized assignment is safe.  Every
-    candidate is re-verified with the exact unrolled cosine expression,
-    so the output is bit-identical to brute force.
-
-    HOME assignment searches the ``home_probes`` best branches found
-    through the top-``home_probes`` supers, not just the top one —
-    then RE-HOMES every point whose achieved home angle exceeds a
-    fit-derived absolute cap through an exact branch scan.
-    Completeness never depends on any of this (above), but
-    covering-radius QUALITY does, catastrophically, at both levels: a
-    point whose single nearest branch holds no leaf near it gets
-    force-homed ~90° away (r6: top-1 homes → mean replication 210, a
-    ~55 GB shuffle; top-8 → 9), and a point whose home super wasn't
-    among the probed ones fails the same way one level up (measured:
-    super-only preselection → replication 13.5/23.4/110/2145 at
-    x1/x3/x10/x30, each caught by the runtime guard below).  The cap
-    is the max exact-scan home angle of the FIT SAMPLE plus 3° — the
-    data's own home-angle ceiling — so no non-escalated point can sit
-    above it and the per-leaf radius max is immune to the miss RATE
-    (a quantile-based escalation is not: with K sample-capped, leaf
-    populations grow with n and any constant miss rate eventually
-    poisons every leaf's max — measured at x30, 5.17% misses → p50
-    radius 68° despite 2%-quantile escalation).  Assignment totals
-    Θ(n·(S + P·B/S + P·K/B + miss_rate·B)) flops — every term Θ(K^⅓)
-    except the measured-small escalation term, whose worst case
-    (structureless data, 100% escalation) degrades to the exact scan,
-    never below it.
-
-    Why three levels (the inverted-multi-index shape; Babenko &
-    Lempitsky 2012): the flat form scores every row against every cell
-    — Θ(n·K) with K ∝ n is a hidden quadratic — and the per-leaf pair
-    matmul needs SMALL cells (``leaf_target`` rows) to keep the
-    candidate surface ≈ n·leaf_target·replication.  Small cells mean
-    large K.  A two-level assignment costs Θ(n·(B + P·K/B)), minimized
-    at B ∝ √K — still a Θ(n·√K) term, which r6 measured as the one
-    remaining scale ceiling.  Balancing THREE levels (``S`` supers over
-    ``B`` branches over ``K`` leaves, B ∝ K^⅔, S ∝ √(P·B) ∝ K^⅓)
-    makes every ASSIGNMENT term — super scan, probed-branch scan,
-    probed-leaf scan — Θ(K^⅓), plus the bounded 2%·B escalation term.
-    The supers are fit driver-side over the BRANCH CENTERS (B points,
-    milliseconds), so the bounded-sample fit contract is unchanged;
-    below 24 branches the super level is skipped (the scan is already
-    trivial and the extra indirection would only add overhead).
-
-    The REPLICATION pass (r7 verdict item 2, closed in r8): r7
-    carried a Θ(B)-per-row complete branch-center scan — with
-    B ∝ K^⅔ and K ∝ n that term is Θ(n^{5/3}), the last superlinear
-    term on this path — because the super-level covering bound
-    composes additively (super spread + branch radius) past 90° on
-    high-dim data and admits every super.  The fix conditions on the
-    HOME leaf: for a point x home in leaf c0 with covering radius R0,
-    any leaf c that x must replicate to (``angle(x,c) ≤ θ_t + R_c``)
-    satisfies ``angle(c0,c) ≤ angle(c0,x) + angle(x,c) ≤ R0 + θ_t +
-    R_c`` — so the per-home-leaf candidate LEAF list built from that
-    inequality is a SOUND SUPERSET of every replica target any member
-    of c0 can have: restricting pass 2 to it never changes the
-    replica relation.  Conditioning at the LEAF level is essential:
-    the same inequality through BRANCH radii was built and measured
-    first (r8) and its ~45° radii put the cutoff inside the high-dim
-    angle concentration — mean list size 37% of all branches, no
-    asymptotic gain — while leaf radii (~20°) yield mean 41 of 7 858
-    live leaves at x10 (0.5%, output-sized).  The lists are
-    driver-built metadata (chunked K×K BLAS below
-    CAND_BUILD_DIRECT_MAX_LEAVES, else pruned through the branch
-    layer; Θ(K²·dim) worst case, n-INDEPENDENT, embarrassingly
-    parallel), and per-row pass-2 cost becomes Θ(assignment recompute
-    + |cand(home)|·dim): no Θ(B), no Θ(S), no per-entry arccos —
-    n-linear at fixed leaf_target.  Pass 2 RECOMPUTES the home
-    assignment (same closure, same float32 path, bit-deterministic
-    per row) instead of joining pass 1's relation back on — the
-    recompute is Θ(K^⅓) flops per row while the join would shuffle
-    the full vector payload a second time; soundness of the
-    candidate-list restriction needs pass-2 homes to EQUAL pass-1
-    homes, which sharing the literal function guarantees.  BUT the
-    constants matter: in cos-space float32 the flat n×B branch scan
-    is pure GEMM and beats the gather/group-bound candidate path by
-    ~14× at probe-range B (kernel-measured crossover ≈ 17k branches ≈
-    a 50M-row corpus), so ``replication_strategy="auto"`` scans flat
-    below REPLICATION_SCAN_MAX_BRANCHES and conditions on the home
-    past it — the superlinear term is DISPATCHED away exactly where
-    it would start to matter, and both strategies produce the same
-    replica relation (pinned bit-equal in tests).
-
-    Execution shape (measured on the x1 probe corpus; see
-    tools/embpairs_probe.py): assignment and replication are
-    ``mapInArrow`` passes emitting rows of ids + the f16 nomination
-    vector — Arrow list columns flatten to a dense (rows × dim) matrix
-    with zero per-row Python objects, and the angle math is one numpy
-    matmul per batch (the blocked path's candidates-only contract:
-    numpy decides what gets VERIFIED, never a final value).  Shipping
-    the f16 bits from the passes themselves (r9) removed the r6-r8
-    vector-attach hash join (and the even earlier form that shipped
-    vectors through pandas passes as object arrays — 42 of the path's
-    82 seconds at x1): the tagged relation is now a plain union that
-    flows into ONE hash exchange on ``leaf_id``.  In-leaf candidate
-    nomination is a per-shuffle-partition numpy argsort/split by leaf
-    plus a replicas·homesᵀ matmul per leaf at ``threshold − margin``
-    (``repartition + mapInArrow`` — no post-exchange row sort, no
-    per-leaf Python call); survivors (an output-sized relation) get
-    the exact expression.  The quantizer (≤ K·dim doubles) is
-    driver-held metadata shipped in task closures; the corpus never
-    leaves executors.
-
-    Full-corpus passes are all linear in n at fixed ``leaf_target``
-    (per-row factors: K^⅓ assignment after the three-level balance,
-    the home-conditioned candidate-list scan in replication):
-    Arrow assignment, Arrow replication, one groupBy over K radius
-    rows, the one leaf-keyed exchange of the tagged relation
-    (replication-factor × corpus volume in f16), the leaf-grain
-    matmul, and exact verification of ~output-sized candidates.  The replication factor is the honest data-dependence:
-    tight content clusters keep it small; uniform high-dim noise makes
-    covering radii rival θ_t and degenerates toward all-pairs — the
-    unavoidable cost of EXACT completeness on structureless data (the
-    approximate alternatives are the SemDeDup/ANN paths).
-
-    RUNTIME GUARD (r6 verdict item 2): once ``n ≥ guard_min_rows`` the
-    replica relation — already materialized before the expensive pair
-    matmul — is counted, and a mean replication factor above
-    ``max_replication`` raises :class:`CoveringRadiusBlowupError`
-    naming the approximate alternatives instead of silently shuffling
-    a quadratic candidate surface (the r6 disk-filling incidents were
-    exactly this, caught only by a human reading ``df -h``).  Clustered
-    corpora measure ~9–12 (tools/embpairs_probe.py); structureless
-    ones measure ≈ the live-leaf count.  The measured factor is
-    exposed as ``embedding_near_dup_pairs_hier.last_replication``.
-    """
-    import math
-    import time as _time
-
+def _hier_fit(base, n_rows: int, *, leaf_target: int, seed: int,
+              fit_sample_rows: int, cache_key, fit_mode: str, dim: int,
+              stats: HierStats):
+    """Hier phase 1: the bounded-sample quantizer fit, memoized per
+    corpus snapshot.  Returns ``(bcenters, leaf_centers, leaf_branch,
+    esc_cap)``."""
     import numpy as np
 
-    from .relational import spread
-
-    _stage_t: dict[str, float] = {}
-    _t0 = _time.monotonic()
-
-    def _mark(name: str) -> None:
-        nonlocal _t0
-        now = _time.monotonic()
-        _stage_t[name] = round(now - _t0, 3)
-        _t0 = now
-
-    embedding_near_dup_pairs_hier.last_stage_seconds = _stage_t
-    spark = df.sparkSession
-    id_field = df.select(F.col(id_col).alias("__id")).schema[0]
-    # spread() BEFORE the cache: a single-file corpus reads as a
-    # handful of scan partitions (768 MB -> 6 at x30), and base feeds
-    # four full numpy/Arrow passes — under-partitioned, they serialize
-    # onto 6 of 32 cores (measured: the home+replicate passes alone
-    # ~150 s of the 248 s x30 wall before this line).
-    base = (
-        spread(df).select(
-            F.col(id_col).alias("__id"),
-            as_double_vec(F.col(vec_col)).alias("__v"),
-        )
-        .withColumn("__n2", F.expr(dot_sql("__v", "__v", dim)))
-        # Zero-norm rows: cosine undefined, can never qualify (NaN >= t
-        # is false; ANSI division would fail loudly) — and one of them
-        # would poison its home leaf's covering radius.  See
-        # embedding_near_dup_pairs.
-        .where(F.col("__n2") > 0)
-    )
-    # Probe A/B knob (r10 VERDICT item 6): scan-cache storage level —
-    # e.g. DISK_ONLY to measure whether skipping the in-memory columnar
-    # build wins on hosts where first-touch dominates, or NONE to
-    # measure recompute-from-parquet.  Default unchanged (MEMORY_AND_
-    # DISK via .cache()).
-    _scl = os.environ.get("SPARK_GRAFT_SCAN_CACHE_LEVEL")
-    if _scl == "NONE":
-        pass
-    elif _scl:
-        from pyspark import StorageLevel
-        base = base.persist(getattr(StorageLevel, _scl))
-    else:
-        base = base.cache()
-    n_rows = base.count()
-    _mark("scan_cache")
-    if n_rows == 0:
-        return base.select(
-            F.col("__id").alias("id_a"),
-            F.col("__id").alias("id_b"),
-            F.lit(0.0).alias("cosine"),
-        ).where(F.lit(False))
-
-    # --- bounded-sample two-level fit (memoized per corpus snapshot) ---
-    if fit_mode not in ("auto", "driver", "distributed"):
-        raise ValueError(f"fit_mode={fit_mode!r}: expected "
-                         "'auto', 'driver', or 'distributed'")
+    spark = base.sparkSession
     # auto: go distributed exactly where the driver fit's sample cap
     # would otherwise stop K from tracking n/leaf_target (the ~16M-row
     # ceiling; see _fit_two_level_distributed)
     want_rows = max(fit_sample_rows, 4 * max(1, n_rows // leaf_target))
     use_dist = fit_mode == "distributed" or (
         fit_mode == "auto" and want_rows > FIT_SAMPLE_ROWS_CAP)
-    embedding_near_dup_pairs_hier.last_fit_mode = (
-        "distributed" if use_dist else "driver")
+    stats.fit_mode = "distributed" if use_dist else "driver"
     app = spark.sparkContext.applicationId
     memo_key = None
     if cache_key is not None:
@@ -1489,100 +1298,99 @@ def embedding_near_dup_pairs_hier(
     fit = _TWO_LEVEL_FIT_CACHE.get(memo_key) if memo_key else None
     if fit is None and use_dist:
         fit = _fit_two_level_distributed(
-            base, n_rows, leaf_target, fit_sample_rows, seed, dim)
+            base, n_rows, leaf_target, fit_sample_rows, seed, dim,
+            fit_seconds=stats.fit_seconds)
         if len(fit[1]) == 0:
             # stage-B Bernoulli sample came back empty (only possible
             # on tiny corpora): the bounded driver fit is exact there
             fit = None
-            use_dist = False
-            embedding_near_dup_pairs_hier.last_fit_mode = "driver"
+            stats.fit_mode = "driver"
         elif memo_key is not None:
             _TWO_LEVEL_FIT_CACHE[memo_key] = fit
-    if fit is None:
-        # Bernoulli sample, NO .limit(): limit keeps the FIRST rows in
-        # file order, so on a corpus written in content-cluster order it
-        # silently excludes the tail clusters from the fit — their
-        # points then home ~90° away, poison those leaves' covering
-        # radii, and the replication pass degenerates toward all-pairs
-        # (measured on the 500k probe corpus: the last 24 of 500
-        # clusters unsampled -> mean replication 210, a ~55 GB shuffle).
-        # The expected sample size is 1.05·the effective cap (±3σ ≈
-        # ±600 at these caps); the exact cap is enforced by a seeded
-        # driver-side downsample, which stays uniform.
-        #
-        # The cap AUTO-SCALES with the corpus: k_leaf below needs ≥4
-        # sample points per leaf, so a fixed sample silently caps K —
-        # and with K capped, leaf POPULATIONS grow ∝ n and the in-leaf
-        # pair matmul grows ∝ n²/K (measured: the x30 probe leg ran
-        # e(x10→x30)=1.37 with K stuck at 8192 and 183-row leaves,
-        # vs ≤1.0 everywhere K tracked n/leaf_target).  The
-        # FIT_SAMPLE_ROWS_CAP ceiling bounds driver memory; past it
-        # the quadratic-leaf regime honestly resumes (constant note).
-        eff_rows = min(
-            max(fit_sample_rows, 4 * max(1, n_rows // leaf_target)),
-            FIT_SAMPLE_ROWS_CAP)
-        frac = min(1.0, 1.05 * eff_rows / n_rows)
-        _FIT_TIMINGS.clear()
-        _ft0 = _time.monotonic()
-        sample = _sample_vectors(base, frac, seed, dim)
-        _ft0 = _fit_mark("sample_collect", _ft0)
-        if len(sample) > eff_rows:
-            keep = np.random.default_rng(seed).choice(
-                len(sample), size=eff_rows, replace=False)
-            sample = sample[np.sort(keep)]
-        k_leaf = max(4, min(n_rows // leaf_target, len(sample) // 4))
-        # 2·K^⅔ branches: the three-level balance (see docstring) wants
-        # B ∝ K^⅔ so leaves-per-branch is Θ(K^⅓); the constant keeps
-        # branch covering radii at least as tight as r6's measured-best
-        # 8·√K sizing at the probe scales where that was tuned (K≈7800:
-        # 2K^⅔=790 vs 8√K=707 — branch-radius p50 stays ~45°, the
-        # cluster band width) and GROWS past it for K > 4096, which
-        # only improves the prune now that the super level absorbs the
-        # branch-scan cost.  The r6 measurement that drove 8√K —
-        # radii p50 94°→45° and 40× fewer leaf-filter dots as B rose —
-        # is the same physics; only the scan-cost tradeoff moved.
-        n_branches = max(
-            2, min(k_leaf, round(2.0 * k_leaf ** (2.0 / 3.0))))
-        two_level = _fit_two_level(sample, k_leaf, n_branches, seed)
-        # ESCALATION CAP: exact-home the (already in-memory) sample
-        # over ALL leaves (_exact_home_angles' full-leaf minimum, which
-        # LOWER-bounds what the executor's top-P branch rescan can
-        # achieve — see its docstring); its max + 3° is the data's
-        # natural home-angle ceiling.  Any corpus point the approximate
-        # super preselection homes ABOVE this cap gets re-homed by the
-        # exact top-P branch scan.  Because the cap lower-bounds the
-        # rescan, a rescanned point's achieved angle can still sit
-        # somewhat above it — the guarantee is that misses trigger the
-        # rescan (cost), not a hard radius bound; quality never depends
-        # on the rescan landing under the cap, and completeness never
-        # depends on home choice at all (ADVICE r7 wording fix).  A
-        # quantile-based cap cannot give this guarantee: once K is
-        # sample-capped, leaf POPULATIONS grow with n and the per-leaf
-        # radius is a max over ever more draws, so ANY constant miss
-        # rate poisons essentially every leaf (measured at x30: 5.17%
-        # misses → p50 radius 68° → replication 2145 vs the exact
-        # scan's 3.8; with the absolute cap the radii match the exact
-        # scan at every probe scale).
-        _ft0 = _time.monotonic()
-        esc_cap = _esc_cap_max(spark, sample, *two_level,
-                               base=base, frac=frac, seed=seed,
-                               dim=dim, n_rows=n_rows) + 0.05
-        _fit_mark("esc_cap", _ft0)
-        fit = (*two_level, esc_cap)
-        if memo_key is not None:
-            _TWO_LEVEL_FIT_CACHE[memo_key] = fit
-    _mark("fit")
+    if fit is not None:
+        return fit
+    # Bernoulli sample, NO .limit(): limit keeps the FIRST rows in
+    # file order, so on a corpus written in content-cluster order it
+    # silently excludes the tail clusters from the fit — their
+    # points then home ~90° away, poison those leaves' covering
+    # radii, and the replication pass degenerates toward all-pairs
+    # (measured on the 500k probe corpus: the last 24 of 500
+    # clusters unsampled -> mean replication 210, a ~55 GB shuffle).
+    # The expected sample size is 1.05·the effective cap (±3σ ≈
+    # ±600 at these caps); the exact cap is enforced by a seeded
+    # driver-side downsample, which stays uniform.
+    #
+    # The cap AUTO-SCALES with the corpus: k_leaf below needs ≥4
+    # sample points per leaf, so a fixed sample silently caps K —
+    # and with K capped, leaf POPULATIONS grow ∝ n and the in-leaf
+    # pair matmul grows ∝ n²/K (measured: the x30 probe leg ran
+    # e(x10→x30)=1.37 with K stuck at 8192 and 183-row leaves,
+    # vs ≤1.0 everywhere K tracked n/leaf_target).  The
+    # FIT_SAMPLE_ROWS_CAP ceiling bounds driver memory; past it
+    # the quadratic-leaf regime honestly resumes (constant note).
+    eff_rows = min(want_rows, FIT_SAMPLE_ROWS_CAP)
+    frac = min(1.0, 1.05 * eff_rows / n_rows)
+    t = time.monotonic()
+    sample = _sample_vectors(base, frac, seed, dim)
+    _lap(stats.fit_seconds, "sample_collect", t)
+    if len(sample) > eff_rows:
+        keep = np.random.default_rng(seed).choice(
+            len(sample), size=eff_rows, replace=False)
+        sample = sample[np.sort(keep)]
+    k_leaf = max(4, min(n_rows // leaf_target, len(sample) // 4))
+    # 2·K^⅔ branches: the three-level balance (see docstring) wants
+    # B ∝ K^⅔ so leaves-per-branch is Θ(K^⅓); the constant keeps
+    # branch covering radii at least as tight as r6's measured-best
+    # 8·√K sizing at the probe scales where that was tuned (K≈7800:
+    # 2K^⅔=790 vs 8√K=707 — branch-radius p50 stays ~45°, the
+    # cluster band width) and GROWS past it for K > 4096, which
+    # only improves the prune now that the super level absorbs the
+    # branch-scan cost.  The r6 measurement that drove 8√K —
+    # radii p50 94°→45° and 40× fewer leaf-filter dots as B rose —
+    # is the same physics; only the scan-cost tradeoff moved.
+    n_branches = max(2, min(k_leaf, round(2.0 * k_leaf ** (2.0 / 3.0))))
+    two_level = _fit_two_level(sample, k_leaf, n_branches, seed,
+                               fit_seconds=stats.fit_seconds)
+    # ESCALATION CAP: exact-home the (already in-memory) sample
+    # over ALL leaves (_exact_home_angles' full-leaf minimum, which
+    # LOWER-bounds what the executor's top-P branch rescan can
+    # achieve — see its docstring); its max + 3° is the data's
+    # natural home-angle ceiling.  Any corpus point the approximate
+    # super preselection homes ABOVE this cap gets re-homed by the
+    # exact top-P branch scan.  Because the cap lower-bounds the
+    # rescan, a rescanned point's achieved angle can still sit
+    # somewhat above it — the guarantee is that misses trigger the
+    # rescan (cost), not a hard radius bound; quality never depends
+    # on the rescan landing under the cap, and completeness never
+    # depends on home choice at all (ADVICE r7 wording fix).  A
+    # quantile-based cap cannot give this guarantee: once K is
+    # sample-capped, leaf POPULATIONS grow with n and the per-leaf
+    # radius is a max over ever more draws, so ANY constant miss
+    # rate poisons essentially every leaf (measured at x30: 5.17%
+    # misses → p50 radius 68° → replication 2145 vs the exact
+    # scan's 3.8; with the absolute cap the radii match the exact
+    # scan at every probe scale).
+    t = time.monotonic()
+    esc_cap = _esc_cap_max(spark, sample, *two_level,
+                           base=base, frac=frac, seed=seed,
+                           dim=dim, n_rows=n_rows) + 0.05
+    _lap(stats.fit_seconds, "esc_cap", t)
+    fit = (*two_level, esc_cap)
+    if memo_key is not None:
+        _TWO_LEVEL_FIT_CACHE[memo_key] = fit
+    return fit
+
+
+def _hier_assign(base, fit, id_type, *, dim: int, home_probes: int,
+                 seed: int, stats: HierStats):
+    """Hier phase 2: pass-1 HOME assignment and the per-leaf covering
+    radii.  Returns the cached home relation ``(__id, leaf_id, __hang,
+    __vh)`` and the radius array (NaN for leaves no point homes in)."""
+    import numpy as np
+
     bcenters, leaf_centers, leaf_branch, esc_cap = fit
-    embedding_near_dup_pairs_hier.last_k = len(leaf_centers)
     n_b = len(bcenters)
-    # per-branch leaf index lists via one stable argsort + searchsorted
-    # (r9): the per-branch nonzero form was Θ(B·K) — ~2.9e8 comparisons
-    # at the x100 probe shape — for the same ascending lists.
-    _lb_order = np.argsort(leaf_branch, kind="stable")
-    _lb_bounds = np.searchsorted(leaf_branch[_lb_order],
-                                 np.arange(n_b + 1))
-    leaves_of = [_lb_order[_lb_bounds[b]:_lb_bounds[b + 1]]
-                 for b in range(n_b)]
+    leaves_of = _branch_leaves(leaf_branch, n_b)
     # --- third level: supers clustered over the BRANCH CENTERS (B
     # points, driver-side, milliseconds — recomputed per call, so the
     # memoized two-level fit tuple is unchanged).  S = √(P·B) minimizes
@@ -1597,9 +1405,7 @@ def embedding_near_dup_pairs_hier(
         scenters, s_of_b = _lloyd_rounds(bcenters, n_s, seed + 104729)
         n_s = len(scenters)
         branches_of_super = [np.nonzero(s_of_b == s)[0] for s in range(n_s)]
-    embedding_near_dup_pairs_hier.last_levels = 3 if scenters is not None else 2
-    theta_t = math.acos(max(-1.0, min(1.0, threshold)))
-    eps = 1e-6  # float-acos slack; over-assignment is verified away
+    stats.levels = 3 if scenters is not None else 2
     # Executor-side comparisons run in COSINE space on FLOAT32 center
     # matrices (r8): the r7 passes spent a large share of their wall on
     # arccos over n×B / n×K similarity blocks — a transcendental per
@@ -1613,24 +1419,10 @@ def embedding_near_dup_pairs_hier(
     # UPWARD (cos − slack before the one per-ROW arccos) so covering
     # radii can only over-measure.  Over-admission is verified away by
     # the exact float64 expression; angles stay driver-side metadata.
-    cos_slack = max(1e-5, 1.2e-7 * dim)
+    cos_slack = _cos_slack(dim)
     bc32 = bcenters.astype(np.float32)
     lc32 = leaf_centers.astype(np.float32)
     sc32 = scenters.astype(np.float32) if scenters is not None else None
-
-    def _vecs(batch):
-        """Arrow list<double> column -> dense (rows, dim) float64 matrix
-        with no per-row Python objects."""
-        import numpy as _np
-
-        col = batch.column(batch.schema.get_field_index("__v"))
-        flat = col.combine_chunks() if hasattr(col, "combine_chunks") else col
-        return flat.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim).astype(_np.float64, copy=False)
-
-    def _angles(block, centers):
-        import numpy as _np
-
-        return _np.arccos(_np.clip(block @ centers.T, -1.0, 1.0))
 
     # --- pass 1: hierarchical HOME assignment (id -> leaf, home angle,
     # f16 nomination vector) — one Arrow map, Θ(n·(B + K/B)) flops.
@@ -1646,7 +1438,7 @@ def embedding_near_dup_pairs_hier(
     # on the tail.  Nomination tolerates the rounding: margin note at
     # the tail.
     home_schema = T.StructType([
-        T.StructField("__id", id_field.dataType),
+        T.StructField("__id", id_type),
         T.StructField("leaf_id", T.IntegerType()),
         T.StructField("__hang", T.DoubleType()),
         T.StructField("__vh", T.ArrayType(T.ShortType())),
@@ -1733,13 +1525,7 @@ def embedding_near_dup_pairs_hier(
 
     def _home_batch(xn32):
         """Per-row home (leaf id, home similarity) for a unit-row
-        float32 matrix — the ONE assignment procedure, shared by pass 1
-        (which defines the covering radii) and pass 2 (whose
-        candidate-list pruning is sound only against the SAME homes;
-        recomputing through the same floats in the same function is
-        bit-deterministic per row and costs Θ(K^⅓) flops instead of
-        re-shuffling the vector payload to join pass 1's relation
-        back on)."""
+        float32 matrix."""
         import numpy as _np
 
         # candidate branches per row (see docstring: home QUALITY
@@ -1794,16 +1580,15 @@ def embedding_near_dup_pairs_hier(
         # _top_branches are gather-bound (xn32[rows] fancy-indexing per
         # probed super/branch group); a ~10k-row batch's 2.5 MB f32
         # working set stays cache-resident across those passes, a 64k
-        # flush's 16 MB does not.  Pass 2 still coalesces: its 'scan'
-        # strategy is chunked dense GEMM (streams regardless) and
-        # 'cand' NEEDS big batches for home-group sizes.
+        # flush's 16 MB does not.  Pass 2 still coalesces: its scan is
+        # chunked dense GEMM, which streams regardless.
         import numpy as _np
         import pyarrow as _pa
 
         for batch in it:
             if not batch.num_rows:
                 continue
-            x = _vecs(batch)
+            x = _vecs(batch, dim)
             xn = x / _np.linalg.norm(x, axis=1, keepdims=True)
             leaf, hsim = _home_batch(xn.astype(_np.float32))
             # ONE arccos per ROW (not per similarity entry), slacked so
@@ -1811,19 +1596,11 @@ def embedding_near_dup_pairs_hier(
             # dot — covering radii never under-cover (cos_slack note).
             hang = _np.arccos(_np.clip(
                 hsim.astype(_np.float64) - cos_slack, -1.0, 1.0))
-            # f16 bits of the unit row, zero per-row objects: one flat
-            # int16 buffer + arithmetic offsets
-            bits = _np.ascontiguousarray(
-                xn.astype(_np.float16)).view(_np.int16)
-            vh = _pa.ListArray.from_arrays(
-                _pa.array(_np.arange(0, (len(xn) + 1) * dim, dim,
-                                     dtype=_np.int32), type=_pa.int32()),
-                _pa.array(bits.ravel(), type=_pa.int16()))
             yield _pa.RecordBatch.from_arrays(
                 [batch.column(batch.schema.get_field_index("__id")),
                  _pa.array(leaf, type=_pa.int32()),
                  _pa.array(hang, type=_pa.float64()),
-                 vh],
+                 _f16_list(xn, dim)],
                 names=["__id", "leaf_id", "__hang", "__vh"],
             )
 
@@ -1834,17 +1611,32 @@ def embedding_near_dup_pairs_hier(
     radius_rows = (
         home.groupBy("leaf_id").agg(F.max("__hang").alias("__radius")).collect()
     )
-    _mark("assign_radii")
     radius = np.full(len(leaf_centers), np.nan)
     for r in radius_rows:
         radius[r["leaf_id"]] = r["__radius"]
+    return home, radius
+
+
+def _hier_replicate(base, fit, radius, id_type, *, threshold: float,
+                    dim: int, stats: HierStats) -> DataFrame:
+    """Hier phase 3: the covering-radius REPLICATION relation ``(__id,
+    leaf_id, __vh)`` — every leaf that can host a qualifying partner of
+    each row.  Lazy: the guard (or else the tail) runs it."""
+    import numpy as np
+
+    bcenters, leaf_centers, leaf_branch, _ = fit
+    n_b = len(bcenters)
+    theta_t = math.acos(max(-1.0, min(1.0, threshold)))
+    eps = 1e-6  # float-acos slack; over-assignment is verified away
+    cos_slack = _cos_slack(dim)
+    bc32 = bcenters.astype(np.float32)
+    lc32 = leaf_centers.astype(np.float32)
     live = ~np.isnan(radius)  # leaves with no home can't host a partner
     live_idx = np.nonzero(live)[0]
     # s_c = angle(branch(c), c) + R_c per live leaf, computed ONCE
-    # (r9): branch_R(β) = max_{c∈β} s_c now comes from one K-row
-    # einsum + maximum.at instead of a Θ(B) python loop of per-branch
-    # 1×|β| matmuls, and the 'scan' tiering below reuses the same s_c
-    # values instead of recomputing them.
+    # (r9): branch_R(β) = max_{c∈β} s_c comes from one K-row einsum +
+    # maximum.at instead of a Θ(B) python loop of per-branch 1×|β|
+    # matmuls, and the tiering below reuses the same s_c values.
     s_live = np.full(len(leaf_centers), np.inf)
     branch_r = np.full(n_b, -1.0)
     if len(live_idx):
@@ -1860,234 +1652,87 @@ def embedding_near_dup_pairs_hier(
     cos_thr_leaf[live_idx] = (
         np.cos(np.minimum(np.pi, theta_t + eps + radius[live_idx]))
         - cos_slack).astype(np.float32)
-    live_b = np.nonzero(branch_r >= 0.0)[0]
-    cos_thr_branch = np.full(n_b, 2.0, dtype=np.float32)
-    cos_thr_branch[live_b] = (
-        np.cos(np.minimum(np.pi, theta_t + eps + branch_r[live_b]))
-        - cos_slack).astype(np.float32)
-    live_leaves_of = [leaves_of[b][live[leaves_of[b]]] for b in range(n_b)]
 
-    # --- leaf-radius TIERING for the 'scan' strategy (r8, measured at
-    # the x100 probe): branch_R(β) is a MAX over s_c = angle(β,c)+R_c,
-    # and the real fit's radius TAIL (s_c p50 ≈ 31° but p90 ≈ 56° on
-    # the x100 sample) drives every branch's admit threshold toward
-    # cos(θ_t + 67°) ≈ 0.08 — ~25% of ALL branches admitted per row,
-    # so the "pruned" leaf filter silently degraded to ~K/4 dots per
-    # row plus ~3k group gathers per 4k-row chunk (the 257 s
-    # replication pass; the n×B GEMM itself is ~5 s).  Fix: the top
-    # ~⅛ of live leaves by s_c move to a WIDE tier that every row
-    # dense-scans in one chunked f32 GEMM against the exact per-leaf
-    # thresholds (pure BLAS, no groups); the remaining branches keep a
-    # quantile-bounded radius, restoring the prune.  Both tests are
-    # the identical exact per-leaf admit, so tier-union produces the
-    # same replica relation (pinned by the strategies/blocked
-    # equality tests).  The wide tier is capped at 32k centers (8 MB
-    # f32 closure): past that the quantile slides up and branch
-    # bounds loosen gradually — an honest measured tradeoff, not a
-    # cliff (SCALE.md r8).
+    def _cos_thr_branch(branch_radius):
+        thr = np.full(n_b, 2.0, dtype=np.float32)
+        ok = np.nonzero(branch_radius >= 0.0)[0]
+        thr[ok] = (np.cos(np.minimum(np.pi, theta_t + eps + branch_radius[ok]))
+                   - cos_slack).astype(np.float32)
+        return thr
+
+    leaves_of = _branch_leaves(leaf_branch, n_b)
+    tight_leaves_of = [lidx[live[lidx]] for lidx in leaves_of]
+    cos_thr_branch = _cos_thr_branch(branch_r)
+
+    # --- leaf-radius TIERING (r8, measured at the x100 probe):
+    # branch_R(β) is a MAX over s_c = angle(β,c)+R_c, and the real
+    # fit's radius TAIL (s_c p50 ≈ 31° but p90 ≈ 56° on the x100
+    # sample) drives every branch's admit threshold toward cos(θ_t +
+    # 67°) ≈ 0.08 — ~25% of ALL branches admitted per row, so the
+    # "pruned" leaf filter silently degraded to ~K/4 dots per row plus
+    # ~3k group gathers per 4k-row chunk (the 257 s replication pass;
+    # the n×B GEMM itself is ~5 s).  Fix: the top ~⅛ of live leaves by
+    # s_c move to a WIDE tier that every row dense-scans in one
+    # chunked f32 GEMM against the exact per-leaf thresholds (pure
+    # BLAS, no groups); the remaining branches keep a quantile-bounded
+    # radius, restoring the prune.  Both tests are the identical exact
+    # per-leaf admit, so the tier union is the same replica relation
+    # (pinned by the hier≡blocked equality tests).  The wide tier is
+    # capped at 32k centers (8 MB f32 closure): past that the quantile
+    # slides up and branch bounds loosen gradually — an honest
+    # measured tradeoff, not a cliff (SCALE.md r8).
     wide_idx = np.empty(0, dtype=np.int64)
-    tight_leaves_of = live_leaves_of
-    # tight-tier thresholds start as the full-radius branch thresholds
-    # and are REPLACED (under a distinct name — ADVICE r8 #3: rebinding
-    # cos_thr_branch itself left its semantics strategy-dependent) by
-    # the quantile-bounded ones when tiering engages; _replicate_scan
-    # closes over the tight variant, cos_thr_branch keeps meaning "full
-    # branch_R admit threshold" for any future consumer.
-    cos_thr_branch_tight = cos_thr_branch
-    if len(live_idx) >= 64:
-        # s_live was computed with branch_r above
-        n_wide = min(len(live_idx) // 8, 32768)
-        if n_wide:
-            # exact n_wide selection by argpartition (ADVICE r8 #2: a
-            # >=-quantile mask lets ties at the quantile value push the
-            # wide tier arbitrarily past the cap — in the all-equal
-            # degenerate case EVERY live leaf went wide, emptying the
-            # tight tier and turning the scan into an unbounded dense
-            # n x K GEMM).  Tier membership is strategy only — both
-            # tiers apply the identical exact per-leaf admit test — so
-            # the replica relation is unchanged by the split choice.
-            sel = np.argpartition(s_live[live_idx], -n_wide)[-n_wide:]
-            wide_mask = np.zeros(len(leaf_centers), dtype=bool)
-            wide_mask[live_idx[sel]] = True
-            wide_idx = np.nonzero(wide_mask)[0]
-            tight_leaves_of = [
-                lidx[~wide_mask[lidx]] for lidx in live_leaves_of]
-            branch_rt = np.full(n_b, -1.0)
-            for b in range(n_b):
-                if len(tight_leaves_of[b]):
-                    branch_rt[b] = s_live[tight_leaves_of[b]].max()
-            cos_thr_branch_tight = np.full(n_b, 2.0, dtype=np.float32)
-            tb = np.nonzero(branch_rt >= 0.0)[0]
-            cos_thr_branch_tight[tb] = (
-                np.cos(np.minimum(np.pi, theta_t + eps + branch_rt[tb]))
-                - cos_slack).astype(np.float32)
+    n_wide = min(len(live_idx) // 8, 32768) if len(live_idx) >= 64 else 0
+    if n_wide:
+        # exact n_wide selection by argpartition (ADVICE r8 #2: a
+        # >=-quantile mask lets ties at the quantile value push the
+        # wide tier arbitrarily past the cap — in the all-equal
+        # degenerate case EVERY live leaf went wide, emptying the
+        # tight tier and turning the scan into an unbounded dense
+        # n x K GEMM).  Tier membership is strategy only — both
+        # tiers apply the identical exact per-leaf admit test — so
+        # the replica relation is unchanged by the split choice.
+        sel = np.argpartition(s_live[live_idx], -n_wide)[-n_wide:]
+        wide_mask = np.zeros(len(leaf_centers), dtype=bool)
+        wide_mask[live_idx[sel]] = True
+        wide_idx = np.nonzero(wide_mask)[0]
+        tight_leaves_of = [
+            lidx[~wide_mask[lidx]] for lidx in tight_leaves_of]
+        branch_rt = np.full(n_b, -1.0)
+        for b in range(n_b):
+            if len(tight_leaves_of[b]):
+                branch_rt[b] = s_live[tight_leaves_of[b]].max()
+        cos_thr_branch = _cos_thr_branch(branch_rt)
     lcw32 = lc32[wide_idx]
     cos_thr_wide = cos_thr_leaf[wide_idx]
-    embedding_near_dup_pairs_hier.last_wide_leaves = len(wide_idx)
-    if os.environ.get("SPARK_GRAFT_HIER_FIT_DUMP"):
-        # Probe-only driver-state dump (r10): the quantizer metadata the
-        # replication pass closes over, for OFFLINE numpy prototyping of
-        # scan-strategy changes (the r6 discipline: establish the win
-        # driver-side before touching the operator).  Never on by
-        # default; no behavior change.
-        np.savez(os.environ["SPARK_GRAFT_HIER_FIT_DUMP"] +
-                 f".k{len(leaf_centers)}.npz",
-                 bcenters=bcenters, leaf_centers=leaf_centers,
-                 leaf_branch=leaf_branch, radius=radius, s_live=s_live,
-                 live_idx=live_idx, wide_idx=wide_idx,
-                 cos_thr_leaf=cos_thr_leaf,
-                 cos_thr_branch_tight=cos_thr_branch_tight,
-                 theta_t=np.float64(theta_t), esc_cap=np.float64(esc_cap))
+    stats.wide_leaves = len(wide_idx)
 
-    # --- replication STRATEGY dispatch (r7 verdict item 2): the flat
-    # n×B branch scan is pure GEMM and, in cos-space float32, measured
-    # 10.6 ms per 10k-row batch at B=787 — 14× under r7's f64+arccos
-    # form — but the term is Θ(n·B) with B ∝ K^⅔ ∝ n^⅔, the path's
-    # last superlinear term.  The home-conditioned candidate-list scan
-    # is Θ(assignment + |cand(home)|·dim) per row — n-LINEAR, no B
-    # term — but gather/group-bound (~230 ms/batch at the same shape,
-    # roughly independent of B).  Kernel benchmarks put the crossover
-    # at B ≈ 17k (a ~50M-row corpus at the default leaf_target), so
-    # the auto dispatch scans flat below REPLICATION_SCAN_MAX_BRANCHES
-    # and conditions on the home past it.  Both produce the SAME
-    # replica relation (the candidate lists are a sound superset of
-    # every branch-admit — see below — and the leaf-level admit test
-    # is identical), pinned bit-equal in tests/test_embedding_auto.py.
-    if replication_strategy not in ("auto", "scan", "cand"):
-        raise ValueError(
-            f"replication_strategy={replication_strategy!r}: "
-            "expected 'auto', 'scan', or 'cand'")
-    rep_strategy = replication_strategy
-    if rep_strategy == "auto":
-        rep_strategy = (
-            "scan" if n_b <= REPLICATION_SCAN_MAX_BRANCHES else "cand")
-    embedding_near_dup_pairs_hier.last_replication_strategy = rep_strategy
-
-    # --- per-home-leaf candidate LEAF lists ('cand' strategy only;
-    # driver metadata): for a point x home in leaf c0 (so angle(x,c0)
-    # ≤ R0), any leaf c that x must replicate to (angle(x,c) ≤ θ_t +
-    # R_c) satisfies angle(c0,c) ≤ angle(c0,x) + angle(x,c) ≤ R0 + θ_t
-    # + R_c — so cand(c0) = {c live : angle(c0,c) ≤ θ_t + R_c + R0} is
-    # a sound SUPERSET of every replica target any member of c0 can
-    # have: restricting pass 2 to it never changes the replica
-    # relation.  Conditioning at the LEAF level is what makes the
-    # lists tight — the same bound through branch radii (~45° at the
-    # probe scales) admits 37% of all branches (measured, r8), while
-    # leaf radii (~20°) put the cutoff ≈4σ below the high-dim 90°
-    # angle concentration: measured mean list size 126 of 7 851 live
-    # leaves at x10 (1.6%).  Build: chunked K×K angle matrix below
-    # CAND_BUILD_DIRECT_MAX_LEAVES (pure BLAS), else through the
-    # branch layer (angle(c0,β) ≤ θ_t + branch_R(β) + R0 prunes
-    # branches first, then only admitted branches' leaves get scored)
-    # — both exact, Θ(K²·dim) worst case of n-INDEPENDENT metadata
-    # work, embarrassingly parallel over leaf chunks if K ever
-    # outgrows the driver.
-    cand_lists: list = [None] * len(leaf_centers)
-    if rep_strategy == "cand" and len(live_idx):
-        lcl = leaf_centers[live_idx]
-        r_live = radius[live_idx]
-        # admit cutoff per TARGET leaf (θ_t + R_c), per-source R0 added
-        # row-wise inside the chunk loop
-        tgt_cut = theta_t + eps + r_live
-        if len(live_idx) <= CAND_BUILD_DIRECT_MAX_LEAVES:
-            lchunk = max(1, (128 << 20) // max(1, len(live_idx) * 8))
-            for lo in range(0, len(live_idx), lchunk):
-                ang = _angles(lcl[lo:lo + lchunk], lcl)
-                ok = ang <= tgt_cut[None, :] + r_live[lo:lo + lchunk, None]
-                for i in range(ok.shape[0]):
-                    cand_lists[live_idx[lo + i]] = live_idx[ok[i]]
-        else:
-            bchunk = max(1, (128 << 20) // max(1, len(live_b) * 8))
-            for lo in range(0, len(live_idx), bchunk):
-                sel = live_idx[lo:lo + bchunk]
-                r0 = radius[sel]
-                bang = _angles(leaf_centers[sel], bcenters[live_b])
-                okb = bang <= (theta_t + eps + r0[:, None]
-                               + branch_r[live_b][None, :])
-                acc_src: list = []
-                acc_tgt: list = []
-                for j in range(len(live_b)):
-                    rows = np.nonzero(okb[:, j])[0]
-                    lidx = live_leaves_of[live_b[j]]
-                    if not len(rows) or not len(lidx):
-                        continue
-                    ang = _angles(leaf_centers[sel[rows]],
-                                  leaf_centers[lidx])
-                    ri, cj = np.nonzero(
-                        ang <= (theta_t + eps + radius[lidx][None, :]
-                                + r0[rows, None]))
-                    if len(ri):
-                        acc_src.append(rows[ri])
-                        acc_tgt.append(lidx[cj])
-                if acc_src:
-                    srcs = np.concatenate(acc_src)
-                    tgts = np.concatenate(acc_tgt)
-                    order = np.argsort(srcs, kind="stable")
-                    srcs, tgts = srcs[order], tgts[order]
-                    cuts = np.nonzero(np.diff(srcs))[0] + 1
-                    for rs, s0 in zip(np.split(tgts, cuts),
-                                      np.concatenate(([0], cuts))):
-                        cand_lists[sel[srcs[s0]]] = rs
-        _lens = np.array([len(c) for c in cand_lists if c is not None])
-        embedding_near_dup_pairs_hier.last_cand_stats = {
-            "mean": float(_lens.mean()) if len(_lens) else 0.0,
-            "max": int(_lens.max()) if len(_lens) else 0,
-            "live_leaves": int(len(live_idx)),
-        }
-        # the list TOTAL is also the earliest blowup signal — on
-        # structureless data every leaf can host every other leaf's
-        # partners and the lists go quadratic in K.  Fail loudly
-        # BEFORE any executor pass (the count-based guard below stays
-        # as the authoritative in-flight check).
-        if int(_lens.sum()) * 4 > CAND_LISTS_MAX_BYTES:
-            raise CoveringRadiusBlowupError(
-                f"per-home-leaf candidate lists total {int(_lens.sum())} "
-                f"int32 entries (> CAND_LISTS_MAX_BYTES): at threshold "
-                f"{threshold} the corpus has no usable cluster "
-                "structure, the covering-radius replication factor "
-                "would degenerate toward all-pairs. Use the approximate "
-                "paths instead (SemDeDup-style within-cell pairs or ANN "
-                "top-k), raise the threshold, or accept the quadratic "
-                "cost knowingly with max_replication=None."
-            )
-    _mark("cand_build")
-
-    # --- pass 2: covering-radius REPLICATION (id -> every leaf that can
-    # host a qualifying partner) — same Arrow shape.  Each replica row
-    # carries the f16 nomination vector DIRECTLY (r9): pass 2 already
-    # holds the float64-normalized rows in memory, so emitting the same
-    # f16 bits pass 1 ships costs one rounding pass + a row gather,
-    # and the tail then needs NO vector-attach join at all — the old
-    # ``(rep ∪ home) ⋈ home`` re-attach shuffled the full replica
-    # relation plus the corpus-sized ``__vh`` projection by ``__id``
-    # before the leaf exchange could even start.  The guard cache
-    # grows from id-only to id+f16 (≈10×128 B per corpus row at the
-    # probe shapes) — MEMORY_AND_DISK, spills gracefully — in exchange
-    # for one fewer full-relation exchange and hash join on the
-    # path's biggest relation.
+    # --- pass 2: covering-radius REPLICATION — same Arrow shape as
+    # pass 1.  Each replica row carries the f16 nomination vector
+    # DIRECTLY (r9): pass 2 already holds the float64-normalized rows
+    # in memory, so emitting the same f16 bits pass 1 ships costs one
+    # rounding pass + a row gather, and the tail then needs NO
+    # vector-attach join at all — the old ``(rep ∪ home) ⋈ home``
+    # re-attach shuffled the full replica relation plus the
+    # corpus-sized ``__vh`` projection by ``__id`` before the leaf
+    # exchange could even start.  The guard cache grows from id-only
+    # to id+f16 (≈10×128 B per corpus row at the probe shapes) —
+    # MEMORY_AND_DISK, spills gracefully — in exchange for one fewer
+    # full-relation exchange and hash join on the path's biggest
+    # relation.
     rep_schema = T.StructType([
-        T.StructField("__id", id_field.dataType),
+        T.StructField("__id", id_type),
         T.StructField("leaf_id", T.IntegerType()),
         T.StructField("__vh", T.ArrayType(T.ShortType())),
     ])
 
-    def _emit_leaf_filter(xn32, rows, lidx, src_list, leaf_list):
-        """Exact per-leaf admit test (cos space): d ≥ cos(θ_t+eps+R_c)
-        − slack, float32 GEMM, over-admission verified away."""
-        import numpy as _np
-
-        lsim = xn32[rows] @ lc32[lidx].T
-        ri, lj = _np.nonzero(lsim >= cos_thr_leaf[lidx][None, :])
-        if len(ri):
-            src_list.append(rows[ri])
-            leaf_list.append(lidx[lj])
-
-    def _replicate_scan(xn32, src_list, leaf_list):
-        """Flat strategy: row-chunked n×B float32 GEMMs admit
-        (row, branch) pairs (d ≥ cos(θ_t+eps+branch_R) − slack —
-        implied by any qualifying leaf of that branch, so completeness
-        is the same leaf-level theorem), then only admitted branches'
-        live leaves get the exact leaf test.
+    def _admits(xn32):
+        """Row-chunked n×B float32 GEMMs admit (row, branch) pairs
+        (d ≥ cos(θ_t+eps+branch_R) − slack — implied by any
+        qualifying leaf of that branch, so completeness is the
+        leaf-level theorem), then only admitted branches' live leaves
+        get the exact per-leaf test (d ≥ cos(θ_t+eps+R_c) − slack).
+        Returns the (row, leaf) admit index lists.
 
         Row chunks keep the sim block ≤ ~48 MB: the first r8 form ran
         the GEMM over the whole 64k-row flush, and at the x100 probe
@@ -2103,6 +1748,8 @@ def embedding_near_dup_pairs_hier(
         x100 shape, driver microbench)."""
         import numpy as _np
 
+        src_list: list = []
+        leaf_list: list = []
         # WIDE tier: the exact per-leaf admit as one dense chunked
         # GEMM — covers the leaves whose radius tail would otherwise
         # poison their branch's bound (tiering note at the driver)
@@ -2125,8 +1772,7 @@ def embedding_near_dup_pairs_hier(
         # per-leaf admit on admitted branches' tight leaves
         rchunk = max(4096, (48 << 20) // max(1, n_b * 4))
         for lo in range(0, len(xn32), rchunk):
-            okb = (xn32[lo:lo + rchunk] @ bc32.T
-                   ) >= cos_thr_branch_tight[None, :]
+            okb = (xn32[lo:lo + rchunk] @ bc32.T) >= cos_thr_branch[None, :]
             ri, bj = _np.nonzero(okb)
             if not len(ri):
                 continue
@@ -2138,31 +1784,42 @@ def embedding_near_dup_pairs_hier(
                 lidx = tight_leaves_of[bb[s0]]
                 if not len(lidx):
                     continue
-                _emit_leaf_filter(
-                    xn32, lo + rows, lidx, src_list, leaf_list)
+                rows = lo + rows
+                lsim = xn32[rows] @ lc32[lidx].T
+                li, lj = _np.nonzero(lsim >= cos_thr_leaf[lidx][None, :])
+                if len(li):
+                    src_list.append(rows[li])
+                    leaf_list.append(lidx[lj])
+        return src_list, leaf_list
 
-    def _replicate_cand(xn32, src_list, leaf_list):
-        """Home-conditioned strategy: recompute the home (bit-identical
-        to pass 1 — same closure, same float32 path), group rows by
-        home leaf, one GEMM per group against its candidate leaf list.
-        Θ(assignment + |cand(home)|·dim) per row — no B term."""
+    def flush(batches):
         import numpy as _np
+        import pyarrow as _pa
 
-        home_leaf, _ = _home_batch(xn32)
-        order = _np.argsort(home_leaf, kind="stable")
-        sl = home_leaf[order]
-        cuts = _np.nonzero(_np.diff(sl))[0] + 1
-        for rows, s0 in zip(_np.split(order, cuts),
-                            _np.concatenate(([0], cuts))):
-            lidx = cand_lists[sl[s0]]
-            if lidx is None or not len(lidx):
-                continue
-            _emit_leaf_filter(xn32, rows, lidx, src_list, leaf_list)
+        tbl = _pa.Table.from_batches(batches)
+        x = (tbl.column("__v").combine_chunks().flatten()
+             .to_numpy(zero_copy_only=False)
+             .reshape(-1, dim).astype(_np.float64, copy=False))
+        xn = x / _np.linalg.norm(x, axis=1, keepdims=True)
+        src_list, leaf_list = _admits(xn.astype(_np.float32))
+        if not src_list:
+            return None
+        src = _np.concatenate(src_list)
+        # f16 bits of the float64-normalized unit rows — the SAME
+        # values pass 1 ships for these ids (identical float64
+        # normalization + f16 rounding), gathered per replica row
+        return _pa.RecordBatch.from_arrays(
+            [tbl.column("__id").combine_chunks().take(
+                _pa.array(src, type=_pa.int64())),
+             _pa.array(_np.concatenate(leaf_list).astype(_np.int32),
+                       type=_pa.int32()),
+             _f16_list(xn, dim, src)],
+            names=["__id", "leaf_id", "__vh"],
+        )
 
-    def _coalesced(it):
-        """COALESCE_ROWS batching shared by the full replicate pass and
-        its count-only guard twin (results are per-row, so grouping is
-        timing-only — see the constant's doc)."""
+    def replicate(it):
+        # COALESCE_ROWS batching (results are per-row, so grouping is
+        # timing-only — see the constant's doc)
         pend: list = []
         n_pend = 0
         for batch in it:
@@ -2171,138 +1828,38 @@ def embedding_near_dup_pairs_hier(
             pend.append(batch)
             n_pend += batch.num_rows
             if n_pend >= COALESCE_ROWS:
-                yield pend
+                out = flush(pend)
+                if out is not None:
+                    yield out
                 pend, n_pend = [], 0
         if pend:
-            yield pend
-
-    def _block_admits(tbl):
-        """Normalize one coalesced block and run the dispatched pass-2
-        strategy; returns (xn, src_list, leaf_list).  The ONLY admit
-        computation — the full pass and the count twin both call it,
-        so the guard's count is the real pass's count by construction."""
-        import numpy as _np
-
-        x = (tbl.column("__v").combine_chunks().flatten()
-             .to_numpy(zero_copy_only=False)
-             .reshape(-1, dim).astype(_np.float64, copy=False))
-        xn = x / _np.linalg.norm(x, axis=1, keepdims=True)
-        xn32 = xn.astype(_np.float32)
-        src_list: list = []
-        leaf_list: list = []
-        if rep_strategy == "scan":
-            _replicate_scan(xn32, src_list, leaf_list)
-        else:
-            _replicate_cand(xn32, src_list, leaf_list)
-        return xn, src_list, leaf_list
-
-    def replicate(it):
-        import numpy as _np
-        import pyarrow as _pa
-
-        def flush(batches):
-            tbl = _pa.Table.from_batches(batches)
-            xn, src_list, leaf_list = _block_admits(tbl)
-            if not src_list:
-                return None
-            ids = tbl.column("__id").combine_chunks()
-            src = _np.concatenate(src_list)
-            # f16 bits of the float64-normalized unit rows — the SAME
-            # values pass 1 ships for these ids (identical float64
-            # normalization + f16 rounding), gathered per replica row
-            bits = _np.ascontiguousarray(
-                xn.astype(_np.float16)).view(_np.int16)[src]
-            vh = _pa.ListArray.from_arrays(
-                _pa.array(_np.arange(0, (len(src) + 1) * dim, dim,
-                                     dtype=_np.int32), type=_pa.int32()),
-                _pa.array(bits.ravel(), type=_pa.int16()))
-            return _pa.RecordBatch.from_arrays(
-                [ids.take(_pa.array(src, type=_pa.int64())),
-                 _pa.array(_np.concatenate(leaf_list).astype(_np.int32),
-                           type=_pa.int32()),
-                 vh],
-                names=["__id", "leaf_id", "__vh"],
-            )
-
-        for pend in _coalesced(it):
             out = flush(pend)
             if out is not None:
                 yield out
 
-    def replicate_counts(it):
-        """Count-only twin of ``replicate`` (guard_mode='recount'):
-        same admit computation, but emits ONE int64 row per coalesced
-        block — no id gather, no f16 assembly, no Arrow list payload —
-        so the guard count costs the GEMM scan and nothing else."""
-        import pyarrow as _pa
+    return base.select("__id", "__v").mapInArrow(replicate, rep_schema)
 
-        for pend in _coalesced(it):
-            tbl = _pa.Table.from_batches(pend)
-            _, _, leaf_list = _block_admits(tbl)
-            n = int(sum(len(a) for a in leaf_list))
-            yield _pa.RecordBatch.from_arrays(
-                [_pa.array([n], type=_pa.int64())], names=["n"])
 
-    rep = base.select("__id", "__v").mapInArrow(replicate, rep_schema)
-    embedding_near_dup_pairs_hier.last_replication = None
-    mean_rep = None
-    if max_replication is not None and n_rows >= guard_min_rows:
-        # Runtime blowup guard (docstring): small corpora skip it — a
-        # sub-guard_min_rows worst case is trivial, and the extra count
-        # action would dominate unit-test-sized runs.
-        if _guard_mode() == "recount":
-            # r10 (VERDICT item 1): count WITHOUT materializing the
-            # id+f16 replica cache.  The guard pays one count-only
-            # GEMM pass (tiny output, no Arrow payload, no cache
-            # first-touch) and the tail recomputes pass 2 ONCE,
-            # streaming straight into its leaf exchange — instead of
-            # building + re-reading a corpus×replication-sized cache
-            # whose materialization was the dominant replicate_guard
-            # share at the x100 probe (r9: ~60 s of an 88.9 s stage was
-            # first-touch of the ~6.6 GB cache).  Counts are identical
-            # by construction (_block_admits is the only admit path).
-            total = (base.select("__v")
-                     .mapInArrow(replicate_counts,
-                                 T.StructType([T.StructField(
-                                     "n", T.LongType())]))
-                     .agg(F.sum("n")).collect()[0][0]) or 0
-            mean_rep = total / float(n_rows)
-            if mean_rep > max_replication:
-                raise CoveringRadiusBlowupError(
-                    f"mean covering-radius replication factor "
-                    f"{mean_rep:.1f} exceeds max_replication="
-                    f"{max_replication}: at threshold {threshold} the "
-                    "corpus has no usable cluster structure and the "
-                    "EXACT pair search degenerates toward all-pairs. "
-                    "Use the approximate paths instead — SemDeDup-style "
-                    "within-cell pairs (embedding_near_dup_pairs("
-                    "cell_col=...) over kmeans_ivf_cells) or ANN top-k "
-                    "(topk_neighbors_ivf_kmeans / hyperplane LSH / PQ) "
-                    "— or raise the threshold, or pass "
-                    "max_replication=None to accept the quadratic cost "
-                    "knowingly."
-                )
-        else:
-            rep, mean_rep = _guard_replication(
-                rep, n_rows, max_replication, threshold)
-        embedding_near_dup_pairs_hier.last_replication = mean_rep
-        _mark("replicate_guard")
-
+def _hier_tail(base, home, rep, id_type, *, threshold: float, dim: int,
+               n_rows: int, mean_rep) -> DataFrame:
+    """Hier phase 4 (lazy; runs when the caller materializes the
+    result): leaf-grain candidate nomination over the tagged union of
+    replicas and homes, then exact verification."""
     # --- leaf-grain CANDIDATE generation: inside each leaf a numpy
     # replicas·homesᵀ matmul nominates the pairs at cosine ≥ threshold
     # − margin, so the exact verify join only ships vectors for an
     # OUTPUT-sized relation — the blocked path's candidates-only
     # contract, applied per leaf.  Tail shape (r9, second revision):
-    # both passes now EMIT the f16 nomination vector with every row,
-    # so the tagged relation is a plain union — the r6-r8 vector-
-    # attach hash join (which shuffled the full replica relation plus
-    # a corpus-sized ``__vh`` projection by ``__id`` before the leaf
+    # both passes EMIT the f16 nomination vector with every row, so
+    # the tagged relation is a plain union — the r6-r8 vector-attach
+    # hash join (which shuffled the full replica relation plus a
+    # corpus-sized ``__vh`` projection by ``__id`` before the leaf
     # exchange) is gone — and leaf grouping is ONE hash exchange on
     # ``leaf_id`` + an in-worker numpy argsort/split per partition
     # (``repartition + mapInArrow``) instead of
-    # ``groupBy().applyInArrow``, whose physical plan appends a
-    # full row SORT of the path's biggest relation after the exchange
-    # plus one Python call per leaf (~K calls of ~leaf_target rows).
+    # ``groupBy().applyInArrow``, whose physical plan appends a full
+    # row SORT of the path's biggest relation after the exchange plus
+    # one Python call per leaf (~K calls of ~leaf_target rows).
     # Sorting the (int32 leaf_id) key column inside the worker costs
     # Θ(rows log rows) on 4-byte keys, not Θ(rows log rows) UnsafeRow
     # comparisons on ~150 B rows, and the pair math is batched per
@@ -2335,8 +1892,8 @@ def embedding_near_dup_pairs_hier(
         .select("leaf_id", "__id", "__vh", "__side")
     )
     cand_schema = T.StructType([
-        T.StructField("id_a", id_field.dataType),
-        T.StructField("id_b", id_field.dataType),
+        T.StructField("id_a", id_type),
+        T.StructField("id_b", id_type),
     ])
 
     def leaf_pairs_part(it):
@@ -2409,22 +1966,13 @@ def embedding_near_dup_pairs_hier(
     # invariant to the count.
     tail_parts = _tail_partition_floor(
         n_rows, mean_rep, dim,
-        int(spark.conf.get("spark.sql.shuffle.partitions")))
+        int(base.sparkSession.conf.get("spark.sql.shuffle.partitions")))
     cands = (
         (tagged.repartition(tail_parts, "leaf_id") if tail_parts
          else tagged.repartition("leaf_id"))
         .mapInArrow(leaf_pairs_part, cand_schema)
         .distinct()  # cross-leaf AND in-leaf mirrored duplicates
     )
-    if os.environ.get("SPARK_GRAFT_HIER_STAGE_DEBUG"):
-        # Probe-only tail attribution (r9): materialize the tail's two
-        # intermediates so their driver marks split "tail" into
-        # tagged-union / pair-matmul+distinct / exact-verify shares.
-        # EXTRA work (tagged recomputes for cands), never on by default.
-        tagged.write.mode("overwrite").format("noop").save()
-        _mark("dbg_tagged_union")
-        cands.write.mode("overwrite").format("noop").save()
-        _mark("dbg_pairs_distinct")
     a = base.select(F.col("__id").alias("id_a"), F.col("__v").alias("__va"),
                     F.col("__n2").alias("__na2"))
     b = base.select(F.col("__id").alias("id_b"), F.col("__v").alias("__vb"),
@@ -2444,30 +1992,194 @@ def embedding_near_dup_pairs_hier(
     )
 
 
-#: Diagnostic: mean replication factor from the last guarded run
-#: (None when the guard was skipped — small corpus or disabled).
-embedding_near_dup_pairs_hier.last_replication = None
-#: Diagnostic: 3 when the super level was active on the last run, 2
-#: when it was skipped (fewer than 24 branches).
-embedding_near_dup_pairs_hier.last_levels = None
-#: Diagnostic: which pass-2 strategy the last run resolved to
-#: ('scan' = flat n×B branch GEMM, 'cand' = home-conditioned lists).
-embedding_near_dup_pairs_hier.last_replication_strategy = None
-#: Diagnostic: which quantizer fit the last run used ('driver' =
-#: bounded-sample single-machine fit, 'distributed' = two-stage
-#: executor-side leaf fit past the driver sample cap).
-embedding_near_dup_pairs_hier.last_fit_mode = None
-#: Diagnostic: leaf count K of the last run's quantizer (the K-tracks-
-#: n/leaf_target contract is what the distributed fit exists for).
-embedding_near_dup_pairs_hier.last_k = None
-#: Diagnostic: candidate-list stats from the last 'cand' run.
-embedding_near_dup_pairs_hier.last_cand_stats = None
-#: Diagnostic: per-stage driver wall seconds from the last run
-#: (scan_cache / fit / assign_radii / cand_build / replicate_guard).
-#: NOTE on all four: probe/test-only introspection, process-global —
-#: concurrent hier calls in one driver overwrite each other (ADVICE
-#: r7); thread a result handle through instead if that ever matters.
-embedding_near_dup_pairs_hier.last_stage_seconds = None
+def embedding_near_dup_pairs_hier(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    threshold: float = 0.95,
+    dim: int = 64,
+    leaf_target: int = 64,
+    seed: int = 42,
+    fit_sample_rows: int = 32768,
+    cache_key: str | None = None,
+    home_probes: int = 8,
+    max_replication: float | None = 32.0,
+    guard_min_rows: int = 50_000,
+    fit_mode: str = "auto",
+    stats: HierStats | None = None,
+) -> DataFrame:
+    """Exact-COMPLETE cosine pair search with a THREE-LEVEL quantizer
+    (supers → branches → leaves) — the 100-TB form.  Same
+    covering-radius completeness argument as
+    :func:`embedding_near_dup_pairs_celled`, lifted level by level:
+    with ``branch_R(β) = max over leaves c∈β of (angle(β,c) + R_c)``,
+    any qualifying partner ``a`` of a point ``b`` home in leaf ``c`` of
+    branch ``β`` satisfies ``angle(a, β) ≤ angle(a,c) + angle(c,β) ≤
+    (θ_t + R_c) + angle(c,β) ≤ θ_t + branch_R(β)`` — so pruning
+    branches first loses nothing, and the leaf filter ``angle(a, c) ≤
+    θ_t + R_c`` finishes exactly as in the flat form.  The argument
+    never depends on HOW homes were chosen, only that ``R_c`` is the
+    max home-member angle — so a vectorized assignment is safe.  Every
+    candidate is re-verified with the exact unrolled cosine expression,
+    so the output is bit-identical to brute force.
+
+    HOME assignment searches the ``home_probes`` best branches found
+    through the top-``home_probes`` supers, not just the top one —
+    then RE-HOMES every point whose achieved home angle exceeds a
+    fit-derived absolute cap through an exact branch scan.
+    Completeness never depends on any of this (above), but
+    covering-radius QUALITY does, catastrophically, at both levels: a
+    point whose single nearest branch holds no leaf near it gets
+    force-homed ~90° away (r6: top-1 homes → mean replication 210, a
+    ~55 GB shuffle; top-8 → 9), and a point whose home super wasn't
+    among the probed ones fails the same way one level up (measured:
+    super-only preselection → replication 13.5/23.4/110/2145 at
+    x1/x3/x10/x30, each caught by the runtime guard below).  The cap
+    is the max exact-scan home angle of the FIT SAMPLE plus 3° — the
+    data's own home-angle ceiling — so no non-escalated point can sit
+    above it and the per-leaf radius max is immune to the miss RATE
+    (a quantile-based escalation is not: with K sample-capped, leaf
+    populations grow with n and any constant miss rate eventually
+    poisons every leaf's max — measured at x30, 5.17% misses → p50
+    radius 68° despite 2%-quantile escalation).  Assignment totals
+    Θ(n·(S + P·B/S + P·K/B + miss_rate·B)) flops — every term Θ(K^⅓)
+    except the measured-small escalation term, whose worst case
+    (structureless data, 100% escalation) degrades to the exact scan,
+    never below it.
+
+    Why three levels (the inverted-multi-index shape; Babenko &
+    Lempitsky 2012): the flat form scores every row against every cell
+    — Θ(n·K) with K ∝ n is a hidden quadratic — and the per-leaf pair
+    matmul needs SMALL cells (``leaf_target`` rows) to keep the
+    candidate surface ≈ n·leaf_target·replication.  Small cells mean
+    large K.  A two-level assignment costs Θ(n·(B + P·K/B)), minimized
+    at B ∝ √K — still a Θ(n·√K) term, which r6 measured as the one
+    remaining scale ceiling.  Balancing THREE levels (``S`` supers over
+    ``B`` branches over ``K`` leaves, B ∝ K^⅔, S ∝ √(P·B) ∝ K^⅓)
+    makes every ASSIGNMENT term — super scan, probed-branch scan,
+    probed-leaf scan — Θ(K^⅓), plus the bounded 2%·B escalation term.
+    The supers are fit driver-side over the BRANCH CENTERS (B points,
+    milliseconds), so the bounded-sample fit contract is unchanged;
+    below 24 branches the super level is skipped (the scan is already
+    trivial and the extra indirection would only add overhead).
+
+    The REPLICATION pass is a tiered flat scan in cos-space float32:
+    an n×B branch GEMM prunes by branch radius, a dense wide tier
+    covers the leaves whose radius tail would loosen their branch's
+    bound, and the exact per-leaf admit finishes.  Its Θ(n·B) term,
+    with B ∝ K^⅔ ∝ n^⅔, is the path's one superlinear term.  A
+    home-conditioned candidate-list scan without it was built (r8) and
+    lost every measurement this project could run (SCALE.md keeps its
+    soundness argument and the numbers), so the scan is the only form.
+
+    Execution shape (measured on the x1 probe corpus; see
+    tools/embpairs_probe.py): assignment and replication are
+    ``mapInArrow`` passes emitting rows of ids + the f16 nomination
+    vector — Arrow list columns flatten to a dense (rows × dim) matrix
+    with zero per-row Python objects, and the angle math is one numpy
+    matmul per batch (the blocked path's candidates-only contract:
+    numpy decides what gets VERIFIED, never a final value).  Shipping
+    the f16 bits from the passes themselves (r9) removed the r6-r8
+    vector-attach hash join: the tagged relation is a plain union that
+    flows into ONE hash exchange on ``leaf_id``.  In-leaf candidate
+    nomination is a per-shuffle-partition numpy argsort/split by leaf
+    plus a replicas·homesᵀ matmul per leaf at ``threshold − margin``;
+    survivors (an output-sized relation) get the exact expression.
+    The quantizer (≤ K·dim doubles) is driver-held metadata shipped in
+    task closures; the corpus never leaves executors.
+
+    Full-corpus passes are linear in n at fixed ``leaf_target`` apart
+    from the replication scan's Θ(n·B): Arrow assignment, Arrow
+    replication, one groupBy over K radius rows, the one leaf-keyed
+    exchange of the tagged relation (replication-factor × corpus
+    volume in f16), the leaf-grain matmul, and exact verification of
+    ~output-sized candidates.  The replication factor is the honest
+    data-dependence: tight content clusters keep it small; uniform
+    high-dim noise makes covering radii rival θ_t and degenerates
+    toward all-pairs — the unavoidable cost of EXACT completeness on
+    structureless data (the approximate alternatives are the
+    SemDeDup/ANN paths).
+
+    RUNTIME GUARD (r6 verdict item 2): once ``n ≥ guard_min_rows`` the
+    replica relation — materialized before the expensive pair matmul —
+    is cached and counted, and a mean replication factor above
+    ``max_replication`` raises :class:`CoveringRadiusBlowupError`
+    naming the approximate alternatives instead of silently shuffling
+    a quadratic candidate surface (the r6 disk-filling incidents were
+    exactly this, caught only by a human reading ``df -h``).  Clustered
+    corpora measure ~9–12 (tools/embpairs_probe.py); structureless
+    ones measure ≈ the live-leaf count.
+
+    ``stats`` (a :class:`HierStats`) receives this call's record: the
+    measured replication factor, K, the fit mode, the level count and
+    the driver seconds of each phase — scan, fit, assign, replicate
+    (which includes the guard; without the guard the replication pass
+    runs inside the tail).  Each phase's Spark jobs carry the job tag
+    ``hier:<phase>``.  The pair tail runs when the caller materializes
+    the result; wrap that action in ``stats.phase(spark, "tail")`` to
+    time and tag it too.
+    """
+    from ..session import ensure_package_shipped
+    from .relational import spread
+
+    if fit_mode not in ("auto", "driver", "distributed"):
+        raise ValueError(f"fit_mode={fit_mode!r}: expected "
+                         "'auto', 'driver', or 'distributed'")
+    stats = HierStats() if stats is None else stats
+    spark = df.sparkSession
+    # the Arrow passes call module helpers (_vecs, _f16_list) by
+    # reference: ship the package so workers can import it from any cwd
+    ensure_package_shipped(spark)
+    id_type = df.select(F.col(id_col)).schema[0].dataType
+    with stats.phase(spark, "scan"):
+        # spread() BEFORE the cache: a single-file corpus reads as a
+        # handful of scan partitions (768 MB -> 6 at x30), and base
+        # feeds four full numpy/Arrow passes — under-partitioned, they
+        # serialize onto 6 of 32 cores (measured: the home+replicate
+        # passes alone ~150 s of the 248 s x30 wall before this line).
+        base = (
+            spread(df).select(
+                F.col(id_col).alias("__id"),
+                as_double_vec(F.col(vec_col)).alias("__v"),
+            )
+            .withColumn("__n2", F.expr(dot_sql("__v", "__v", dim)))
+            # Zero-norm rows: cosine undefined, can never qualify (NaN
+            # >= t is false; ANSI division would fail loudly) — and one
+            # of them would poison its home leaf's covering radius.
+            # See embedding_near_dup_pairs.
+            .where(F.col("__n2") > 0)
+            .cache()
+        )
+        n_rows = base.count()
+    if n_rows == 0:
+        return base.select(
+            F.col("__id").alias("id_a"),
+            F.col("__id").alias("id_b"),
+            F.lit(0.0).alias("cosine"),
+        ).where(F.lit(False))
+    with stats.phase(spark, "fit"):
+        fit = _hier_fit(
+            base, n_rows, leaf_target=leaf_target, seed=seed,
+            fit_sample_rows=fit_sample_rows, cache_key=cache_key,
+            fit_mode=fit_mode, dim=dim, stats=stats)
+    stats.k = len(fit[1])
+    with stats.phase(spark, "assign"):
+        home, radius = _hier_assign(base, fit, id_type, dim=dim,
+                                    home_probes=home_probes, seed=seed,
+                                    stats=stats)
+    mean_rep = None
+    with stats.phase(spark, "replicate"):
+        rep = _hier_replicate(base, fit, radius, id_type,
+                              threshold=threshold, dim=dim, stats=stats)
+        if max_replication is not None and n_rows >= guard_min_rows:
+            # Runtime blowup guard (docstring): small corpora skip it —
+            # a sub-guard_min_rows worst case is trivial, and the extra
+            # count action would dominate unit-test-sized runs.
+            rep, mean_rep = _guard_replication(
+                rep, n_rows, max_replication, threshold)
+    stats.replication = mean_rep
+    return _hier_tail(base, home, rep, id_type, threshold=threshold,
+                      dim=dim, n_rows=n_rows, mean_rep=mean_rep)
 
 
 def embedding_near_dup_pairs_auto(
@@ -2483,6 +2195,7 @@ def embedding_near_dup_pairs_auto(
     max_replication: float | None = 32.0,
     on_blowup: str = "raise",
     guard_min_rows: int = 50_000,
+    stats: HierStats | None = None,
 ) -> DataFrame:
     """Size-dispatched exact cosine pair search (r5 verdict item 1):
     below ``max_side_bytes`` the numpy-blocked matmul candidate path
@@ -2517,13 +2230,17 @@ def embedding_near_dup_pairs_auto(
     see which semantics they got.  The fallback NEVER activates
     without the guard actually tripping — clustered corpora keep the
     exact path and ``method="exact"`` (pinned in tests).
+
+    ``stats`` (a :class:`HierStats`) records the chosen ``path`` and
+    ``method`` and is forwarded to the partitioned path.
     """
     if on_blowup not in ("raise", "fallback"):
         raise ValueError(f"on_blowup={on_blowup!r}: expected "
                          "'raise' or 'fallback'")
+    stats = HierStats() if stats is None else stats
 
     def _tag(res: DataFrame, method: str) -> DataFrame:
-        embedding_near_dup_pairs_auto.last_method = method
+        stats.method = method
         if on_blowup == "fallback":
             return res.withColumn("method", F.lit(method))
         return res
@@ -2531,26 +2248,26 @@ def embedding_near_dup_pairs_auto(
     n_rows = df.count()
     est_bytes = n_rows * dim * 8
     if est_bytes <= max_side_bytes:
-        embedding_near_dup_pairs_auto.last_path = "blocked"
+        stats.path = "blocked"
         return _tag(embedding_near_dup_pairs_blocked(
             df, id_col, vec_col, threshold=threshold, dim=dim,
             max_side_bytes=max_side_bytes,
         ), "exact")
     try:
         if n_cells is not None:
-            embedding_near_dup_pairs_auto.last_path = "celled"
+            stats.path = "celled"
             return _tag(embedding_near_dup_pairs_celled(
                 df, id_col, vec_col, threshold=threshold, dim=dim,
                 n_cells=n_cells, seed=seed, cache_key=cache_key,
                 max_replication=max_replication,
-                guard_min_rows=guard_min_rows,
+                guard_min_rows=guard_min_rows, stats=stats,
             ), "exact")
-        embedding_near_dup_pairs_auto.last_path = "hier"
+        stats.path = "hier"
         return _tag(embedding_near_dup_pairs_hier(
             df, id_col, vec_col, threshold=threshold, dim=dim,
             seed=seed, cache_key=cache_key,
             max_replication=max_replication,
-            guard_min_rows=guard_min_rows,
+            guard_min_rows=guard_min_rows, stats=stats,
         ), "exact")
     except CoveringRadiusBlowupError as err:
         if on_blowup != "fallback":
@@ -2562,7 +2279,7 @@ def embedding_near_dup_pairs_auto(
             "tripped (%s); falling back to APPROXIMATE SemDeDup-style "
             "within-cell pairs — output rows carry "
             "method='semdedup_cells'", err)
-        embedding_near_dup_pairs_auto.last_path = "semdedup_fallback"
+        stats.path = "semdedup_fallback"
         fb_cells = max(16, min(4096, n_rows // 256))
         assigned, _centers = kmeans_ivf_cells(
             df.where(F.expr(dot_sql(vec_col, vec_col, dim)) > 0),
@@ -2573,13 +2290,6 @@ def embedding_near_dup_pairs_auto(
             assigned, id_col, vec_col, threshold=threshold,
             cell_col="__cell", dim=dim)
         return _tag(res, "semdedup_cells")
-
-
-#: Test/diagnostic introspection: which path the last auto call chose.
-embedding_near_dup_pairs_auto.last_path = None
-#: Test/diagnostic introspection: semantics of the last auto result
-#: ('exact' or 'semdedup_cells' — only differs under on_blowup mode).
-embedding_near_dup_pairs_auto.last_method = None
 
 
 def l2_normalize(vec_col: str, dim: int) -> Column:

@@ -48,6 +48,51 @@ RUNTIME_CONF = {
 }
 
 
+#: Driver heap default on a host with room for it; :func:`host_conf`
+#: caps it below physical memory.
+DRIVER_MEM_DEFAULT_MB = 48 << 10
+
+
+def _mem_total_mb() -> int | None:
+    """``MemTotal`` from /proc/meminfo in MiB, or None off Linux."""
+    try:
+        with open("/proc/meminfo", encoding="ascii") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) >> 10
+    except OSError:
+        pass
+    return None
+
+
+def host_conf() -> tuple[int, str]:
+    """``(cpus, driver_mem)`` for a local session.
+
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` win when set.
+    Otherwise the defaults come from this host: every core in the
+    process's CPU affinity mask, and a 48g driver heap capped at three
+    quarters of ``MemTotal`` (the rest stays for Python workers and the
+    OS).  ``get_spark`` and ``bench.py`` both read this, so they agree.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if cpus:
+        try:
+            n_cpus = int(cpus)
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_CPUS={cpus!r}: expected a core count") from None
+    elif hasattr(os, "sched_getaffinity"):
+        n_cpus = len(os.sched_getaffinity(0))
+    else:
+        n_cpus = os.cpu_count() or 1
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        total = _mem_total_mb()
+        cap = DRIVER_MEM_DEFAULT_MB if total is None else total * 3 // 4
+        mem = f"{min(DRIVER_MEM_DEFAULT_MB, cap)}m"
+    return n_cpus, mem
+
+
 def get_spark(
     app_name: str = "kafka-bigdata-jobs-spark",
     master: str | None = None,
@@ -56,12 +101,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32) so tests and
-    bench.py share one code path; on a real cluster pass ``master=None``
-    with ``SPARK_GRAFT_MASTER`` unset and spark-submit's master wins.
+    ``master`` defaults to ``local[cpus]`` with cpus from
+    :func:`host_conf`, so tests and bench.py share one code path; on a
+    real cluster set ``SPARK_GRAFT_MASTER`` or pass ``master``.
     """
+    cpus, driver_mem = host_conf()
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     # Export the BLAS env for python WORKERS before the JVM launches
     # (local mode: workers inherit the driver process env via the JVM;
@@ -74,10 +119,10 @@ def get_spark(
     worker_env = export_worker_env()
     builder = SparkSession.builder.appName(app_name).master(master)
     conf: dict[str, str] = {
-        # local-mode default heap is 1g; the 32-thread local runner needs
-        # real memory for wide aggregate folds / cached signatures.  Only
+        # local-mode default heap is 1g; the local runner needs real
+        # memory for wide aggregate folds / cached signatures.  Only
         # effective when this call creates the JVM (ignored on attach).
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.driver.memory": driver_mem,
         # The suite compiles hundreds of large whole-stage-codegen classes
         # (unrolled vector math, 64-aggregate signature folds); the JVM's
         # default 240 MB reserved code cache fills mid-run, JIT flushes /

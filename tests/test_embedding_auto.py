@@ -12,10 +12,13 @@ data engineered so qualifying pairs STRADDLE cell boundaries.
 
 from __future__ import annotations
 
+import copy
+
 import numpy as np
 import pytest
 
 from kafka_bigdata_jobs_spark.operators.similarity import (
+    HierStats,
     embedding_near_dup_pairs,
     embedding_near_dup_pairs_auto,
     embedding_near_dup_pairs_celled,
@@ -57,17 +60,21 @@ def test_auto_identical_output_across_cutover(spark, emb):
     path via max_side_bytes and compare against brute force."""
     brute = _pairs(embedding_near_dup_pairs(
         emb, "vec_id", "embedding", threshold=0.45))
+    st = HierStats()
     below = _pairs(embedding_near_dup_pairs_auto(
         emb, "vec_id", "embedding", threshold=0.45,
-        max_side_bytes=1 << 30))
-    assert embedding_near_dup_pairs_auto.last_path == "blocked"
+        max_side_bytes=1 << 30, stats=st))
+    assert st.path == "blocked"
+    st = HierStats()
     above = _pairs(embedding_near_dup_pairs_auto(
-        emb, "vec_id", "embedding", threshold=0.45, max_side_bytes=1))
-    assert embedding_near_dup_pairs_auto.last_path == "hier"
+        emb, "vec_id", "embedding", threshold=0.45, max_side_bytes=1,
+        stats=st))
+    assert st.path == "hier"
+    st = HierStats()
     forced_flat = _pairs(embedding_near_dup_pairs_auto(
         emb, "vec_id", "embedding", threshold=0.45, max_side_bytes=1,
-        n_cells=8))
-    assert embedding_near_dup_pairs_auto.last_path == "celled"
+        n_cells=8, stats=st))
+    assert st.path == "celled"
     assert below == brute
     assert above == brute
     assert forced_flat == brute
@@ -157,7 +164,7 @@ def _clustered_corpus(rng, n_clusters, per_cluster, dim, width_deg=8.0,
 
 def test_hier_three_level_supers_bit_equal(spark):
     """r6 verdict item 1: with enough branches the SUPER level must
-    activate (last_levels == 3) and the output must stay bit-identical
+    activate (stats.levels == 3) and the output must stay bit-identical
     to the numpy-blocked exact path — the same contract the x1 probe
     gate enforces at 50k rows, pinned here at unit-test scale.
     leaf_target=4 over 3000 rows yields ~750 leaves → ~165 branches →
@@ -174,9 +181,11 @@ def test_hier_three_level_supers_bit_equal(spark):
     blocked = _pairs(embedding_near_dup_pairs_blocked(
         df, "vec_id", "embedding", threshold=0.97, dim=dim))
     assert len(blocked) > 0  # in-cluster pairs qualify by construction
+    st = HierStats()
     hier = _pairs(embedding_near_dup_pairs_hier(
-        df, "vec_id", "embedding", threshold=0.97, dim=dim, leaf_target=4))
-    assert embedding_near_dup_pairs_hier.last_levels == 3
+        df, "vec_id", "embedding", threshold=0.97, dim=dim, leaf_target=4,
+        stats=st))
+    assert st.levels == 3
     assert hier == blocked
 
 
@@ -223,11 +232,12 @@ def test_replication_guard_passes_clustered_corpus(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     blocked = _pairs(embedding_near_dup_pairs_blocked(
         df, "vec_id", "embedding", threshold=0.97, dim=dim))
+    st = HierStats()
     hier = _pairs(embedding_near_dup_pairs_hier(
         df, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=8, guard_min_rows=0))
+        leaf_target=8, guard_min_rows=0, stats=st))
     assert hier == blocked
-    rep = embedding_near_dup_pairs_hier.last_replication
+    rep = st.replication
     assert rep is not None and rep < 32.0, (
         f"clustered corpus measured replication {rep} — the guard "
         "would reject the operator's own workload")
@@ -273,9 +283,9 @@ def test_hier_fit_sample_covers_file_tail(spark, monkeypatch):
     captured = {}
     real_fit = sim._fit_two_level
 
-    def spy(sample_mat, k_leaf, n_branches, seed):
+    def spy(sample_mat, *args, **kwargs):
         captured["sample"] = np.asarray(sample_mat)
-        return real_fit(sample_mat, k_leaf, n_branches, seed)
+        return real_fit(sample_mat, *args, **kwargs)
 
     monkeypatch.setattr(sim, "_fit_two_level", spy)
     embedding_near_dup_pairs_hier(
@@ -289,41 +299,6 @@ def test_hier_fit_sample_covers_file_tail(spark, monkeypatch):
     assert 0.005 <= frac, (
         f"fit sample carries {frac:.1%} tail-cluster rows — the sampler "
         "is file-order biased again (expected ~3%)")
-
-
-def test_replication_strategies_bit_equal(spark):
-    """r7 verdict item 2: pass 2 dispatches between the flat n×B
-    branch scan ('scan', pure GEMM, default below
-    REPLICATION_SCAN_MAX_BRANCHES) and the home-conditioned candidate
-    leaf lists ('cand', n-linear, no B term, the >50M-row form).  Both
-    must produce the SAME output as the numpy-blocked exact path — the
-    candidate lists are a sound superset of every branch admit, so the
-    replica relation is identical by construction; this pins it."""
-    from kafka_bigdata_jobs_spark.operators.similarity import (
-        embedding_near_dup_pairs_blocked,
-    )
-
-    rng = np.random.default_rng(17)
-    dim = 8
-    rows = _clustered_corpus(rng, n_clusters=50, per_cluster=40, dim=dim)
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    blocked = _pairs(embedding_near_dup_pairs_blocked(
-        df, "vec_id", "embedding", threshold=0.97, dim=dim))
-    assert len(blocked) > 0
-    got = {}
-    for strat in ("scan", "cand"):
-        got[strat] = _pairs(embedding_near_dup_pairs_hier(
-            df, "vec_id", "embedding", threshold=0.97, dim=dim,
-            leaf_target=6, replication_strategy=strat))
-        assert (embedding_near_dup_pairs_hier.last_replication_strategy
-                == strat)
-        assert got[strat] == blocked
-    # auto resolves to 'scan' at this branch count
-    auto = _pairs(embedding_near_dup_pairs_hier(
-        df, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=6))
-    assert embedding_near_dup_pairs_hier.last_replication_strategy == "scan"
-    assert auto == blocked
 
 
 def test_distributed_fit_bit_equal_and_k_tracks_n(spark, monkeypatch):
@@ -349,26 +324,29 @@ def test_distributed_fit_bit_equal_and_k_tracks_n(spark, monkeypatch):
     assert len(blocked) > 0
 
     # forced distributed, real cap: bit-equal output
+    st = HierStats()
     dist = _pairs(embedding_near_dup_pairs_hier(
         df, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=6, fit_mode="distributed"))
-    assert embedding_near_dup_pairs_hier.last_fit_mode == "distributed"
+        leaf_target=6, fit_mode="distributed", stats=st))
+    assert st.fit_mode == "distributed"
     assert dist == blocked
 
     # past-the-ceiling regime: driver fit clamps K, auto goes
     # distributed and K keeps tracking n/leaf_target
     monkeypatch.setattr(sim, "FIT_SAMPLE_ROWS_CAP", 256)
+    st = HierStats()
     drv = _pairs(embedding_near_dup_pairs_hier(
         df, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=6, fit_mode="driver", fit_sample_rows=64))
-    assert embedding_near_dup_pairs_hier.last_fit_mode == "driver"
-    k_driver = embedding_near_dup_pairs_hier.last_k
+        leaf_target=6, fit_mode="driver", fit_sample_rows=64, stats=st))
+    assert st.fit_mode == "driver"
+    k_driver = st.k
     assert drv == blocked  # clamped K hurts cost, never correctness
+    st = HierStats()
     auto = _pairs(embedding_near_dup_pairs_hier(
         df, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=6, fit_mode="auto", fit_sample_rows=64))
-    assert embedding_near_dup_pairs_hier.last_fit_mode == "distributed"
-    k_dist = embedding_near_dup_pairs_hier.last_k
+        leaf_target=6, fit_mode="auto", fit_sample_rows=64, stats=st))
+    assert st.fit_mode == "distributed"
+    k_dist = st.k
     assert auto == blocked
     # the cap clamped the driver fit's K to ~cap/4 (±per-branch
     # rounding in _fit_two_level's proportional leaf allocation)
@@ -406,12 +384,13 @@ def test_on_blowup_fallback_routes_to_semdedup(spark):
         embedding_near_dup_pairs_auto(
             noise, "vec_id", "embedding", threshold=0.7, dim=dim,
             max_side_bytes=1, guard_min_rows=0, max_replication=2.0)
+    st = HierStats()
     got = embedding_near_dup_pairs_auto(
         noise, "vec_id", "embedding", threshold=0.7, dim=dim,
         max_side_bytes=1, guard_min_rows=0, max_replication=2.0,
-        on_blowup="fallback")
-    assert embedding_near_dup_pairs_auto.last_path == "semdedup_fallback"
-    assert embedding_near_dup_pairs_auto.last_method == "semdedup_cells"
+        on_blowup="fallback", stats=st)
+    assert st.path == "semdedup_fallback"
+    assert st.method == "semdedup_cells"
     assert got.columns == ["id_a", "id_b", "cosine", "method"]
     got_rows = {(r["id_a"], r["id_b"], r["cosine"]) for r in got.collect()}
     assert {r["method"] for r in got.select("method").distinct().collect()
@@ -433,10 +412,11 @@ def test_on_blowup_fallback_routes_to_semdedup(spark):
         crows, "vec_id long, embedding array<double>")
     brute = _pairs(embedding_near_dup_pairs(
         cdf, "vec_id", "embedding", threshold=0.97, dim=8))
+    st = HierStats()
     res = embedding_near_dup_pairs_auto(
         cdf, "vec_id", "embedding", threshold=0.97, dim=8,
-        max_side_bytes=1, guard_min_rows=0, on_blowup="fallback")
-    assert embedding_near_dup_pairs_auto.last_method == "exact"
+        max_side_bytes=1, guard_min_rows=0, on_blowup="fallback", stats=st)
+    assert st.method == "exact"
     assert res.columns == ["id_a", "id_b", "cosine", "method"]
     assert _pairs(res.drop("method")) == brute
 
@@ -509,46 +489,39 @@ def test_tail_partition_floor_binds_only_at_scale():
     assert bytes_tagged / (got - 1) > LEAF_PART_TARGET_BYTES
 
 
-def test_guard_recount_mode_bit_equal(spark, monkeypatch):
-    """r10 VERDICT item 1: guard_mode='recount' (payload-free count
-    twin + tail recompute, no replica cache) must measure the SAME
-    replication factor and return the SAME pairs as the cached form,
-    and must still trip on structureless corpora."""
-    from kafka_bigdata_jobs_spark.operators.similarity import (
-        CoveringRadiusBlowupError,
-        embedding_near_dup_pairs_blocked,
-    )
-
-    rng = np.random.default_rng(13)
+def test_stats_record_is_per_call(spark):
+    """Each hier call fills only the HierStats record it was handed:
+    two calls on different corpora in one session keep their own K,
+    replication factor and phase times, and the first record is
+    untouched by the second call (the process-global ``last_*``
+    attributes this record replaced were overwritten by every call)."""
+    rng = np.random.default_rng(41)
     dim = 8
-    rows = _clustered_corpus(rng, n_clusters=40, per_cluster=40, dim=dim)
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    blocked = _pairs(embedding_near_dup_pairs_blocked(
-        df, "vec_id", "embedding", threshold=0.97, dim=dim))
-
-    def run():
-        got = _pairs(embedding_near_dup_pairs_hier(
-            df, "vec_id", "embedding", threshold=0.97, dim=dim,
-            leaf_target=8, guard_min_rows=0))
-        return got, embedding_near_dup_pairs_hier.last_replication
-
-    monkeypatch.delenv("SPARK_GRAFT_GUARD_MODE", raising=False)
-    cached_pairs, cached_rep = run()
-    monkeypatch.setenv("SPARK_GRAFT_GUARD_MODE", "recount")
-    spark.catalog.clearCache()
-    recount_pairs, recount_rep = run()
-    assert recount_pairs == cached_pairs == blocked
-    assert recount_rep == pytest.approx(cached_rep, rel=0, abs=0)
-
-    # blowup still trips BEFORE the tail in recount mode
-    noise = []
-    rng2 = np.random.default_rng(5)
-    for vid in range(3000):
-        v = rng2.normal(size=16)
-        noise.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
-    ndf = spark.createDataFrame(noise,
-                                "vec_id long, embedding array<double>")
-    with pytest.raises(CoveringRadiusBlowupError, match="replication factor"):
-        embedding_near_dup_pairs_hier(
-            ndf, "vec_id", "embedding", threshold=0.7, dim=16,
-            leaf_target=16, guard_min_rows=0)
+    small = spark.createDataFrame(
+        _clustered_corpus(rng, n_clusters=20, per_cluster=40, dim=dim),
+        "vec_id long, embedding array<double>")
+    big = spark.createDataFrame(
+        _clustered_corpus(rng, n_clusters=60, per_cluster=50, dim=dim),
+        "vec_id long, embedding array<double>")
+    first, second = HierStats(), HierStats()
+    embedding_near_dup_pairs_hier(
+        small, "vec_id", "embedding", threshold=0.97, dim=dim,
+        leaf_target=64, guard_min_rows=0, stats=first).count()
+    snapshot = copy.deepcopy(first)
+    out = embedding_near_dup_pairs_hier(
+        big, "vec_id", "embedding", threshold=0.97, dim=dim,
+        leaf_target=4, guard_min_rows=0, stats=second)
+    with second.phase(spark, "tail"):
+        out.count()
+    assert first == snapshot
+    assert first.k != second.k
+    assert first.replication is not None and second.replication is not None
+    assert first.replication != second.replication
+    phases = {"scan", "fit", "assign", "replicate"}
+    assert set(first.phase_seconds) == phases
+    assert set(second.phase_seconds) == phases | {"tail"}
+    assert all(v >= 0 for v in second.phase_seconds.values())
+    assert first.fit_seconds and second.fit_seconds
+    assert first.levels == 2 and second.levels == 3
+    # phase job tags are scoped to their phase
+    assert not spark.sparkContext.getJobTags()

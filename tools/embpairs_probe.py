@@ -125,24 +125,22 @@ def fit_ceiling_probe(out_path: str) -> None:
             spark.catalog.clearCache()
             sim._TWO_LEVEL_FIT_CACHE.clear()
             df = spark.read.parquet(path)
+            stats = sim.HierStats()
             t0 = time.monotonic()
             out = sim.embedding_near_dup_pairs_hier(
                 df, "vec_id", "embedding", threshold=THRESHOLD,
-                dim=DIM, fit_mode=mode)
+                dim=DIM, fit_mode=mode, stats=stats)
             pair_sets[mode] = {(r["id_a"], r["id_b"], r["cosine"])
                                for r in out.collect()}
             wall = time.monotonic() - t0
-            assert (sim.embedding_near_dup_pairs_hier.last_fit_mode
-                    == mode)
-            k = sim.embedding_near_dup_pairs_hier.last_k
+            assert stats.fit_mode == mode
+            k = stats.k
             row[f"{mode}_wall"] = round(wall, 3)
             row[f"{mode}_k_leaves"] = int(k)
             row[f"{mode}_mean_leaf_rows"] = round(SIZES["x10"] / k, 1)
             row[f"{mode}_replication"] = (
-                None if sim.embedding_near_dup_pairs_hier
-                .last_replication is None
-                else round(sim.embedding_near_dup_pairs_hier
-                           .last_replication, 1))
+                None if stats.replication is None
+                else round(stats.replication, 1))
             print(f"fit-ceiling {mode}: wall={wall:.1f}s K={k} "
                   f"leaf_rows={SIZES['x10']/k:.0f} "
                   f"pairs={len(pair_sets[mode])}", flush=True)
@@ -199,9 +197,11 @@ def main() -> None:
         spark.catalog.clearCache()
         sim._TWO_LEVEL_FIT_CACHE.clear()
         df = spark.read.parquet(path)
+        stats = sim.HierStats()
         t0 = time.monotonic()
         out = sim.embedding_near_dup_pairs_hier(
-            df, "vec_id", "embedding", threshold=THRESHOLD, dim=DIM)
+            df, "vec_id", "embedding", threshold=THRESHOLD, dim=DIM,
+            stats=stats)
         n_pairs = out.count()
         # Shuffle files (the tagged replicas·vectors relation) only get
         # deleted when the JVM GCs the dropped RDD references; without
@@ -212,8 +212,7 @@ def main() -> None:
         import gc
         gc.collect()
         spark.sparkContext._jvm.System.gc()
-        return (time.monotonic() - t0, n_pairs,
-                sim.embedding_near_dup_pairs_hier.last_replication)
+        return time.monotonic() - t0, n_pairs, stats.replication
 
     row: dict = {}
     for scale, path in SIZES.items():

@@ -1,17 +1,18 @@
-"""Per-STAGE scaling probe for the hier pair search (r9, VERDICT item 3).
+"""Per-PHASE scaling probe for the hier pair search.
 
-Runs the same cold builds as tools/embpairs_probe.py but records the
-driver stage marks (``last_stage_seconds``) per scale and derives the
-pair-join TAIL as total − sum(marked stages), so each stage gets its own
-scaling exponent instead of one conflated wall number.  Stage meanings:
+Runs the same cold builds as tools/embpairs_probe.py but records each
+call's ``HierStats`` phase times per scale, so each phase gets its own
+scaling exponent instead of one conflated wall number.  The tail is
+timed directly: the probe materializes the result inside
+``stats.phase(spark, "tail")``, which also tags the tail's Spark jobs
+``hier:tail``.  Phase meanings:
 
-- scan_cache:      corpus scan + normalize + cache materialization
-- fit:             quantizer fit (sample, two-level Lloyd, esc-cap scan)
-- assign_radii:    pass-1 Arrow home assignment + K-row radius aggregate
-- cand_build:      'cand' candidate lists (≈0 under 'scan' dispatch)
-- replicate_guard: pass-2 Arrow replication + guard count
-- tail:            tagged vector join + leaf-grain pair matmul +
-                   distinct + exact-verify joins + output count
+- scan:      corpus scan + normalize + cache materialization
+- fit:       quantizer fit (sample, two-level Lloyd, esc-cap scan)
+- assign:    pass-1 Arrow home assignment + K-row radius aggregate
+- replicate: pass-2 Arrow replication + guard count
+- tail:      tagged union + leaf-grain pair matmul + distinct +
+             exact-verify joins + output count
 
 Usage: python tools/stage_probe.py [--scales x1,x3,x10,x30,x100]
        [--attempts 2] [--out /tmp/stage_probe.json]
@@ -65,21 +66,18 @@ def main() -> None:
         spark.catalog.clearCache()
         sim._TWO_LEVEL_FIT_CACHE.clear()
         df = spark.read.parquet(path)
+        stats = sim.HierStats()
         t0 = time.monotonic()
         out = sim.embedding_near_dup_pairs_hier(
-            df, "vec_id", "embedding", threshold=THRESHOLD, dim=DIM)
-        n_pairs = out.count()
+            df, "vec_id", "embedding", threshold=THRESHOLD, dim=DIM,
+            stats=stats)
+        with stats.phase(spark, "tail"):
+            n_pairs = out.count()
         total = time.monotonic() - t0
-        stages = dict(sim.embedding_near_dup_pairs_hier.last_stage_seconds)
-        stages["tail"] = round(total - sum(stages.values()), 3)
         import gc
         gc.collect()
         spark.sparkContext._jvm.System.gc()
-        return (total, n_pairs, stages,
-                sim.embedding_near_dup_pairs_hier.last_replication,
-                sim.embedding_near_dup_pairs_hier.last_k,
-                sim.embedding_near_dup_pairs_hier.last_fit_mode,
-                dict(sim._FIT_TIMINGS))
+        return total, n_pairs, stats
 
     results: dict = {}
     for scale in scales:
@@ -90,11 +88,13 @@ def main() -> None:
             run_cold(spark, path)  # untimed warm-up
         best = None
         for _ in range(args.attempts):
-            total, pairs, stages, rep, k, fm, fbd = run_cold(spark, path)
+            total, pairs, st = run_cold(spark, path)
             if best is None or total < best["total"]:
                 best = {"total": round(total, 3), "pairs": pairs,
-                        "stages": stages, "replication": rep, "k": k,
-                        "fit_mode": fm, "fit_breakdown": fbd}
+                        "stages": st.phase_seconds,
+                        "replication": st.replication, "k": st.k,
+                        "fit_mode": st.fit_mode,
+                        "fit_breakdown": st.fit_seconds}
         results[scale] = best
         print(f"{scale:5s} total={best['total']:8.2f}s pairs={best['pairs']}"
               f" k={best['k']} rep={best['replication']} fit={best['fit_mode']}"
