@@ -2,13 +2,18 @@
 
 PY ?= python
 
-.PHONY: test bench bench-quiet correctness-local correctness-local-incr coverage scaledata scaleprobe ann-recall-scale embpairs-probe embpairs-fit-ceiling
+.PHONY: test bench bench-quiet perfbench-smoke correctness-local correctness-local-incr coverage scaledata scaleprobe ann-recall-scale embpairs-probe embpairs-fit-ceiling
 
 test:
 	$(PY) -m pytest tests/ -x -q
 
 bench:
 	$(PY) bench.py
+
+# Tiny-input run of both perfbench workloads (stream_replay, suite_heavy):
+# every run must print its metrics and report correct: true.
+perfbench-smoke:
+	$(PY) -m pytest perfbench/test_smoke.py -q
 
 # Quiet-host twin of `bench`: writes BENCH_quiet.json, which the driver
 # never clobbers.  tests/test_scaling_exponents.py takes the per-query

@@ -72,6 +72,8 @@ def _estimated_scan_partitions(spark, files: list[str]) -> int:
     import os
     from urllib.parse import urlparse
 
+    from ..session import _conf_int
+
     def _bytes(v: str) -> int:
         # Spark byte-conf strings: "134217728b", "128m", "1g", plain int
         units = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
@@ -89,10 +91,9 @@ def _estimated_scan_partitions(spark, files: list[str]) -> int:
                              str(128 << 20)))
     open_cost = _bytes(conf.get("spark.sql.files.openCostInBytes",
                                 str(4 << 20)))
-    try:
-        min_parts = int(conf.get("spark.sql.files.minPartitionNum"))
-    except Exception:  # unset: Spark falls back to default parallelism
-        min_parts = spark.sparkContext.defaultParallelism
+    # Unset: Spark falls back to the default parallelism.
+    min_parts = _conf_int(conf, "spark.sql.files.minPartitionNum",
+                          spark.sparkContext.defaultParallelism)
     sizes: list[int] = []
     jvm_fs = None
     for f in files:

@@ -1845,6 +1845,8 @@ def _hier_tail(base, home, rep, id_type, *, threshold: float, dim: int,
     """Hier phase 4 (lazy; runs when the caller materializes the
     result): leaf-grain candidate nomination over the tagged union of
     replicas and homes, then exact verification."""
+    from ..session import _conf_int
+
     # --- leaf-grain CANDIDATE generation: inside each leaf a numpy
     # replicas·homesᵀ matmul nominates the pairs at cosine ≥ threshold
     # − margin, so the exact verify join only ships vectors for an
@@ -1966,7 +1968,9 @@ def _hier_tail(base, home, rep, id_type, *, threshold: float, dim: int,
     # invariant to the count.
     tail_parts = _tail_partition_floor(
         n_rows, mean_rep, dim,
-        int(base.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+        # 200 is Spark's own default for the conf.
+        _conf_int(base.sparkSession.conf, "spark.sql.shuffle.partitions",
+                  200))
     cands = (
         (tagged.repartition(tail_parts, "leaf_id") if tail_parts
          else tagged.repartition("leaf_id"))

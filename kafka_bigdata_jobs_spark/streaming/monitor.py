@@ -19,10 +19,21 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 @dataclass
 class BatchProgress:
+    """One trigger's progress event.  The rates are rows/s as Spark
+    reports them (NaN when a rate has no interval yet); a query falls
+    behind while ``input_rows_per_s`` exceeds ``processed_rows_per_s``.
+    State figures sum every stateful operator; ``watermark`` is Spark's
+    ISO-8601 string, or None before the first one."""
+
     query_id: str
     batch_id: int
     num_input_rows: int
     duration_ms: int | None
+    input_rows_per_s: float
+    processed_rows_per_s: float
+    state_rows_total: int
+    state_memory_bytes: int
+    watermark: str | None
 
 
 @dataclass
@@ -42,12 +53,18 @@ class ProgressRecorder(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
+        ops = p.stateOperators or []
         self.records.append(
             BatchProgress(
                 query_id=str(p.id),
                 batch_id=p.batchId,
                 num_input_rows=p.numInputRows,
                 duration_ms=(p.durationMs or {}).get("triggerExecution"),
+                input_rows_per_s=p.inputRowsPerSecond,
+                processed_rows_per_s=p.processedRowsPerSecond,
+                state_rows_total=sum(op.numRowsTotal for op in ops),
+                state_memory_bytes=sum(op.memoryUsedBytes for op in ops),
+                watermark=(p.eventTime or {}).get("watermark"),
             )
         )
 

@@ -39,6 +39,33 @@ class Query:
 
 _REGISTRY: dict[str, Query] = {}
 
+#: Headline cross-section of the registry (joins, windows, dedup/ANN,
+#: text, TPC-H heavies): ``bench.py`` prints these queries' timings --
+#: few enough that its final stdout line fits the driver's ~2000-char
+#: capture tail -- and ``tools/capture_plans.py --all-headline``
+#: captures their plans.
+HEADLINE = [
+    "pricing_summary", "customer_order_revenue", "region_revenue",
+    "shipping_priority_q3", "big_orders_q18", "waiting_suppliers_q21",
+    "weekly_retention_cohorts", "user_sessions", "windowed_events_batch",
+    "top3_events_per_type", "monthly_rollup", "near_dup_pairs_minhash",
+    "simhash_near_dups", "similarity_topk_bruteforce",
+    "similarity_topk_ivf", "quality_histogram",
+    "repetition_quality_flags", "token_stats", "lang_id_eval",
+    "weekly_uniques_hll_mergeable", "doc_fingerprints",
+    "sentiment_distribution", "tfidf_top_terms", "similarity_topk_pq",
+    "embedding_dedup_retention", "weekly_value_quantiles_kll",
+    "near_dup_incremental", "boilerplate_segments",
+    "session_window_rollup", "orders_quality_gate",
+    "ml_quality_filter", "customer_supplier_pagerank",
+    "embedding_pca_variance", "term_cooccurrence_lift",
+    "dup_span_profile", "substring_dedup_retention",
+    "decontamination_cut_plan", "codec_parity_report",
+    "cdc_snapshot_apply", "quality_filter_auc", "dsir_selection_report",
+    "bm25_top_docs", "hybrid_rrf_search", "heavy_hitters_census",
+    "daily_spend_gapfilled", "weighted_sample_report",
+]
+
 #: DuckDB types SUM(<integer>) as HUGEINT (int128) while Spark emits
 #: BIGINT.  The values are identical, but a driver that hashes
 #: stringified pandas frames sees HUGEINT rendered as float64

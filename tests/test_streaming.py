@@ -258,7 +258,8 @@ def test_complete_mode_running_aggregate(spark):
 
 def test_progress_listener_records_batches(spark, tmp_path):
     """ProgressRecorder sees every micro-batch with its input-row count;
-    totals reconcile with the source row count exactly."""
+    totals reconcile with the source row count exactly.  The stateful
+    windowed count also reports rates, state size and the watermark."""
     import time
 
     from kafka_bigdata_jobs_spark.schemas import load_table
@@ -278,7 +279,13 @@ def test_progress_listener_records_batches(spark, tmp_path):
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
+            # Testdata ts is TIMESTAMP_NTZ; a watermark needs TIMESTAMP.
+            .withColumn("ts", F.col("ts").cast("timestamp"))
+            .withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 day"))
+            .count()
             .writeStream.format("noop")
+            .outputMode("append")
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)
             .start()
@@ -292,5 +299,12 @@ def test_progress_listener_records_batches(spark, tmp_path):
         spark.streams.removeListener(rec)
 
     assert rec.total_rows() == ev.count()
-    assert len([r for r in rec.records if r.num_input_rows > 0]) == 3
+    data = [r for r in rec.records if r.num_input_rows > 0]
+    assert len(data) == 3
     assert all(r.duration_ms is not None for r in rec.records)
+    assert all(r.processed_rows_per_s > 0 for r in data)
+    assert all(r.input_rows_per_s >= 0 for r in data[1:])  # NaN fails
+    assert max(r.state_rows_total for r in rec.records) > 0
+    assert all(r.state_memory_bytes > 0 for r in data)
+    # The watermark starts at the epoch and then follows the event times.
+    assert rec.records[-1].watermark > "1970-01-01T00:00:00.000Z"

@@ -20,30 +20,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from kafka_bigdata_jobs_spark import suite  # noqa: E402
 from kafka_bigdata_jobs_spark.session import get_spark  # noqa: E402
 
-#: The bench headline cross-section (bench.py HEADLINE) — plan captures
-#: default to the queries whose timings the driver publishes.
-HEADLINE_DEFAULT = [
-    "pricing_summary", "customer_order_revenue", "region_revenue",
-    "shipping_priority_q3", "big_orders_q18", "waiting_suppliers_q21",
-    "weekly_retention_cohorts", "user_sessions", "windowed_events_batch",
-    "top3_events_per_type", "monthly_rollup", "near_dup_pairs_minhash",
-    "simhash_near_dups", "similarity_topk_bruteforce",
-    "similarity_topk_ivf", "quality_histogram",
-    "repetition_quality_flags", "token_stats", "lang_id_eval",
-    "weekly_uniques_hll_mergeable", "doc_fingerprints",
-    "sentiment_distribution", "tfidf_top_terms", "similarity_topk_pq",
-    "embedding_dedup_retention", "weekly_value_quantiles_kll",
-    "near_dup_incremental", "boilerplate_segments",
-    "session_window_rollup", "orders_quality_gate",
-    "ml_quality_filter", "customer_supplier_pagerank",
-    "embedding_pca_variance", "term_cooccurrence_lift",
-    "dup_span_profile", "substring_dedup_retention",
-    "decontamination_cut_plan", "codec_parity_report",
-    "cdc_snapshot_apply", "quality_filter_auc", "dsir_selection_report",
-    "bm25_top_docs", "hybrid_rrf_search", "heavy_hitters_census",
-    "daily_spend_gapfilled", "weighted_sample_report",
-]
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -57,7 +33,7 @@ def main() -> None:
 
     names = list(args.queries)
     if args.all_headline:
-        names += [n for n in HEADLINE_DEFAULT if n not in names]
+        names += [n for n in suite.HEADLINE if n not in names]
     if not names:
         ap.error("no queries given (or use --all-headline)")
 
