@@ -2,7 +2,7 @@
 
 PY ?= python
 
-.PHONY: test bench bench-quiet perfbench-smoke correctness-local correctness-local-incr coverage scaledata scaleprobe ann-recall-scale embpairs-probe embpairs-fit-ceiling
+.PHONY: test bench perfbench-smoke correctness-local correctness-local-incr coverage queries-md scaledata scaleprobe scaleprobe-cold embpairs-probe embpairs-fit-ceiling round-numbers ann-recall-scale
 
 test:
 	$(PY) -m pytest tests/ -x -q
@@ -14,13 +14,6 @@ bench:
 # every run must print its metrics and report correct: true.
 perfbench-smoke:
 	$(PY) -m pytest perfbench/test_smoke.py -q
-
-# Quiet-host twin of `bench`: writes BENCH_quiet.json, which the driver
-# never clobbers.  tests/test_scaling_exponents.py takes the per-query
-# MIN of both sf0.1 artifacts so one stall-inflated driver run can't
-# push sub-threshold queries over the probe-enrollment bar.
-bench-quiet:
-	SPARK_GRAFT_BENCH_OUT=BENCH_quiet.json $(PY) bench.py
 
 # Regenerate the full repo-side correctness matrix: EVERY registered
 # query, strict (driver-discipline) comparison vs DuckDB at sf0.001 and

@@ -1,23 +1,34 @@
 #!/usr/bin/env python
-"""Benchmark harness: run the suite's headline queries at sf0.1.
+"""Benchmark harness: run the suite's registry queries at sf0.1.
 
 Prints ONE JSON line:
 ``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}``
 
 The driver records only the TAIL of stdout (~2000 chars), so the printed
 line carries a HEADLINE subset of per-query timings and must stay small;
-the full per-query timing map is written to ``BENCH_local.json`` next to
-this file (round-1 BENCH artifact was unparseable because the full map
-overflowed the driver's capture window).
+the full record is written to ``BENCH_local.json`` next to this file
+(round-1 BENCH artifact was unparseable because the full map overflowed
+the driver's capture window).
+
+Every number in the artifact comes from this one run:
+
+- ``queries``: each query's min over this run's attempts (s);
+  ``value`` is their sum and ``n_queries`` their count;
+- ``attempts``: every timed attempt per query, so each minimum can be
+  checked;
+- ``cold_builds`` / ``cold_build_attempts``: the same pair for the
+  one-time builds of the shared materialized intermediates;
+- ``sf``, and the host: ``cpus`` (the ``local[N]`` core count),
+  ``mem_total_mb`` and ``loadavg_1m`` (sampled as the run starts).
 
 Env: ``SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1),
-``SPARK_GRAFT_CPUS`` (default: the cores this process may run on).
+``SPARK_GRAFT_CPUS`` (default: the cores this process may run on),
+``SPARK_GRAFT_BENCH_OUT`` (artifact path, default ``BENCH_local.json``;
+a relative path is anchored next to this file).
 """
 
 from __future__ import annotations
 
-import glob
-import hashlib
 import json
 import os
 import re
@@ -27,33 +38,18 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kafka_bigdata_jobs_spark import suite  # noqa: E402
-from kafka_bigdata_jobs_spark.session import get_spark, host_conf  # noqa: E402
-
-
-def _code_sig(here: str) -> str:
-    """Content hash of the engine + this harness: two bench artifacts
-    may only min-merge when they measured identical code (a stale
-    pre-change minimum must never mask a regression)."""
-    h = hashlib.sha256()
-    paths = sorted(
-        glob.glob(os.path.join(here, "kafka_bigdata_jobs_spark", "**", "*.py"),
-                  recursive=True)
-    ) + [os.path.join(here, "bench.py")]
-    for p in paths:
-        h.update(os.path.relpath(p, here).encode())
-        with open(p, "rb") as fh:
-            h.update(fh.read())
-    return h.hexdigest()[:16]
+from kafka_bigdata_jobs_spark.session import (  # noqa: E402
+    _mem_total_mb, get_spark, host_conf)
 
 
 def main() -> None:
+    loadavg_1m = round(os.getloadavg()[0], 2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     spark = get_spark("kbj-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    timings: dict[str, float] = {}
     # Warm the JVM + parquet footer caches once with the flagship query so
     # per-query numbers measure the engine, not first-touch JIT.
     suite.registry()["pricing_summary"].fn(spark, sf_dir).collect()
@@ -89,21 +85,19 @@ def main() -> None:
         memo.clear()  # genuinely cold: rebuild incl. eager counts
         t0 = time.perf_counter()
         get().write.mode("overwrite").format("noop").save()
-        return time.perf_counter() - t0
+        return round(time.perf_counter() - t0, 3)
 
-    cold_builds: dict[str, float] = {}
+    cold_attempts: dict[str, list[float]] = {}
     warm_by_query = {}
     for fam, (get, memo, members) in SHARED_FAMILIES.items():
         # min over attempts (r5 ADVICE): cold builds were the one timed
         # number with no stall escape, so one 1s<->50s host stall landed
         # permanently in the committed artifact.  Two attempts always;
         # a third only when they disagree enough to suspect a stall.
-        a = cold_once(get, memo)
-        b = cold_once(get, memo)
-        dt = min(a, b)
-        if abs(a - b) > 0.25 * dt:
-            dt = min(dt, cold_once(get, memo))
-        cold_builds[fam] = round(dt, 3)
+        tries = [cold_once(get, memo), cold_once(get, memo)]
+        if abs(tries[0] - tries[1]) > 0.25 * min(tries):
+            tries.append(cold_once(get, memo))
+        cold_attempts[fam] = tries
         for name in members:
             warm_by_query[name] = get
 
@@ -135,58 +129,19 @@ def main() -> None:
             # noop sink materializes every row (unlike count(), which can
             # skip projections) without writing anything.
             df.write.mode("overwrite").format("noop").save()
-        return time.perf_counter() - t0
+        return round(time.perf_counter() - t0, 3)
 
+    attempts: dict[str, list[float]] = {}
     for name, q in sorted(suite.registry().items()):
-        dt = run_once(name, q)
-        attempts = 1
-        while dt > RETRY_OVER and attempts < MAX_ATTEMPTS:
-            dt = min(dt, run_once(name, q))
-            attempts += 1
-        timings[name] = round(dt, 3)
+        tries = [run_once(name, q)]
+        while min(tries) > RETRY_OVER and len(tries) < MAX_ATTEMPTS:
+            tries.append(run_once(name, q))
+        attempts[name] = tries
 
-    # Same-code min-merge (r5 verdict item 3): the committed artifacts
-    # should carry steady-state per-query numbers, not whichever run
-    # happened last.  Merge per-query minima from any prior artifact
-    # (the out-path's own previous run AND the quiet/driver twin) that
-    # measured the SAME code at the SAME sf ON THE SAME CORE COUNT —
-    # the code signature gates the merge so a plan change always
-    # invalidates old numbers (the same rule tools/scaleprobe.py
-    # applies to probe rows), and the cpus gate (r9 verdict item 2)
-    # keeps the driver's low-core scaling runs from inheriting 32-core
-    # minima: r9's SPARK_GRAFT_CPUS=8 run folded in committed 32-core
-    # numbers (27/46 timings bit-identical across the two artifacts)
-    # and the driver's scaling probe measured the merge, not
-    # parallelism.  Off-default core counts also write to a
-    # cpus-suffixed artifact so they never clobber the 32-core minima.
-    here = os.path.dirname(os.path.abspath(__file__))
-    code_sig = _code_sig(here)
-    cpus = host_conf()[0]
-    timings_raw = dict(timings)  # this run's own cold numbers, pre-merge
-    default_out = ("BENCH_local.json" if cpus == 32
-                   else f"BENCH_local_c{cpus}.json")
-    out_name = os.environ.get("SPARK_GRAFT_BENCH_OUT") or default_out
-    for prior_name in {out_name, default_out, "BENCH_quiet.json"}:
-        try:
-            with open(os.path.join(here, prior_name), encoding="utf-8") as fh:
-                prior = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if (prior.get("sf") != sf or prior.get("code_sig") != code_sig
-                or prior.get("cpus") != cpus):
-            continue
-        for k, v in prior.get("queries", {}).items():
-            if k in timings:
-                timings[k] = min(timings[k], v)
-        for k, v in prior.get("cold_builds", {}).items():
-            if k in cold_builds:
-                cold_builds[k] = min(cold_builds[k], v)
-    total = round(sum(timings.values()), 3)
-    total_raw = round(sum(timings_raw.values()), 3)
-
+    timings = {k: min(v) for k, v in attempts.items()}
     payload = {
         "metric": "suite_wall_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": {k: timings[k] for k in suite.HEADLINE if k in timings},
         "sf": sf,
@@ -194,24 +149,16 @@ def main() -> None:
         # One-time cold costs of the shared materialized intermediates,
         # named separately from the warm consumer timings (r4 verdict
         # item 3: both numbers documented, deterministically).
-        "cold_builds": cold_builds,
-        # THIS run's own pre-merge suite total (r9 verdict item 2): the
-        # uncontaminated cold number the driver always gets, whatever
-        # committed minima the merge folded in.  The full pre-merge
-        # per-query map is in the artifact file as "queries_raw"
-        # (the printed line must fit the driver's ~2000-char tail).
-        "value_raw": total_raw,
-        "cpus": cpus,
+        "cold_builds": {k: min(v) for k, v in cold_attempts.items()},
+        "cpus": host_conf()[0],
+        "mem_total_mb": _mem_total_mb(),
+        "loadavg_1m": loadavg_1m,
     }
-    full = dict(payload, queries=timings, queries_raw=timings_raw,
-                code_sig=code_sig)
-    # SPARK_GRAFT_BENCH_OUT lets `make bench-quiet` write the committed
-    # quiet-host artifact (BENCH_quiet.json) without racing the
-    # driver's own BENCH_local.json clobber (r4 verdict item 1).  A
-    # relative value is anchored next to this file — same contract as
-    # the default — so the artifact can't silently land in a foreign
-    # CWD where the CI fixture would read a stale committed copy.
-    out_path = os.path.join(here, out_name)
+    full = dict(payload, queries=timings, attempts=attempts,
+                cold_build_attempts=cold_attempts)
+    out_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        os.environ.get("SPARK_GRAFT_BENCH_OUT") or "BENCH_local.json")
     try:
         with open(out_path, "w") as fh:
             json.dump(full, fh, indent=1, sort_keys=True)

@@ -98,34 +98,26 @@ def _cpu_has_avx2_fma() -> bool:
 #: ONE-time first-touch).  Raising mmap+trim thresholds keeps freed
 #: large blocks in the arena, warm and reusable.  Cost: worker RSS
 #: retains its high-water mark (bounded by each pass's own chunking,
-#: ~0.5-1 GB/worker in this engine).  Override via
-#: SPARK_GRAFT_MALLOC_THRESHOLD (bytes; "0" disables the tuning).
+#: ~0.5-1 GB/worker in this engine).
 _MALLOC_THRESHOLD = 256 << 20
 
-
-def _malloc_threshold() -> int:
-    try:
-        return int(os.environ.get("SPARK_GRAFT_MALLOC_THRESHOLD", "")
-                   or _MALLOC_THRESHOLD)
-    except ValueError:
-        return _MALLOC_THRESHOLD
+#: OpenBLAS threads per Python worker: N workers x N-thread default
+#: pools oversubscribe N-fold; 2 measured best (see module docstring).
+_WORKER_BLAS_THREADS = 2
 
 
 def _tune_malloc_in_process() -> None:
     """Apply the thresholds to THIS process via mallopt (the MALLOC_*
     env vars are only read at process startup, so exporting them helps
     future workers but not an already-running driver)."""
-    thr = _malloc_threshold()
-    if not thr:
-        return
     try:
         import ctypes
 
         libc = ctypes.CDLL(None, use_errno=True)
         # glibc mallopt param numbers: M_TRIM_THRESHOLD=-1,
         # M_MMAP_THRESHOLD=-3 (stable public ABI)
-        libc.mallopt(-3, ctypes.c_int(thr))
-        libc.mallopt(-1, ctypes.c_int(thr))
+        libc.mallopt(-3, ctypes.c_int(_MALLOC_THRESHOLD))
+        libc.mallopt(-1, ctypes.c_int(_MALLOC_THRESHOLD))
     except Exception:
         pass  # non-glibc platform: defaults stand
 
@@ -152,7 +144,8 @@ def fix_openblas_env() -> None:
     if ("pyspark.daemon" in sys.modules or "pyspark.worker" in sys.modules):
         # Python worker fallback path (driver env not inherited, e.g. an
         # externally-created JVM): bound the per-worker BLAS pool.
-        os.environ.setdefault("OPENBLAS_NUM_THREADS", "2")
+        os.environ.setdefault("OPENBLAS_NUM_THREADS",
+                              str(_WORKER_BLAS_THREADS))
     # Latch the (possibly fixed) env into this process's numpy now, so a
     # later get_spark() can export worker-only thread limits without
     # affecting the driver's own BLAS pool.
@@ -169,18 +162,14 @@ def export_worker_env() -> dict[str, str]:
     env: dict[str, str] = {}
     if os.environ.get("OPENBLAS_CORETYPE"):
         env["OPENBLAS_CORETYPE"] = os.environ["OPENBLAS_CORETYPE"]
-    # N workers x N-thread default pools oversubscribe N-fold; 2 threads
-    # per worker measured best (see module docstring).  The driver's own
-    # numpy was already initialized by fix_openblas_env(), so mutating
-    # os.environ here cannot shrink the driver pool.
-    env["OPENBLAS_NUM_THREADS"] = os.environ.get(
-        "SPARK_GRAFT_WORKER_BLAS_THREADS", "2")
+    # The driver's own numpy was already initialized by
+    # fix_openblas_env(), so mutating os.environ here cannot shrink the
+    # driver pool.
+    env["OPENBLAS_NUM_THREADS"] = str(_WORKER_BLAS_THREADS)
     # glibc reads MALLOC_* env at process startup, so exporting here
     # reaches the pyspark daemon (and its forked workers) launched by
     # the JVM — the in-process driver twin is _tune_malloc_in_process.
-    thr = _malloc_threshold()
-    if thr:
-        env.setdefault("MALLOC_MMAP_THRESHOLD_", str(thr))
-        env.setdefault("MALLOC_TRIM_THRESHOLD_", str(thr))
+    env["MALLOC_MMAP_THRESHOLD_"] = str(_MALLOC_THRESHOLD)
+    env["MALLOC_TRIM_THRESHOLD_"] = str(_MALLOC_THRESHOLD)
     os.environ.update(env)
     return env

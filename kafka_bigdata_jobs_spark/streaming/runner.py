@@ -73,6 +73,45 @@ def _recover_swap(state_dir: str) -> None:
                 "next batch", orphan)
 
 
+#: The last-applied batch_id, persisted INSIDE each state dir so it
+#: rides the same swap as the data ("_"-prefixed files are invisible to
+#: parquet readers, like _SUCCESS).
+_MARKER = "_last_batch"
+
+
+def _last_applied(state_dir: str) -> int | None:
+    """batch_id of the fold that produced ``state_dir``, or None."""
+    import pathlib
+
+    try:
+        return int((pathlib.Path(state_dir) / _MARKER).read_text().strip())
+    except (OSError, ValueError):
+        return None
+
+
+def _commit_state(state_dir: str, merged: DataFrame, batch_id: int) -> None:
+    """Write ``merged`` to a fresh ``__next_*`` sibling, mark it with
+    ``batch_id`` and swap it into ``state_dir`` (the protocol
+    :func:`_recover_swap` repairs after a crash)."""
+    import pathlib
+    import shutil
+    import uuid
+
+    base = state_dir.rstrip("/")
+    tmp = f"{base}__next_{uuid.uuid4().hex[:8]}"
+    merged.write.mode("overwrite").parquet(tmp)
+    # Marker rides inside the new state dir => applied atomically with
+    # the data.
+    (pathlib.Path(tmp) / _MARKER).write_text(str(batch_id))
+    if pathlib.Path(state_dir).exists():
+        old = f"{base}__old_{uuid.uuid4().hex[:8]}"
+        shutil.move(state_dir, old)
+        shutil.move(tmp, state_dir)
+        shutil.rmtree(old)
+    else:
+        shutil.move(tmp, state_dir)
+
+
 @dataclass
 class ParquetSink:
     path: str
@@ -224,47 +263,21 @@ class IncrementalViewSink:
     partials_fn: Callable[[DataFrame], DataFrame]
     merge_fn: Callable[[DataFrame, DataFrame], DataFrame]
 
-    _MARKER = "_last_batch"
-
-    def _last_applied(self) -> int | None:
-        import pathlib
-
-        marker = pathlib.Path(self.state_dir) / self._MARKER
-        try:
-            return int(marker.read_text().strip())
-        except (OSError, ValueError):
-            return None
-
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         import pathlib
-        import shutil
-        import uuid
 
         _recover_swap(self.state_dir)
-        last = self._last_applied()
+        last = _last_applied(self.state_dir)
         if last is not None and batch_id <= last:
             return  # checkpoint replay of an already-folded batch
         spark = batch.sparkSession
         delta = self.partials_fn(batch)
-        state_path = pathlib.Path(self.state_dir)
-        if state_path.exists():
+        if pathlib.Path(self.state_dir).exists():
             state = spark.read.parquet(self.state_dir)
             merged = self.merge_fn(state, delta)
         else:
             merged = delta
-        tmp = f"{self.state_dir.rstrip('/')}__next_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        # Marker rides inside the new state dir => applied atomically
-        # with the data ("_"-prefixed files are invisible to parquet
-        # readers, like _SUCCESS).
-        (pathlib.Path(tmp) / self._MARKER).write_text(str(batch_id))
-        if state_path.exists():
-            old = f"{self.state_dir.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-            shutil.move(self.state_dir, old)
-            shutil.move(tmp, self.state_dir)
-            shutil.rmtree(old)
-        else:
-            shutil.move(tmp, self.state_dir)
+        _commit_state(self.state_dir, merged, batch_id)
 
 
 @dataclass
@@ -302,17 +315,7 @@ class CdcApplySink:
     seq_col: str = "seq"
     op_col: str = "op"
 
-    _MARKER = "_last_batch"
     _DELETED = "__deleted"
-
-    def _last_applied(self) -> int | None:
-        import pathlib
-
-        marker = pathlib.Path(self.state_dir) / self._MARKER
-        try:
-            return int(marker.read_text().strip())
-        except (OSError, ValueError):
-            return None
 
     @staticmethod
     def read_snapshot(spark, state_dir: str) -> DataFrame:
@@ -327,13 +330,11 @@ class CdcApplySink:
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         import pathlib
-        import shutil
-        import uuid
 
         from pyspark.sql import functions as F
 
         _recover_swap(self.state_dir)
-        last = self._last_applied()
+        last = _last_applied(self.state_dir)
         if last is not None and batch_id <= last:
             return
         spark = batch.sparkSession
@@ -347,8 +348,7 @@ class CdcApplySink:
             )
             .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in payload], "__seq")
         )
-        state_path = pathlib.Path(self.state_dir)
-        if state_path.exists():
+        if pathlib.Path(self.state_dir).exists():
             state = spark.read.parquet(self.state_dir)
             if self._DELETED not in state.columns:  # pre-tombstone state
                 state = state.withColumn(self._DELETED, F.lit(False))
@@ -384,13 +384,4 @@ class CdcApplySink:
             self._DELETED,
         )
         merged = kept.unionByName(winners.select(*state.columns))
-        tmp = f"{self.state_dir.rstrip('/')}__next_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        (pathlib.Path(tmp) / self._MARKER).write_text(str(batch_id))
-        if state_path.exists():
-            old = f"{self.state_dir.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-            shutil.move(self.state_dir, old)
-            shutil.move(tmp, self.state_dir)
-            shutil.rmtree(old)
-        else:
-            shutil.move(tmp, self.state_dir)
+        _commit_state(self.state_dir, merged, batch_id)

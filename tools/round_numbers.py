@@ -24,24 +24,18 @@ def _load(name: str) -> dict:
 
 
 def main() -> None:
-    local, quiet = _load("BENCH_local.json"), _load("BENCH_quiet.json")
     lines = []
-    for label, art in (("BENCH_local", local), ("BENCH_quiet", quiet)):
-        if art:
-            lines.append(
-                f"- {label}.json: {art['value']} s / {art['n_queries']} "
-                f"queries ({art['value'] / art['n_queries']:.2f} s/query) "
-                f"at sf{art['sf']}, code_sig {art.get('code_sig', '?')[:12]}, "
-                f"cold_builds "
-                + ", ".join(f"{k} {v} s"
-                            for k, v in sorted(
-                                art.get("cold_builds", {}).items())))
-    if local and quiet and local.get("code_sig") == quiet.get("code_sig"):
-        merged = {k: min(v, quiet["queries"].get(k, v))
-                  for k, v in local["queries"].items()}
+    art = _load("BENCH_local.json")
+    if art:
         lines.append(
-            f"- same-sig min-merge of both: {round(sum(merged.values()), 3)}"
-            f" s / {len(merged)} queries")
+            f"- BENCH_local.json: {art['value']} s / {art['n_queries']} "
+            f"queries ({art['value'] / art['n_queries']:.2f} s/query) "
+            f"at sf{art['sf']} on {art.get('cpus')} cpus, "
+            f"{art.get('mem_total_mb')} MB, load {art.get('loadavg_1m')}; "
+            "cold_builds "
+            + ", ".join(f"{k} {v} s"
+                        for k, v in sorted(
+                            art.get("cold_builds", {}).items())))
     scaling = _load("SCALING.json")
     hier = scaling.get("operator_variants", {}).get(
         "embedding_near_dup_pairs_hier", {})
