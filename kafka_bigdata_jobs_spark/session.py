@@ -110,6 +110,31 @@ def _conf_int(conf, key: str, default: int) -> int:
         return default
 
 
+def _local_conf(master: str) -> dict[str, str]:
+    """Confs :func:`get_spark` sets only when ``master`` is ``local*``.
+
+    Spark's default checkpoint manager renames through FileContext,
+    whose local ``rename`` calls ``getFileLinkStatus`` up to four
+    times; without ``libhadoop`` each call forks a ``readlink``
+    process.  Every streaming checkpoint file (offset and commit log
+    entries, state ``.delta`` files and their checksums) is written to
+    a temp file and renamed, so a stateful trigger spent most of its
+    state commit forking.  The FileSystem manager renames through the
+    two-argument ``FileSystem.rename`` (``File.renameTo`` locally) and
+    keeps the same temp-file-then-rename write and Spark's checksum
+    files.  Not in :data:`RUNTIME_CONF`: that also applies to external,
+    possibly non-local sessions, where FileContext's rename can be
+    stronger (HDFS).  ``extra_conf`` wins over these, so a ``local*``
+    session that checkpoints to ``hdfs://`` can restore FileContext
+    there.
+    """
+    if not master.startswith("local"):
+        return {}
+    return {"spark.sql.streaming.checkpointFileManagerClass":
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"}
+
+
 def get_spark(
     app_name: str = "kafka-bigdata-jobs-spark",
     master: str | None = None,
@@ -166,6 +191,7 @@ def get_spark(
         # Cluster twin of the local-mode env inheritance above: python
         # workers on executors get the same guarded BLAS settings.
         **{f"spark.executorEnv.{k}": v for k, v in worker_env.items()},
+        **_local_conf(master),
         **(extra_conf or {}),
     }
     for k, v in conf.items():

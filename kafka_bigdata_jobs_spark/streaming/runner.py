@@ -20,6 +20,22 @@ from pyspark.storagelevel import StorageLevel
 Sink = Callable[[DataFrame, int], None]
 
 
+#: The last-applied batch_id, persisted INSIDE each state dir so it
+#: rides the same swap as the data ("_"-prefixed files are invisible to
+#: parquet readers, like _SUCCESS).
+_MARKER = "_last_batch"
+
+
+def _last_applied(state_dir: str) -> int | None:
+    """batch_id of the fold that produced ``state_dir``, or None."""
+    import pathlib
+
+    try:
+        return int((pathlib.Path(state_dir) / _MARKER).read_text().strip())
+    except (OSError, ValueError):
+        return None
+
+
 def _recover_swap(state_dir: str) -> None:
     """Crash-recovery sweep for the write-tmp-then-swap state protocol
     shared by :class:`IncrementalViewSink` and :class:`CdcApplySink`.
@@ -50,11 +66,9 @@ def _recover_swap(state_dir: str) -> None:
     import shutil
 
     def marker_of(d: str) -> int:
-        try:
-            with open(os.path.join(d, "_last_batch"), encoding="utf-8") as fh:
-                return int(fh.read().strip())
-        except (OSError, ValueError):
-            return -1  # pre-marker or corrupt dir: lowest priority
+        last = _last_applied(d)
+        # pre-marker or corrupt dir: lowest priority
+        return -1 if last is None else last
 
     base = state_dir.rstrip("/")
     # Lexicographic pre-sort makes marker ties (pre-marker/corrupt dirs,
@@ -71,22 +85,6 @@ def _recover_swap(state_dir: str) -> None:
             logging.getLogger(__name__).warning(
                 "orphan state dir %s survived cleanup; will retry on the "
                 "next batch", orphan)
-
-
-#: The last-applied batch_id, persisted INSIDE each state dir so it
-#: rides the same swap as the data ("_"-prefixed files are invisible to
-#: parquet readers, like _SUCCESS).
-_MARKER = "_last_batch"
-
-
-def _last_applied(state_dir: str) -> int | None:
-    """batch_id of the fold that produced ``state_dir``, or None."""
-    import pathlib
-
-    try:
-        return int((pathlib.Path(state_dir) / _MARKER).read_text().strip())
-    except (OSError, ValueError):
-        return None
 
 
 def _commit_state(state_dir: str, merged: DataFrame, batch_id: int) -> None:

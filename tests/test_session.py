@@ -1,7 +1,8 @@
-"""Session helpers: conf parsing, and the local-session Python worker
-launcher -- workers import the compiled pyspark the driver uses instead
-of ``$SPARK_HOME``'s bytecode-less ``pyspark.zip``, and every case
-outside the guard keeps the stock ``sc.pythonExec``."""
+"""Session helpers: conf parsing, the local-session checkpoint manager,
+and the local-session Python worker launcher -- workers import the
+compiled pyspark the driver uses instead of ``$SPARK_HOME``'s
+bytecode-less ``pyspark.zip``, and every case outside the guard keeps
+the stock ``sc.pythonExec``."""
 
 from __future__ import annotations
 
@@ -16,11 +17,16 @@ import pyspark
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_bigdata_jobs_spark import _blas, session
 from kafka_bigdata_jobs_spark.session import (
     _conf_int,
     _zip_pyspark_version,
     install_worker_launcher,
 )
+
+CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FS_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+              "FileSystemBasedCheckpointFileManager")
 
 
 class _StubConf(dict):
@@ -42,6 +48,55 @@ def test_conf_int_on_live_conf(spark):
     assert _conf_int(spark.conf, "spark.sql.shuffle.partitions", 200) == int(
         spark.conf.get("spark.sql.shuffle.partitions"))
     assert _conf_int(spark.conf, "spark.sql.files.minPartitionNum", 7) == 7
+
+
+def test_local_session_uses_filesystem_checkpoint_manager(spark):
+    assert spark.conf.get(CKPT_MANAGER, None) == FS_MANAGER
+
+
+class _RecordingBuilder:
+    """``SparkSession.builder``'s chain as ``get_spark`` calls it,
+    recording the confs instead of starting a JVM."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, _name):
+        return self
+
+    def master(self, _master):
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        sc = SimpleNamespace(_kbj_launcher_checked=True)
+        return SimpleNamespace(sparkContext=sc)
+
+
+def _built_conf(monkeypatch, **kwargs) -> dict:
+    builder = _RecordingBuilder()
+    monkeypatch.setattr(session, "SparkSession",
+                        SimpleNamespace(builder=builder))
+    monkeypatch.setattr(_blas, "export_worker_env", lambda: {})
+    session.get_spark(**kwargs)
+    return builder.conf
+
+
+def test_checkpoint_manager_only_on_local_masters(monkeypatch):
+    for master in ("spark://host:7077", "yarn", "k8s://https://host:443"):
+        assert CKPT_MANAGER not in _built_conf(monkeypatch, master=master)
+    assert _built_conf(monkeypatch, master="local[2]")[CKPT_MANAGER] == FS_MANAGER
+
+
+def test_extra_conf_overrides_checkpoint_manager(monkeypatch):
+    fc = ("org.apache.spark.sql.execution.streaming.checkpointing."
+          "FileContextBasedCheckpointFileManager")
+    conf = _built_conf(monkeypatch, master="local[2]",
+                       extra_conf={CKPT_MANAGER: fc})
+    assert conf[CKPT_MANAGER] == fc
 
 
 def _fake_spark_home(root, version: str) -> str:

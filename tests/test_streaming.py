@@ -33,30 +33,37 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-@pytest.fixture(scope="module")
-def events_stream_dir(spark):
-    """Events fixture as 4 time-ordered parquet files → 4 in-order
-    micro-batches (written sequentially so file mod-times ascend with
-    event time; out-of-order files would look like late data and be
-    watermark-dropped, which is NOT what this test exercises)."""
+def _append_time_quarters(spark, d: str, which: range) -> None:
+    """Append the events fixture's time quartiles ``which`` (of 0-3) to
+    ``d``, one parquet file each, in time order (written sequentially so
+    file mod-times ascend with event time; out-of-order files would look
+    like late data and be watermark-dropped)."""
     import time
 
-    d = tempfile.mkdtemp(prefix="events_stream_")
     ev = load_table(spark, SF, "events").cache()
     bounds = ev.selectExpr(
         "percentile(cast(cast(ts as timestamp) as double), array(0.25, 0.5, 0.75)) as q"
     ).first()["q"]
-    lo = None
-    for i, hi in enumerate([*bounds, None]):
+    edges = [None, *bounds, None]
+    ts = F.col("ts").cast("timestamp").cast("double")
+    for i in which:
+        lo, hi = edges[i], edges[i + 1]
         part = ev
         if lo is not None:
-            part = part.where(F.col("ts").cast("timestamp").cast("double") >= lo)
+            part = part.where(ts >= lo)
         if hi is not None:
-            part = part.where(F.col("ts").cast("timestamp").cast("double") < hi)
+            part = part.where(ts < hi)
         part.coalesce(1).write.mode("append").parquet(d)
         time.sleep(1.1)  # distinct mod-times → deterministic file order
-        lo = hi
     ev.unpersist()
+
+
+@pytest.fixture(scope="module")
+def events_stream_dir(spark):
+    """Events fixture as 4 time-ordered parquet files → 4 in-order
+    micro-batches."""
+    d = tempfile.mkdtemp(prefix="events_stream_")
+    _append_time_quarters(spark, d, range(4))
     return d
 
 
@@ -223,6 +230,52 @@ def test_checkpoint_restart_exactly_once(spark):
     got = spark.read.schema(quarters[0].schema).parquet(out)
     assert got.count() == ev.count()  # no duplicates, no loss
     assert got.select("event_id").distinct().count() == ev.count()
+
+
+def test_stateful_checkpoint_restart(spark, tmp_path):
+    """A watermarked windowed count drains half its input, stops, and
+    restarts on the same checkpoint with the rest: windows open at the
+    stop come back from the state store, so every emitted row is a
+    batch row, none is emitted twice, and every window closed by the
+    final watermark is there.  Every state ``<v>.delta`` keeps Spark's
+    ``<v>.delta.crc`` checksum file."""
+    import glob
+    import os
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    sink = MemorySink()
+    for half in (range(2), range(2, 4)):
+        _append_time_quarters(spark, src, half)
+        stream = read_parquet_stream(spark, src, EVENTS_SCHEMA)
+        q = run_multi_sink(_windowed_counts(stream), [sink], checkpoint=ckpt)
+        q.awaitTermination(120)
+        assert q.exception() is None
+    watermark = max(p["eventTime"]["watermark"] for p in q.recentProgress
+                    if p["eventTime"].get("watermark"))
+
+    batch = _windowed_counts(load_table(spark, SF, "events"))
+    expected = {
+        (r["window_start"], r["event_type"]): (r["n_events"], r["value_cents"])
+        for r in batch.collect()
+    }
+    closed = {
+        (r["window_start"], r["event_type"])
+        for r in batch.where(
+            F.col("window_end") <= F.lit(watermark).cast("timestamp")).collect()
+    }
+    got = [((r["window_start"], r["event_type"]), (r["n_events"], r["value_cents"]))
+           for r in sink.rows]
+    assert len(sink.batches) > 2
+    assert len({k for k, _ in got}) == len(got), "window emitted twice"
+    for k, v in got:
+        assert expected.get(k) == v, f"window {k}: stream={v} batch={expected.get(k)}"
+    assert closed, "final watermark closed no window"
+    assert closed <= {k for k, _ in got}
+
+    deltas = glob.glob(os.path.join(ckpt, "state", "*", "*", "*.delta"))
+    assert deltas
+    for delta in deltas:
+        assert os.path.exists(delta + ".crc"), delta
 
 
 def test_complete_mode_running_aggregate(spark):
