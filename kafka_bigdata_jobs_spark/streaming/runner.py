@@ -16,6 +16,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
+from ..sinks import _atomic_swap_dir, _next_version_dir, write_parquet
+
 #: A sink receives (micro-batch DataFrame, batch_id).
 Sink = Callable[[DataFrame, int], None]
 
@@ -36,78 +38,35 @@ def _last_applied(state_dir: str) -> int | None:
         return None
 
 
-def _recover_swap(state_dir: str) -> None:
-    """Crash-recovery sweep for the write-tmp-then-swap state protocol
-    shared by :class:`IncrementalViewSink` and :class:`CdcApplySink`.
-
-    The swap is two non-atomic moves (``state → __old_*`` then
-    ``__next_* → state``); a crash between them leaves NO ``state_dir``
-    and, previously, the next invocation took the first-run branch and
-    silently rebuilt from an empty snapshot — silent loss of every
-    prior key.  Now, run at the top of every ``__call__``:
-
-    - ``state_dir`` missing but ``__old_*`` siblings exist → the
-      sibling with the HIGHEST ``_last_batch`` marker is the last
-      complete state; restore it.  (Multiple ``__old_*`` dirs can
-      coexist when a superseded dir survived a failed delete and a
-      later crash mid-swap left another — the uuid-hex dir names sort
-      arbitrarily, so the marker, which rides inside the dir, is the
-      only valid recency order; ADVICE r4.)  The interrupted batch is
-      redelivered by the streaming checkpoint and reapplies on top.
-    - any remaining ``__next_*`` (written but never swapped in — its
-      batch redelivers) or ``__old_*`` (superseded state whose cleanup
-      was interrupted after a completed swap) is deleted; a failed
-      delete is logged (NOT ignored) so the stale dir can't silently
-      become tomorrow's wrong recovery source.
-    """
+def _state_exists(state_dir: str) -> bool:
+    """Whether ``state_dir`` holds state.  A ``<state_dir>__old_*`` left
+    without ``state_dir`` by a crash inside the older two-move swap
+    raises instead of silently restarting from empty."""
     import glob
-    import logging
     import os
-    import shutil
 
-    def marker_of(d: str) -> int:
-        last = _last_applied(d)
-        # pre-marker or corrupt dir: lowest priority
-        return -1 if last is None else last
-
-    base = state_dir.rstrip("/")
-    # Lexicographic pre-sort makes marker ties (pre-marker/corrupt dirs,
-    # all -1) deterministic — raw glob order is filesystem-dependent.
-    olds = sorted(sorted(glob.glob(base + "__old_*")),
-                  key=marker_of, reverse=True)
-    nexts = sorted(glob.glob(base + "__next_*"))
-    if not os.path.exists(base) and olds:
-        shutil.move(olds.pop(0), base)
-    for orphan in (*olds, *nexts):
-        try:
-            shutil.rmtree(orphan)
-        except OSError:
-            logging.getLogger(__name__).warning(
-                "orphan state dir %s survived cleanup; will retry on the "
-                "next batch", orphan)
+    if os.path.exists(state_dir):
+        return True
+    olds = sorted(glob.glob(glob.escape(state_dir.rstrip("/")) + "__old_*"))
+    if olds:
+        raise RuntimeError(f"{state_dir} is missing but {olds} survive a crashed swap; "
+                           f"move the one with the highest {_MARKER} back by hand")
+    return False
 
 
 def _commit_state(state_dir: str, merged: DataFrame, batch_id: int) -> None:
-    """Write ``merged`` to a fresh ``__next_*`` sibling, mark it with
-    ``batch_id`` and swap it into ``state_dir`` (the protocol
-    :func:`_recover_swap` repairs after a crash)."""
+    """Write ``merged`` to the idle A/B version dir, mark it with
+    ``batch_id`` and flip ``state_dir``'s symlink to it.  A crash before
+    the flip leaves the live version untouched; the next commit
+    overwrites whatever the crash left in the idle dir."""
     import pathlib
-    import shutil
-    import uuid
 
-    base = state_dir.rstrip("/")
-    tmp = f"{base}__next_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    # Marker rides inside the new state dir => applied atomically with
+    new_dir = _next_version_dir(state_dir)
+    merged.write.mode("overwrite").parquet(new_dir)
+    # Marker rides inside the new version => applied atomically with
     # the data.
-    (pathlib.Path(tmp) / _MARKER).write_text(str(batch_id))
-    if pathlib.Path(state_dir).exists():
-        old = f"{base}__old_{uuid.uuid4().hex[:8]}"
-        shutil.move(state_dir, old)
-        shutil.move(tmp, state_dir)
-        shutil.rmtree(old)
-    else:
-        shutil.move(tmp, state_dir)
+    (pathlib.Path(new_dir) / _MARKER).write_text(str(batch_id))
+    _atomic_swap_dir(state_dir, new_dir)
 
 
 @dataclass
@@ -117,10 +76,7 @@ class ParquetSink:
     partition_by: tuple[str, ...] = ()
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        w = batch.write.mode(self.mode)
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        w.parquet(self.path)
+        write_parquet(batch, self.path, self.mode, self.partition_by)
 
 
 @dataclass
@@ -241,16 +197,16 @@ class IncrementalViewSink:
     Each micro-batch costs O(delta + touched state), never a rescan of
     history.  Two mechanisms combine for effectively-once:
 
-    - **Atomic-ish swap**: state is written to a fresh dir and moved
-      into place, so a crash mid-write leaves the previous state
-      intact.  (Racing *readers* can still observe a brief window with
-      no dir between the two moves — callers needing reader-atomicity
-      must quiesce readers; see sinks.compact_parquet_dir.)
+    - **Atomic swap**: ``state_dir`` is a symlink to ``<state_dir>__v_a``
+      or ``__v_b``; each fold is written to the idle version and the
+      link is flipped with one ``os.replace`` (sinks._atomic_swap_dir),
+      so a crash mid-write leaves the previous state intact and readers
+      never see a missing dir.
     - **batch_id idempotence**: foreachBatch is at-least-once — if the
       driver crashes AFTER the swap but BEFORE Spark commits the
       checkpoint offset, the same micro-batch is replayed against the
       POST-swap state and an additive merge would double-count.  The
-      last-applied batch_id is persisted INSIDE the state dir (a
+      last-applied batch_id is persisted INSIDE the version dir (a
       ``_last_batch`` file, carried by the same swap), and a replayed
       batch with ``batch_id <= last`` is a no-op.
 
@@ -262,15 +218,12 @@ class IncrementalViewSink:
     merge_fn: Callable[[DataFrame, DataFrame], DataFrame]
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        import pathlib
-
-        _recover_swap(self.state_dir)
         last = _last_applied(self.state_dir)
         if last is not None and batch_id <= last:
             return  # checkpoint replay of an already-folded batch
         spark = batch.sparkSession
         delta = self.partials_fn(batch)
-        if pathlib.Path(self.state_dir).exists():
+        if _state_exists(self.state_dir):
             state = spark.read.parquet(self.state_dir)
             merged = self.merge_fn(state, delta)
         else:
@@ -284,7 +237,7 @@ class CdcApplySink:
     onto a keyed parquet snapshot (the row-level counterpart of
     :class:`IncrementalViewSink`'s additive fold) — a Debezium-style
     change stream becomes a continuously-current table with no table
-    format.
+    format.  State commits through the same A/B symlink swap.
 
     The state carries a per-key ``__seq`` high-water mark, so the apply
     is ordered by the LOG SEQUENCE, not by arrival: a batch's per-key
@@ -327,11 +280,8 @@ class CdcApplySink:
         return snap
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        import pathlib
-
         from pyspark.sql import functions as F
 
-        _recover_swap(self.state_dir)
         last = _last_applied(self.state_dir)
         if last is not None and batch_id <= last:
             return
@@ -346,7 +296,7 @@ class CdcApplySink:
             )
             .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in payload], "__seq")
         )
-        if pathlib.Path(self.state_dir).exists():
+        if _state_exists(self.state_dir):
             state = spark.read.parquet(self.state_dir)
             if self._DELETED not in state.columns:  # pre-tombstone state
                 state = state.withColumn(self._DELETED, F.lit(False))

@@ -16,7 +16,13 @@ from pyspark.sql import types as T
 from kafka_bigdata_jobs_spark.schemas import load_table
 from kafka_bigdata_jobs_spark.sources.kafka import decode_json_events
 from kafka_bigdata_jobs_spark.sources.stream_files import read_parquet_stream
-from kafka_bigdata_jobs_spark.streaming.runner import MemorySink, ParquetSink, run_multi_sink
+from kafka_bigdata_jobs_spark.streaming.runner import (
+    ConsoleReportSink,
+    MemorySink,
+    ParquetSink,
+    run_multi_sink,
+    run_to_parquet,
+)
 from kafka_bigdata_jobs_spark.streaming.windows import windowed_agg
 
 SF = "/root/testdata/sf0.001"
@@ -115,6 +121,38 @@ def test_multi_sink_fanout(spark, events_stream_dir):
         n_parquet = spark.read.parquet(out).count()
     n = load_table(spark, SF, "events").count()
     assert len(mem1.rows) == len(mem2.rows) == n_parquet == n
+
+
+def test_console_report_sink_prints_bounded_rows(spark, tmp_path, capsys):
+    """The console report prints at most ``limit`` rows of a batch while
+    the fan-out still hands every row to the other sinks."""
+    src = str(tmp_path / "src")
+    spark.range(50).coalesce(1).write.parquet(src)
+    stream = read_parquet_stream(spark, src, T.StructType([T.StructField("id", T.LongType())]))
+    mem = MemorySink()
+    q = run_multi_sink(
+        stream, [ConsoleReportSink("t", limit=7), mem], checkpoint=str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(120)
+    lines = capsys.readouterr().out.splitlines()
+    assert [ln for ln in lines if ln.startswith("===")] == ["=== t [batch 0] (7 rows) ==="]
+    assert len([ln for ln in lines if ln.startswith("   {")]) == 7
+    assert sorted(r.id for r in mem.rows) == list(range(50))
+
+
+def test_run_to_parquet_restart_exactly_once(spark, tmp_path):
+    """``run_to_parquet`` drains a file stream, then restarts on the same
+    checkpoint after a new file lands: the output holds every input row
+    exactly once."""
+    ev = load_table(spark, SF, "events").select("event_id", "event_type")
+    halves = [ev.where(F.col("event_id") % 2 == i) for i in range(2)]
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    for half in halves:
+        half.coalesce(1).write.mode("append").parquet(src)
+        stream = read_parquet_stream(spark, src, ev.schema)
+        run_to_parquet(stream, out, ckpt).awaitTermination(120)
+    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    assert got == sorted(tuple(r) for r in ev.collect())
 
 
 def test_json_decode_malformed_to_nulls(spark):

@@ -4,11 +4,16 @@ Drains a file-source changelog with ``availableNow`` through
 ``CdcApplySink`` (one file per micro-batch) and checks the final
 parquet snapshot equals the sequential replay — including a stale
 redelivery (lower seq than the state's high-water mark for its key)
-that must be ignored, and a replayed batch_id that must no-op.
+that must be ignored, and a replayed batch_id that must no-op.  The
+crash tests build, by hand, each layout a crash can leave around the
+A/B version symlink the state commits through.
 """
 
 from __future__ import annotations
 
+import os
+import pathlib
+import shutil
 import tempfile
 import time
 
@@ -16,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_bigdata_jobs_spark.sinks import _next_version_dir
 from kafka_bigdata_jobs_spark.streaming.runner import CdcApplySink
 
 LOG_SCHEMA = T.StructType(
@@ -114,51 +120,82 @@ def test_stale_update_after_delete_stays_deleted(spark):
     assert _read_state(spark, state_dir) == {3: ("back", 31, 9)}
 
 
-def test_crashed_swap_recovers_from_old_dir(spark):
-    """ADVICE r3 (low): a crash between the two swap moves leaves only
-    __old_* — the next call must restore it, not rebuild from empty."""
-    import glob
-    import pathlib
-    import shutil
+def _assert_committed(spark, state_dir):
+    """FINAL is served through the version symlink, and the only
+    siblings left are the link and the one version it points at."""
+    assert _read_state(spark, state_dir) == FINAL
+    assert os.path.islink(state_dir)
+    siblings = sorted(os.listdir(os.path.dirname(state_dir)))
+    assert siblings == ["snap", os.readlink(state_dir)]
 
+
+def test_crash_before_flip_reapplies_batch(spark):
+    """A crash after the idle version was fully written and marked, but
+    before the link flipped: the live state is still batch 0's, so the
+    redelivered batch 1 must apply (not be skipped as already applied)
+    and overwrite the leftover's junk rows."""
     state_dir = tempfile.mkdtemp(prefix="cdc_state4_") + "/snap"
     sink = CdcApplySink(state_dir=state_dir, keys=["k"])
     sink(spark.createDataFrame(BATCH_1, LOG_SCHEMA), 0)
-    before = _read_state(spark, state_dir)
-    assert before  # sanity: 5 keys
-    # Simulate the crash window: state moved aside, next never moved in.
-    shutil.move(state_dir, state_dir + "__old_deadbeef")
-    pathlib.Path(state_dir + "__next_cafef00d").mkdir()
-    # The redelivered batch reapplies on top of the RESTORED state.
+    leftover = _next_version_dir(state_dir)
+    junk = spark.read.parquet(state_dir).withColumn("val", F.lit(-7)).withColumn(
+        "__seq", F.lit(100).cast("long"))
+    junk.write.mode("overwrite").parquet(leftover)
+    pathlib.Path(leftover, "_last_batch").write_text("1")
     sink(spark.createDataFrame(BATCH_2, LOG_SCHEMA), 1)
-    assert _read_state(spark, state_dir) == FINAL
-    assert glob.glob(state_dir + "__old_*") == []
-    assert glob.glob(state_dir + "__next_*") == []
+    _assert_committed(spark, state_dir)
 
 
-def test_recovery_picks_old_dir_by_marker_not_name(spark):
-    """ADVICE r4 (low): when TWO __old_* dirs coexist (a superseded dir
-    survived a failed delete, then a later crash mid-swap left another),
-    recovery must restore the one with the highest _last_batch marker —
-    uuid-hex dir names sort arbitrarily, so lexicographic order can
-    point at the stale dir and silently regress state."""
-    import glob
-    import shutil
-
+def test_crash_before_superseded_delete_is_overwritten(spark):
+    """A crash after the flip, before the superseded version was
+    deleted: a stale copy of batch 0's state sits at the next version
+    name.  A replayed batch no-ops, and the next commit overwrites the
+    stale copy instead of reading it."""
     root = tempfile.mkdtemp(prefix="cdc_state5_")
     state_dir = root + "/snap"
     sink = CdcApplySink(state_dir=state_dir, keys=["k"])
-    sink(spark.createDataFrame(BATCH_1, LOG_SCHEMA), 0)
-    stale = _read_state(spark, state_dir)
-    shutil.copytree(state_dir, root + "/stale_copy")  # batch-0 state, marker 0
-    sink(spark.createDataFrame(BATCH_2, LOG_SCHEMA), 1)
-    fresh = _read_state(spark, state_dir)
-    assert fresh == FINAL and fresh != stale
-    # Stale survivor under a name that sorts FIRST, current state moved
-    # aside (crash mid-swap) under a name that sorts LAST: recovery must
-    # pick by marker (1 > 0), not by lexicographic dir name.
-    shutil.copytree(root + "/stale_copy", state_dir + "__old_0000stale")
-    shutil.move(state_dir, state_dir + "__old_ffffcrash")
-    sink(spark.createDataFrame(BATCH_2, LOG_SCHEMA), 2)  # redelivery
+    b1 = spark.createDataFrame(BATCH_1, LOG_SCHEMA)
+    b2 = spark.createDataFrame(BATCH_2, LOG_SCHEMA)
+    sink(b1, 0)
+    shutil.copytree(os.path.realpath(state_dir), root + "/stale_copy")
+    sink(b2, 1)
+    shutil.move(root + "/stale_copy", _next_version_dir(state_dir))
+    sink(b2, 1)  # replay of the committed batch
     assert _read_state(spark, state_dir) == FINAL
-    assert glob.glob(state_dir + "__old_*") == []
+    sink(b1, 2)  # every row at or below its key's high-water mark
+    _assert_committed(spark, state_dir)
+
+
+def test_plain_state_dir_migrates_on_next_commit(spark):
+    """A plain state dir (the layout older releases wrote) becomes the
+    version symlink on its next commit, keeping its rows and marker."""
+    state_dir = tempfile.mkdtemp(prefix="cdc_state6_") + "/snap"
+    sink = CdcApplySink(state_dir=state_dir, keys=["k"])
+    sink(spark.createDataFrame(BATCH_1, LOG_SCHEMA), 0)
+    plain = tempfile.mkdtemp(prefix="cdc_state6_plain_") + "/snap"
+    shutil.copytree(os.path.realpath(state_dir), plain)
+    sink = CdcApplySink(state_dir=plain, keys=["k"])
+    sink(spark.createDataFrame(BATCH_1, LOG_SCHEMA), 0)  # replay: no-op
+    assert not os.path.islink(plain)
+    sink(spark.createDataFrame(BATCH_2, LOG_SCHEMA), 1)
+    _assert_committed(spark, plain)
+
+
+def test_orphaned_old_dir_raises_and_is_kept(spark):
+    """A crash inside the older two-move swap leaves ``__old_*`` and no
+    state dir.  Starting from empty would drop every key, so the sink
+    raises naming the sibling and leaves it for a manual restore."""
+    state_dir = tempfile.mkdtemp(prefix="cdc_state7_") + "/snap"
+    sink = CdcApplySink(state_dir=state_dir, keys=["k"])
+    sink(spark.createDataFrame(BATCH_1, LOG_SCHEMA), 0)
+    old = state_dir + "__old_deadbeef"
+    shutil.move(os.path.realpath(state_dir), old)
+    if os.path.islink(state_dir):
+        os.remove(state_dir)
+    b2 = spark.createDataFrame(BATCH_2, LOG_SCHEMA)
+    with pytest.raises(RuntimeError, match="__old_deadbeef"):
+        sink(b2, 1)
+    assert os.path.isdir(old) and not os.path.lexists(state_dir)
+    shutil.move(old, state_dir)  # the documented manual restore
+    sink(b2, 1)
+    _assert_committed(spark, state_dir)
