@@ -258,13 +258,13 @@ class HierStats:
     """Per-call record of one partitioned exact pair search.
 
     Pass a fresh instance as ``stats=`` to
-    :func:`embedding_near_dup_pairs_hier`, ``_celled`` or ``_auto``;
-    the call fills in the fields it reaches and leaves the rest
-    ``None``.  Each call writes only its own record, so concurrent or
-    successive calls never overwrite each other's numbers.
+    :func:`embedding_near_dup_pairs_hier` or ``_auto``; the call fills
+    in the fields it reaches and leaves the rest ``None``.  Each call
+    writes only its own record, so concurrent or successive calls never
+    overwrite each other's numbers.
     """
 
-    #: auto dispatch: 'blocked', 'celled', 'hier' or 'semdedup_fallback'
+    #: auto dispatch: 'blocked', 'hier' or 'semdedup_fallback'
     path: str | None = None
     #: auto result semantics: 'exact' or 'semdedup_cells'
     method: str | None = None
@@ -423,9 +423,7 @@ def embedding_near_dup_pairs(
 
     Zero-norm vectors have no defined cosine and participate in no
     pair — excluded up front in every pair path (under ANSI mode the
-    ``/ sqrt(0)`` would otherwise fail the whole query; the celled
-    paths additionally need the exclusion so a NaN angle can't poison
-    a covering radius).
+    ``/ sqrt(0)`` would otherwise fail the whole query).
     """
     from .relational import spread
 
@@ -451,149 +449,6 @@ def embedding_near_dup_pairs(
         cond = cond & (F.col("__cella") == F.col("__cellb"))
     return (
         left.join(right, cond)
-        .withColumn(
-            "cosine",
-            F.round(
-                F.expr(cosine_prenormed_sql("__va", "__vb", "__na2", "__nb2", dim)),
-                6,
-            ),
-        )
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def embedding_near_dup_pairs_celled(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-    dim: int = 64,
-    n_cells: int = 16,
-    seed: int = 42,
-    fit_sample_rows: int = 8192,
-    cache_key: str | None = None,
-    max_replication: float | None = 32.0,
-    guard_min_rows: int = 50_000,
-    stats: HierStats | None = None,
-) -> DataFrame:
-    """Exact-COMPLETE cosine pair search partitioned by k-means cells —
-    the 100-TB form of :func:`embedding_near_dup_pairs` (SemDeDup-style
-    corpora; Abbas et al. 2023 run the same cluster-then-pair shape but
-    accept boundary misses — here a covering-radius multi-assignment
-    makes the candidate set provably complete, so the output is
-    bit-identical to the brute-force upper-triangle join).
-
-    Completeness argument (angles on the unit sphere; scaling never
-    changes an angle, so raw vectors inherit it): let ``θ_t =
-    arccos(threshold)`` and ``R_c`` = covering radius of cell ``c``
-    (max angle from a member to its centroid).  For any qualifying pair
-    ``angle(a,b) ≤ θ_t`` with ``b`` home in cell ``c``, the triangle
-    inequality gives ``angle(a, center_c) ≤ angle(a,b) + angle(b,
-    center_c) ≤ θ_t + R_c`` — so replicating every point into every
-    cell within ``θ_t + R_c (+ ε for float acos)`` of it guarantees
-    ``a``'s replica set contains ``b``'s home cell.  Candidates are the
-    per-cell replica×home joins (deduped — a pair can co-occur in two
-    cells); every candidate is then re-verified with the same unrolled
-    exact-cosine expression the brute path uses, so over-assignment
-    costs time, never correctness.
-
-    Scale design: no per-worker corpus matrix anywhere (the blocked
-    path's bound disappears).  Cost is one k-means fit on a bounded
-    sample, one Θ(n·n_cells) centroid scoring pass, and per-cell
-    quadratic joins bounded by (cell size + replicas)² — ``n_cells``
-    grows with the corpus to hold cell populations flat.  The
-    replication factor is data-dependent: tight clusters and a high
-    threshold keep it near 1; a threshold so low that θ_t rivals the
-    inter-centroid angles degenerates toward all-pairs, which is the
-    honest cost of asking for *every* pair at that radius.
-
-    ``stats`` (a :class:`HierStats`) receives the guard-measured
-    replication factor.
-    """
-    from .relational import spread
-
-    stats = HierStats() if stats is None else stats
-
-    # Zero-norm exclusion must precede the fit: l2_normalize inside the
-    # quantizer divides by the norm (ANSI: divide-by-zero fails loudly).
-    # spread() first: the celled base feeds the same multi-pass numpy
-    # work as the hier path (see there).
-    nz = spread(df).where(F.expr(dot_sql(vec_col, vec_col, dim)) > 0)
-    assigned, centers = kmeans_ivf_cells(
-        nz, id_col, vec_col, n_cells=n_cells, seed=seed, dim=dim,
-        fit_sample_rows=fit_sample_rows, cache_key=cache_key,
-    )
-    base = (
-        assigned.select(
-            F.col(id_col).alias("__id"),
-            as_double_vec(F.col(vec_col)).alias("__v"),
-            F.col("__cell"),
-        )
-        .withColumn("__n2", F.expr(dot_sql("__v", "__v", dim)))
-        # Zero-norm vectors: their cosine is NaN, so they can never be
-        # in a qualifying pair (NaN >= t is false in both engines) —
-        # but left IN, one of them poisons its home cell's covering
-        # radius (max over a NaN angle is NaN, the replication filter
-        # then rejects every point, and the CELL's real pairs are
-        # lost).  Dropping them is output-equivalent and keeps the
-        # completeness proof clean.
-        .where(F.col("__n2") > 0)
-        .cache()
-    )
-    # Home-cell angles → per-cell covering radius (tiny relation).
-    cent = F.broadcast(centers)
-    ang_to = F.acos(
-        F.greatest(
-            F.lit(-1.0),
-            F.least(F.lit(1.0), F.expr(cosine_sql("__v", "center", dim))),
-        )
-    )
-    radii = (
-        base.join(cent, base["__cell"] == centers["cell_id"])
-        .select(F.col("cell_id"), ang_to.alias("__ang"))
-        .groupBy("cell_id")
-        .agg(F.max("__ang").alias("__radius"))
-    )
-    theta_t = math.acos(max(-1.0, min(1.0, threshold)))
-    # ε absorbs float64 acos/triangle slack; over-assignment is verified
-    # away, under-assignment would lose pairs — so err wide.
-    eps = 1e-6
-    rep = (
-        base.crossJoin(F.broadcast(centers.join(radii, "cell_id")))
-        .where(ang_to <= F.lit(theta_t + eps) + F.col("__radius"))
-        .select(F.col("__id").alias("__rid"), F.col("cell_id").alias("__rcell"))
-    )
-    if max_replication is not None:
-        n_rows = base.count()
-        if n_rows >= guard_min_rows:
-            # Same runtime blowup guard as the hier path (see
-            # CoveringRadiusBlowupError): count the id-only replica
-            # relation before the per-cell quadratic joins.
-            rep, mean_rep = _guard_replication(
-                rep, n_rows, max_replication, threshold)
-            stats.replication = mean_rep
-    home = base.select(F.col("__id").alias("__hid"), F.col("__cell").alias("__hcell"))
-    cands = (
-        rep.join(home, (F.col("__rcell") == F.col("__hcell"))
-                 & (F.col("__rid") != F.col("__hid")))
-        .select(
-            F.least("__rid", "__hid").alias("id_a"),
-            F.greatest("__rid", "__hid").alias("id_b"),
-        )
-        .distinct()
-    )
-    a = base.select(
-        F.col("__id").alias("id_a"), F.col("__v").alias("__va"),
-        F.col("__n2").alias("__na2"),
-    )
-    b = base.select(
-        F.col("__id").alias("id_b"), F.col("__v").alias("__vb"),
-        F.col("__n2").alias("__nb2"),
-    )
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
         .withColumn(
             "cosine",
             F.round(
@@ -652,6 +507,11 @@ _TWO_LEVEL_FIT_CACHE: dict[tuple, tuple] = {}
 #: default leaf_target; the quantizer metadata shipped in task
 #: closures is then K·dim·8 ≈ 128 MB, the matching executor ceiling).
 FIT_SAMPLE_ROWS_CAP = 1 << 20
+
+#: Fit-sample cap of the flat k-means quantizer (:func:`kmeans_ivf_cells`,
+#: behind the IVF / IVF-PQ indexes and the SemDeDup fallback cells):
+#: ~1000 points per cell at the suite's 8-cell index, flat as n grows.
+KMEANS_FIT_SAMPLE_ROWS = 8192
 
 #: Arrow-batch coalescing target for PASS 2 (replication) ONLY: the
 #: replicate map buffers input batches to ~this many rows before
@@ -2013,19 +1873,32 @@ def embedding_near_dup_pairs_hier(
     stats: HierStats | None = None,
 ) -> DataFrame:
     """Exact-COMPLETE cosine pair search with a THREE-LEVEL quantizer
-    (supers → branches → leaves) — the 100-TB form.  Same
-    covering-radius completeness argument as
-    :func:`embedding_near_dup_pairs_celled`, lifted level by level:
-    with ``branch_R(β) = max over leaves c∈β of (angle(β,c) + R_c)``,
-    any qualifying partner ``a`` of a point ``b`` home in leaf ``c`` of
-    branch ``β`` satisfies ``angle(a, β) ≤ angle(a,c) + angle(c,β) ≤
+    (supers → branches → leaves) — the 100-TB form of
+    :func:`embedding_near_dup_pairs` (SemDeDup-style corpora; Abbas et
+    al. 2023 run the same cluster-then-pair shape but accept boundary
+    misses — here a covering-radius multi-assignment makes the
+    candidate set provably complete).
+
+    Completeness argument (angles on the unit sphere; scaling never
+    changes an angle, so raw vectors inherit it): let ``θ_t =
+    arccos(threshold)`` and ``R_c`` = covering radius of leaf ``c``
+    (max angle from a home member to its center).  For any qualifying
+    pair ``angle(a,b) ≤ θ_t`` with ``b`` home in leaf ``c``, the
+    triangle inequality gives ``angle(a, c) ≤ angle(a,b) + angle(b, c)
+    ≤ θ_t + R_c`` — so replicating every point into every leaf within
+    ``θ_t + R_c (+ ε for float acos)`` of it guarantees ``a``'s replica
+    set contains ``b``'s home leaf.  Lifted level by level: with
+    ``branch_R(β) = max over leaves c∈β of (angle(β,c) + R_c)``, the
+    same partner satisfies ``angle(a, β) ≤ angle(a,c) + angle(c,β) ≤
     (θ_t + R_c) + angle(c,β) ≤ θ_t + branch_R(β)`` — so pruning
     branches first loses nothing, and the leaf filter ``angle(a, c) ≤
-    θ_t + R_c`` finishes exactly as in the flat form.  The argument
-    never depends on HOW homes were chosen, only that ``R_c`` is the
-    max home-member angle — so a vectorized assignment is safe.  Every
-    candidate is re-verified with the exact unrolled cosine expression,
-    so the output is bit-identical to brute force.
+    θ_t + R_c`` finishes the search.  The argument never depends on HOW
+    homes were chosen, only that ``R_c`` is the max home-member angle —
+    so a vectorized assignment is safe.  Candidates are the per-leaf
+    replica×home pairs (a pair can co-occur in two leaves); every
+    candidate is re-verified with the exact unrolled cosine expression
+    the brute path uses, so over-assignment costs time, never
+    correctness, and the output is bit-identical to brute force.
 
     HOME assignment searches the ``home_probes`` best branches found
     through the top-``home_probes`` supers, not just the top one —
@@ -2193,7 +2066,6 @@ def embedding_near_dup_pairs_auto(
     threshold: float = 0.95,
     dim: int = 64,
     max_side_bytes: int = MAX_SIDE_MATRIX_BYTES,
-    n_cells: int | None = None,
     seed: int = 42,
     cache_key: str | None = None,
     max_replication: float | None = 32.0,
@@ -2206,22 +2078,21 @@ def embedding_near_dup_pairs_auto(
     (:func:`embedding_near_dup_pairs_blocked` — fastest when every
     worker can hold the corpus matrix), above it the three-level
     cell-partitioned :func:`embedding_near_dup_pairs_hier` path, which
-    has no per-worker matrix and no per-row full-cell scan.  All paths
+    has no per-worker matrix and no per-row full-cell scan.  Both paths
     verify candidates with the same exact expression, so the OUTPUT is
     identical either side of the cutover — this mirrors
     ``stats.series_corr_pairs_auto``, closing the last operator where
     a 100× scale-up needed a human decision.
 
     The dispatch count is a parquet-metadata count on the raw input
-    (no materialization).  ``n_cells`` forces the FLAT celled form with
-    that many cells (testing/diagnostics); by default the hierarchical
-    form sizes itself (≈ n/64 leaves, 2·K^⅔ branches, √(P·B) supers;
-    past the driver fit-sample cap the two-stage executor fit keeps K
-    tracking n — see :func:`_fit_two_level_distributed`).
-    ``max_replication`` forwards to the partitioned paths' runtime
-    blowup guard (:class:`CoveringRadiusBlowupError`) — the big-corpus
-    default path fails loudly on structureless data instead of
-    shuffling a quadratic candidate surface.
+    (no materialization).  The hierarchical form sizes itself (≈ n/64
+    leaves, 2·K^⅔ branches, √(P·B) supers; past the driver fit-sample
+    cap the two-stage executor fit keeps K tracking n — see
+    :func:`_fit_two_level_distributed`).  ``max_replication`` forwards
+    to the hier path's runtime blowup guard
+    (:class:`CoveringRadiusBlowupError`) — the big-corpus path fails
+    loudly on structureless data instead of shuffling a quadratic
+    candidate surface.
 
     ``on_blowup`` (r7 verdict item 5): ``"raise"`` (default) lets the
     guard's named error propagate — right for interactive use.
@@ -2236,7 +2107,7 @@ def embedding_near_dup_pairs_auto(
     exact path and ``method="exact"`` (pinned in tests).
 
     ``stats`` (a :class:`HierStats`) records the chosen ``path`` and
-    ``method`` and is forwarded to the partitioned path.
+    ``method`` and is forwarded to the hier path.
     """
     if on_blowup not in ("raise", "fallback"):
         raise ValueError(f"on_blowup={on_blowup!r}: expected "
@@ -2258,14 +2129,6 @@ def embedding_near_dup_pairs_auto(
             max_side_bytes=max_side_bytes,
         ), "exact")
     try:
-        if n_cells is not None:
-            stats.path = "celled"
-            return _tag(embedding_near_dup_pairs_celled(
-                df, id_col, vec_col, threshold=threshold, dim=dim,
-                n_cells=n_cells, seed=seed, cache_key=cache_key,
-                max_replication=max_replication,
-                guard_min_rows=guard_min_rows, stats=stats,
-            ), "exact")
         stats.path = "hier"
         return _tag(embedding_near_dup_pairs_hier(
             df, id_col, vec_col, threshold=threshold, dim=dim,
@@ -2324,7 +2187,6 @@ def kmeans_ivf_cells(
     max_iter: int = 5,
     seed: int = 42,
     dim: int = 64,
-    fit_sample_rows: int = 8192,
     cache_key: str | None = None,
 ):
     """Build a real IVF coarse quantizer: k-means over l2-normalized
@@ -2334,8 +2196,8 @@ def kmeans_ivf_cells(
     column, and a small ``(cell_id, center: array<double>)`` frame.
     Distributed fit via pyspark.ml KMeans (fixed seed, bounded
     iterations); the fit is the index-build step and runs on a seeded
-    sample capped at ``fit_sample_rows`` — centroid quality needs
-    ~1000 points per cell, not the corpus, so the fit cost stays flat
+    sample capped at :data:`KMEANS_FIT_SAMPLE_ROWS` — centroid quality
+    needs ~1000 points per cell, not the corpus, so the fit cost stays flat
     as data grows and only ``transform`` (one map over the data)
     touches every row.  The fixture's ``label`` column is NOT a geometric
     quantizer (cell-restricted recall 0.13 measured), which is why the
@@ -2359,7 +2221,7 @@ def kmeans_ivf_cells(
             max_iter,
             seed,
             dim,
-            fit_sample_rows,
+            KMEANS_FIT_SAMPLE_ROWS,
             spark.sparkContext.applicationId,
         )
         # Evict models tied to stopped sessions — JVM handles are dead
@@ -2384,11 +2246,12 @@ def kmeans_ivf_cells(
     # a quantizer (not a final clustering) quality is equivalent.
     n = ml_df.count()
     fit_df = ml_df
-    if n > fit_sample_rows:
+    if n > KMEANS_FIT_SAMPLE_ROWS:
         # 1.05 headroom keeps the Bernoulli sample's expected size at the
         # cap; exactness doesn't matter, determinism (fixed seed) does.
-        fit_df = ml_df.sample(fraction=min(1.0, 1.05 * fit_sample_rows / n), seed=seed)
-        n = fit_sample_rows
+        fit_df = ml_df.sample(
+            fraction=min(1.0, 1.05 * KMEANS_FIT_SAMPLE_ROWS / n), seed=seed)
+        n = KMEANS_FIT_SAMPLE_ROWS
     fit_input = fit_df.coalesce(max(1, min(8, n // 2000 + 1))).cache()
     model = KMeans(
         k=n_cells,

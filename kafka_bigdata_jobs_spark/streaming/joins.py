@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.dedup import dedup_within_watermark  # noqa: F401  (re-export)
+
 
 def interval_join(
     left: DataFrame,
@@ -57,14 +59,3 @@ def enrich_with_dim(
     """
     return stream.join(F.broadcast(dim), on, how)
 
-
-def dedup_within_watermark(
-    df: DataFrame, keys: list[str], ts_col: str, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Streaming exact dedup bounded by the watermark horizon —
-    duplicate keys arriving within the watermark window are dropped;
-    state is evicted beyond it (unbounded ``dropDuplicates`` state
-    would grow forever on an infinite stream)."""
-    if df.isStreaming:
-        return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-    return df.dropDuplicates(keys)

@@ -16,6 +16,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
+from ..operators.cdc import latest_change_per_key
 from ..sinks import _atomic_swap_dir, _next_version_dir, write_parquet
 
 #: A sink receives (micro-batch DataFrame, batch_id).
@@ -241,7 +242,7 @@ class CdcApplySink:
 
     The state carries a per-key ``__seq`` high-water mark, so the apply
     is ordered by the LOG SEQUENCE, not by arrival: a batch's per-key
-    winner (``max_by`` on seq, as in operators/cdc.py) only lands if
+    winner (``operators/cdc.latest_change_per_key``) only lands if
     its seq exceeds the state's — cross-batch replays, out-of-order
     redeliveries, and checkpoint re-runs all degrade to no-ops rather
     than regressing rows (the ``_last_batch`` marker still short-
@@ -287,15 +288,10 @@ class CdcApplySink:
             return
         spark = batch.sparkSession
         keys = list(self.keys)
-        payload = [c for c in batch.columns if c not in (*keys, self.seq_col)]
-        win = (
-            batch.groupBy(*keys)
-            .agg(
-                F.max_by(F.struct(*payload), F.col(self.seq_col)).alias("__w"),
-                F.max(F.col(self.seq_col)).alias("__seq"),
-            )
-            .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in payload], "__seq")
-        )
+        # __seq rides in the winner struct, so it is the per-key max seq
+        # (columns: keys, payload, __seq)
+        win = latest_change_per_key(
+            batch.withColumn("__seq", F.col(self.seq_col)), keys, self.seq_col)
         if _state_exists(self.state_dir):
             state = spark.read.parquet(self.state_dir)
             if self._DELETED not in state.columns:  # pre-tombstone state
@@ -319,7 +315,8 @@ class CdcApplySink:
         # Winners land whether U or D; a D becomes a tombstone (payload
         # nulled, __seq retained) so its high-water mark keeps guarding
         # against stale-U redeliveries (see class docstring).
-        value_cols = [c for c in payload if c != self.op_col]
+        value_cols = [c for c in batch.columns
+                      if c not in (*keys, self.seq_col, self.op_col)]
         winners = fresh.withColumn(
             self._DELETED, F.col(self.op_col) == "D"
         ).select(

@@ -2,12 +2,13 @@
 
 ``embedding_near_dup_pairs_auto`` must produce IDENTICAL output on both
 sides of the ``max_side_bytes`` cutover: the numpy-blocked matmul path
-below it, the cell-partitioned (k-means + covering-radius
-multi-assignment) path above it.  The celled path's completeness is a
-theorem (triangle inequality on sphere angles — see the operator
-docstring); these tests check the implementation against the
-brute-force upper-triangle join bit-for-bit, including on synthetic
-data engineered so qualifying pairs STRADDLE cell boundaries.
+below it, the three-level leaf-partitioned hier path (covering-radius
+multi-assignment) above it.  The hier path's completeness is a theorem
+(triangle inequality on sphere angles — see the
+``embedding_near_dup_pairs_hier`` docstring); these tests check the
+implementation against the brute-force upper-triangle join
+bit-for-bit, including on synthetic data engineered so qualifying
+pairs STRADDLE leaf boundaries.
 """
 
 from __future__ import annotations
@@ -21,7 +22,6 @@ from kafka_bigdata_jobs_spark.operators.similarity import (
     HierStats,
     embedding_near_dup_pairs,
     embedding_near_dup_pairs_auto,
-    embedding_near_dup_pairs_celled,
     embedding_near_dup_pairs_hier,
 )
 
@@ -35,15 +35,6 @@ def _pairs(df) -> list[tuple]:
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-
-
-@pytest.mark.parametrize("threshold", [0.45, 0.9])
-def test_celled_matches_bruteforce_fixture(spark, emb, threshold):
-    brute = _pairs(embedding_near_dup_pairs(
-        emb, "vec_id", "embedding", threshold=threshold))
-    celled = _pairs(embedding_near_dup_pairs_celled(
-        emb, "vec_id", "embedding", threshold=threshold, n_cells=8))
-    assert celled == brute
 
 
 @pytest.mark.parametrize("threshold", [0.45, 0.9])
@@ -70,22 +61,20 @@ def test_auto_identical_output_across_cutover(spark, emb):
         emb, "vec_id", "embedding", threshold=0.45, max_side_bytes=1,
         stats=st))
     assert st.path == "hier"
-    st = HierStats()
-    forced_flat = _pairs(embedding_near_dup_pairs_auto(
-        emb, "vec_id", "embedding", threshold=0.45, max_side_bytes=1,
-        n_cells=8, stats=st))
-    assert st.path == "celled"
     assert below == brute
     assert above == brute
-    assert forced_flat == brute
+    # blocked and hier are auto's only exact paths: no n_cells switch
+    with pytest.raises(TypeError, match="n_cells"):
+        embedding_near_dup_pairs_auto(
+            emb, "vec_id", "embedding", threshold=0.45, n_cells=8)
 
 
-def test_celled_complete_on_boundary_straddling_pairs(spark):
+def test_hier_complete_on_boundary_straddling_pairs(spark):
     """Synthetic stress: tight planted near-dup pairs whose members sit
-    in DIFFERENT k-means cells unless the covering-radius replication
-    works.  Two broad arcs of points with planted pairs at the arc
-    boundary; many more cells than arcs so the quantizer is forced to
-    split arcs mid-way."""
+    in DIFFERENT leaves unless the covering-radius replication works.
+    Two broad arcs of points with planted pairs at the arc boundary;
+    many more leaves than arcs so the quantizer is forced to split arcs
+    mid-way."""
     rng = np.random.default_rng(7)
     dim, n_background, n_planted = 8, 240, 30
     rows = []
@@ -111,9 +100,6 @@ def test_celled_complete_on_boundary_straddling_pairs(spark):
     brute = _pairs(embedding_near_dup_pairs(
         df, "vec_id", "embedding", threshold=0.97, dim=dim))
     assert len(brute) >= n_planted  # the planted pairs qualify
-    celled = _pairs(embedding_near_dup_pairs_celled(
-        df, "vec_id", "embedding", threshold=0.97, dim=dim, n_cells=12))
-    assert celled == brute
     hier = _pairs(embedding_near_dup_pairs_hier(
         df, "vec_id", "embedding", threshold=0.97, dim=dim, leaf_target=24))
     assert hier == brute
@@ -137,10 +123,9 @@ def test_hier_zero_vector_does_not_poison_radii(spark):
     brute = _pairs(embedding_near_dup_pairs(
         df, "vec_id", "embedding", threshold=0.99, dim=dim))
     assert (0, 100, 1.0) in brute
-    for fn, kw in ((embedding_near_dup_pairs_celled, {"n_cells": 6}),
-                   (embedding_near_dup_pairs_hier, {"leaf_target": 10})):
-        got = _pairs(fn(df, "vec_id", "embedding", threshold=0.99, dim=dim, **kw))
-        assert got == brute
+    got = _pairs(embedding_near_dup_pairs_hier(
+        df, "vec_id", "embedding", threshold=0.99, dim=dim, leaf_target=10))
+    assert got == brute
 
 
 def _clustered_corpus(rng, n_clusters, per_cluster, dim, width_deg=8.0,
@@ -197,7 +182,6 @@ def test_replication_guard_trips_on_structureless_corpus(spark):
     (the r6 probe incidents)."""
     from kafka_bigdata_jobs_spark.operators.similarity import (
         CoveringRadiusBlowupError,
-        embedding_near_dup_pairs_celled,
     )
 
     rng = np.random.default_rng(5)
@@ -207,14 +191,11 @@ def test_replication_guard_trips_on_structureless_corpus(spark):
         v = rng.normal(size=dim)
         rows.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    with pytest.raises(CoveringRadiusBlowupError, match="replication factor"):
+    with pytest.raises(CoveringRadiusBlowupError,
+                       match="replication factor.*all-pairs"):
         embedding_near_dup_pairs_hier(
             df, "vec_id", "embedding", threshold=0.7, dim=dim,
             leaf_target=16, guard_min_rows=0)
-    with pytest.raises(CoveringRadiusBlowupError, match="all-pairs"):
-        embedding_near_dup_pairs_celled(
-            df, "vec_id", "embedding", threshold=0.7, dim=dim,
-            n_cells=64, guard_min_rows=0)
 
 
 def test_replication_guard_passes_clustered_corpus(spark):

@@ -82,7 +82,7 @@ def test_dedup_within_watermark_stream(spark, events_dir):
     with tempfile.TemporaryDirectory() as ckpt:
         q = run_multi_sink(
             dedup_within_watermark(
-                stream, ["user_id", "event_type"], "ts", watermark="40 days"
+                stream, ["user_id", "event_type"], "ts", delay="40 days"
             ),
             [sink],
             checkpoint=ckpt,
