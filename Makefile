@@ -2,7 +2,7 @@
 
 PY ?= python
 
-.PHONY: test bench perfbench-smoke correctness-local correctness-local-incr coverage queries-md scaledata scaleprobe scaleprobe-cold embpairs-probe embpairs-fit-ceiling round-numbers ann-recall-scale
+.PHONY: test bench perfbench-smoke correctness-local correctness-local-incr coverage queries-md scaledata scaleprobe scaleprobe-cold embpairs-probe round-numbers ann-recall-scale
 
 test:
 	$(PY) -m pytest tests/ -x -q
@@ -55,15 +55,11 @@ scaleprobe-cold: scaledata
 
 # Scaling row for the hierarchical exact pair search (the
 # embedding_close_pairs auto path past max_side_bytes): generates
-# clustered 50k/150k/500k/1.5M corpora and probes cold builds, with an
-# x1 equality gate against the blocked exact path.
+# clustered 50k..5M-row corpora and probes cold builds, recording each
+# scale's per-phase seconds (HierStats.phase_seconds) and per-phase
+# exponents, with an x1 equality gate against the blocked exact path.
 embpairs-probe:
 	$(PY) tools/embpairs_probe.py
-
-# Distributed-fit ceiling demonstration (r8): x10 corpus under a
-# patched-down driver sample cap, driver vs two-stage executor fit.
-embpairs-fit-ceiling:
-	$(PY) tools/embpairs_probe.py --fit-ceiling
 
 # Round-notes headline numbers, generated FROM the committed artifacts
 # so notes can never drift from what the tree actually records.

@@ -30,8 +30,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # ones re-run afterwards.  The authoritative source is the committed
 # ``CORRECTNESS_r*.json`` artifacts themselves — read at import so the
 # set can never go stale when a new round's artifact lands
-# (round-2 verdict "What's wrong" item 1).  ``_R1_VERIFIED`` below is a
-# frozen fallback for environments where the artifacts are absent.
+# (round-2 verdict "What's wrong" item 1).  With no readable artifact
+# every query counts as never-checked.
 def _artifact_rows() -> list[tuple[int, dict]]:
     """All committed driver artifacts as ``(round, rows)``, round-sorted.
     Shared by the verified set and the staleness rotation so the two can
@@ -61,8 +61,7 @@ def _driver_verified() -> frozenset[str]:
             cur = latest.get(name)
             if cur is None or rnd >= cur[0]:
                 latest[name] = (rnd, _row_passed(row))
-    seen = {name for name, (_, passed) in latest.items() if passed}
-    return frozenset(seen) if seen else _R1_VERIFIED
+    return frozenset(name for name, (_, passed) in latest.items() if passed)
 
 
 def _row_passed(row) -> bool:
@@ -99,45 +98,6 @@ def _last_checked_round() -> dict[str, int]:
     return last
 
 
-_R1_VERIFIED = frozenset({
-    "pricing_summary", "daily_volume", "segment_summary", "top_orders",
-    "priority_pivot", "value_band_ladder", "temporal_pattern",
-    "union_tagged_entities", "json_props_stats", "top_words",
-    "customer_order_revenue", "region_revenue", "inactive_customers_anti",
-    "big_spenders_semi", "heavy_users_having", "latest_event_per_user",
-    # monthly_rollup / token_stats / user_sessions deliberately NOT
-    # listed: their r1 driver rows hash-FAILED (HUGEINT-vs-BIGINT pandas
-    # rendering, fixed via suite._ORACLE_BIGINT_COLS) — keep them in the
-    # check-first group until a green driver row lands.
-    "top3_events_per_type", "alerts_union_by_name",
-    "docs_cleaning_funnel", "quality_histogram",
-    "lang_id_eval", "sentiment_distribution", "sentiment_pandas_udf",
-    "doc_fingerprints", "dedup_exact_summary", "s_token_topk",
-    "approx_uniq_users", "near_dup_pairs_minhash",
-    "near_dup_pairs_word_bigram", "simhash_near_dups",
-    "similarity_topk_bruteforce", "similarity_topk_ivf",
-    "embedding_close_pairs", "media_fingerprints",
-    "multimodal_image_features", "multimodal_audio_features",
-    "order_age_bands", "order_labels", "windowed_events_batch",
-    "events_dedup_by_user_type", "high_frequency_types",
-    "malformed_json_tolerance", "similarity_topk_hyperplane_lsh",
-    "region_nation_rollup", "status_priority_cube", "q6_forecast_revenue",
-    "big_orders_q18",
-})
-
-
-#: Rows-only queries whose driver slot matters most this round: the
-#: last three never-checked queries (demoted in r4 to clear the
-#: oracle-backed backlog; the backlog is gone, so they go FIRST now —
-#: r4 verdict directive 4) plus the repaired r4 red row.
-_PRIORITY_ROWS_ONLY = (
-    "bpe_learned_merges", "bpe_tokenize_census", "ml_quality_filter",
-    "frequent_event_types_sketch",
-)
-#: r4's demotion mechanism, retained empty: nothing left to demote.
-_DEMOTED_ROWS_ONLY: tuple[str, ...] = ()
-
-
 def _ordered() -> list[str]:
     verified = _driver_verified()
     reg = suite.registry()
@@ -147,19 +107,8 @@ def _ordered() -> list[str]:
     # Oracle-backed queries first within the never-checked group: the
     # driver's fixed-size sample should spend its slots on full
     # value-hash checks before rows-only ones (stable sort keeps
-    # registration order within each class).  Within the rows-only
-    # class, the invariant-as-data reports come first and the queries
-    # they supersede last.
-    def key(n: str) -> tuple[bool, int]:
-        rows_only = reg[n].oracle is None
-        prio = 1
-        if n in _PRIORITY_ROWS_ONLY:
-            prio = 0
-        elif n in _DEMOTED_ROWS_ONLY:
-            prio = 2
-        return (rows_only, prio if rows_only else 0)
-
-    fresh.sort(key=key)
+    # registration order within each class).
+    fresh.sort(key=lambda n: reg[n].oracle is None)
     # Verified tail rotates by staleness: least-recently-checked round
     # first (ties keep registration order), so the driver's leftover
     # sample slots re-verify the oldest rows — r4 verdict item 5's

@@ -224,6 +224,11 @@ def topk_neighbors_hyperplane_lsh(
 #: ``cell_col``) — at that scale exact all-pairs is the wrong query.
 MAX_SIDE_MATRIX_BYTES = 2 << 30
 
+#: Bytes per block·corpusᵀ similarity slab in the blocked path (a whole
+#: 10k-row Arrow batch against a 50k-row corpus is one 4 GB slab, ~12 GB
+#: peak with its norm outer product and quotient).
+BLOCKED_SLAB_BYTES = 32 << 20
+
 
 class CoveringRadiusBlowupError(RuntimeError):
     """The covering-radius replication factor exploded: the corpus has
@@ -369,17 +374,18 @@ def embedding_near_dup_pairs_blocked(
         c_ids = corpus["__id"].to_numpy(dtype=_np.int64)
         c_mat = _np.array(list(corpus["__v"]), dtype=_np.float64)
         c_norms = _np.sqrt((c_mat * c_mat).sum(axis=1))
+        step = max(1, BLOCKED_SLAB_BYTES // (8 * max(1, len(c_ids))))
         for pdf in it:
-            block_ids = pdf["__id"].to_numpy(dtype=_np.int64)
-            block = _np.array(list(pdf["__v"]), dtype=_np.float64)
-            if block.size == 0:
-                continue
-            bn = _np.sqrt((block * block).sum(axis=1))
-            sims = (block @ c_mat.T) / _np.outer(bn, c_norms)
-            bi, cj = _np.nonzero(sims >= cut)
-            a, b = block_ids[bi], c_ids[cj]
-            keep = a < b
-            yield _pd.DataFrame({"id_a": a[keep], "id_b": b[keep]})
+            ids = pdf["__id"].to_numpy(dtype=_np.int64)
+            vecs = _np.array(list(pdf["__v"]), dtype=_np.float64)
+            for lo in range(0, len(ids), step):
+                block, block_ids = vecs[lo:lo + step], ids[lo:lo + step]
+                bn = _np.sqrt((block * block).sum(axis=1))
+                sims = (block @ c_mat.T) / _np.outer(bn, c_norms)
+                bi, cj = _np.nonzero(sims >= cut)
+                a, b = block_ids[bi], c_ids[cj]
+                keep = a < b
+                yield _pd.DataFrame({"id_a": a[keep], "id_b": b[keep]})
 
     cands = base.mapInPandas(gen, cand_schema)
     a = base.select(
@@ -507,6 +513,10 @@ _TWO_LEVEL_FIT_CACHE: dict[tuple, tuple] = {}
 #: default leaf_target; the quantizer metadata shipped in task
 #: closures is then K·dim·8 ≈ 128 MB, the matching executor ceiling).
 FIT_SAMPLE_ROWS_CAP = 1 << 20
+
+#: Supers probed and branches kept per row by the hier HOME assignment
+#: (r6: mean replication 210 with top-1 homes, 9 with top-8).
+HOME_PROBES = 8
 
 #: Fit-sample cap of the flat k-means quantizer (:func:`kmeans_ivf_cells`,
 #: behind the IVF / IVF-PQ indexes and the SemDeDup fallback cells):
@@ -1133,20 +1143,18 @@ def _fit_two_level_distributed(base, n_rows: int, leaf_target: int,
 
 
 def _hier_fit(base, n_rows: int, *, leaf_target: int, seed: int,
-              fit_sample_rows: int, cache_key, fit_mode: str, dim: int,
-              stats: HierStats):
+              fit_sample_rows: int, cache_key, dim: int, stats: HierStats):
     """Hier phase 1: the bounded-sample quantizer fit, memoized per
     corpus snapshot.  Returns ``(bcenters, leaf_centers, leaf_branch,
     esc_cap)``."""
     import numpy as np
 
     spark = base.sparkSession
-    # auto: go distributed exactly where the driver fit's sample cap
-    # would otherwise stop K from tracking n/leaf_target (the ~16M-row
+    # go distributed exactly where the driver fit's sample cap would
+    # otherwise stop K from tracking n/leaf_target (the ~16M-row
     # ceiling; see _fit_two_level_distributed)
     want_rows = max(fit_sample_rows, 4 * max(1, n_rows // leaf_target))
-    use_dist = fit_mode == "distributed" or (
-        fit_mode == "auto" and want_rows > FIT_SAMPLE_ROWS_CAP)
+    use_dist = want_rows > FIT_SAMPLE_ROWS_CAP
     stats.fit_mode = "distributed" if use_dist else "driver"
     app = spark.sparkContext.applicationId
     memo_key = None
@@ -1241,8 +1249,8 @@ def _hier_fit(base, n_rows: int, *, leaf_target: int, seed: int,
     return fit
 
 
-def _hier_assign(base, fit, id_type, *, dim: int, home_probes: int,
-                 seed: int, stats: HierStats):
+def _hier_assign(base, fit, id_type, *, dim: int, seed: int,
+                 stats: HierStats):
     """Hier phase 2: pass-1 HOME assignment and the per-leaf covering
     radii.  Returns the cached home relation ``(__id, leaf_id, __hang,
     __vh)`` and the radius array (NaN for leaves no point homes in)."""
@@ -1261,7 +1269,7 @@ def _hier_assign(base, fit, id_type, *, dim: int, home_probes: int,
     branches_of_super: list = []
     if n_b >= 24:
         n_s = max(2, min(n_b // 3,
-                         round(math.sqrt(float(home_probes * n_b)))))
+                         round(math.sqrt(float(HOME_PROBES * n_b)))))
         scenters, s_of_b = _lloyd_rounds(bcenters, n_s, seed + 104729)
         n_s = len(scenters)
         branches_of_super = [np.nonzero(s_of_b == s)[0] for s in range(n_s)]
@@ -1304,7 +1312,7 @@ def _hier_assign(base, fit, id_type, *, dim: int, home_probes: int,
         T.StructField("__vh", T.ArrayType(T.ShortType())),
     ])
 
-    n_probe = max(1, min(home_probes, n_b))
+    n_probe = max(1, min(HOME_PROBES, n_b))
 
     def _top_branches(xn32):
         """Per-row candidate home branches (n × ≤P), -1-padded.
@@ -1866,10 +1874,8 @@ def embedding_near_dup_pairs_hier(
     seed: int = 42,
     fit_sample_rows: int = 32768,
     cache_key: str | None = None,
-    home_probes: int = 8,
     max_replication: float | None = 32.0,
     guard_min_rows: int = 50_000,
-    fit_mode: str = "auto",
     stats: HierStats | None = None,
 ) -> DataFrame:
     """Exact-COMPLETE cosine pair search with a THREE-LEVEL quantizer
@@ -1900,8 +1906,8 @@ def embedding_near_dup_pairs_hier(
     the brute path uses, so over-assignment costs time, never
     correctness, and the output is bit-identical to brute force.
 
-    HOME assignment searches the ``home_probes`` best branches found
-    through the top-``home_probes`` supers, not just the top one —
+    HOME assignment searches the ``HOME_PROBES`` best branches found
+    through the top-``HOME_PROBES`` supers, not just the top one —
     then RE-HOMES every point whose achieved home angle exceeds a
     fit-derived absolute cap through an exact branch scan.
     Completeness never depends on any of this (above), but
@@ -1999,9 +2005,6 @@ def embedding_near_dup_pairs_hier(
     from ..session import ensure_package_shipped
     from .relational import spread
 
-    if fit_mode not in ("auto", "driver", "distributed"):
-        raise ValueError(f"fit_mode={fit_mode!r}: expected "
-                         "'auto', 'driver', or 'distributed'")
     stats = HierStats() if stats is None else stats
     spark = df.sparkSession
     # the Arrow passes call module helpers (_vecs, _f16_list) by
@@ -2038,12 +2041,11 @@ def embedding_near_dup_pairs_hier(
         fit = _hier_fit(
             base, n_rows, leaf_target=leaf_target, seed=seed,
             fit_sample_rows=fit_sample_rows, cache_key=cache_key,
-            fit_mode=fit_mode, dim=dim, stats=stats)
+            dim=dim, stats=stats)
     stats.k = len(fit[1])
     with stats.phase(spark, "assign"):
         home, radius = _hier_assign(base, fit, id_type, dim=dim,
-                                    home_probes=home_probes, seed=seed,
-                                    stats=stats)
+                                    seed=seed, stats=stats)
     mean_rep = None
     with stats.phase(spark, "replicate"):
         rep = _hier_replicate(base, fit, radius, id_type,

@@ -7,7 +7,7 @@ parse with explicit format strings instead and keep the modern parser.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 WEEKEND_DAYS = ("Saturday", "Sunday")
@@ -33,13 +33,6 @@ def with_temporal_features(
         .withColumn(weekend_col, F.date_format(ts, "EEEE").isin(*WEEKEND_DAYS))
         .withColumn(date_col, F.to_date(ts))
     )
-
-
-def account_age_days(created_col: str, as_of: Column) -> Column:
-    """Account age in days (reference ``streaming/job1_bots.py:247`` uses
-    ``datediff(current_date(), to_date(user_created))``; checked queries
-    pass a frozen ``as_of`` to stay deterministic — FIXTURES.md §4)."""
-    return F.datediff(as_of, F.to_date(F.col(created_col)))
 
 
 def multi_resolution_rollup(

@@ -62,21 +62,6 @@ def extract_words(
     return out.where(F.length(F.col(out_col)) >= min_len)
 
 
-def with_word_stats(
-    df: DataFrame,
-    text_col: str,
-    wc_col: str = "word_count",
-    cc_col: str = "char_count",
-) -> DataFrame:
-    """word/char counts via ``size(split())`` (reference
-    ``batch/job4_spam.py:96-105``)."""
-    t = F.col(text_col)
-    return df.withColumn(
-        wc_col,
-        F.when(F.trim(t) == "", 0).otherwise(F.size(F.split(F.trim(t), r"\s+"))),
-    ).withColumn(cc_col, F.length(t))
-
-
 def spam_indicators(
     df: DataFrame,
     text_col: str,

@@ -125,17 +125,6 @@ def doc_fingerprint(text: Column) -> Column:
     return F.md5(normalized)
 
 
-def with_text_stats(df: DataFrame, text_col: str) -> DataFrame:
-    t = F.col(text_col)
-    return (
-        df.withColumn("word_count", word_count(t))
-        .withColumn("token_count", token_count(t))
-        .withColumn("predicted_lang", predict_lang(t))
-        .withColumn("quality_score", quality_score(t))
-        .withColumn("fingerprint", doc_fingerprint(t))
-    )
-
-
 def winnow_fingerprints(
     df: DataFrame, id_col: str, text_col: str, k: int = 8, window: int = 16
 ) -> DataFrame:

@@ -87,7 +87,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # microseconds on 1e18-scale nanosecond epochs.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)

@@ -1945,71 +1945,45 @@ def _mp3_codec_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_codec_parity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_conf(spark)
-    long0 = F.lit(0).cast("long")
-    x10k = lambda c: F.round(F.col(c) * 10000).cast("long")  # noqa: E731
-    img = q_bmp_codec_features(spark, sf_dir).select(
-        "media_id",
-        F.lit("image").alias("modality"),
-        F.col("width").cast("long").alias("dim_a"),
-        F.col("height").cast("long").alias("dim_b"),
-        F.lit(1).cast("long").alias("n_units"),
-        long0.alias("duration_ms"),
-        x10k("mean_luma").alias("level_x10000"),
-        long0.alias("motion_x10000"),
-    )
-    aud = q_wav_codec_features(spark, sf_dir).select(
-        "media_id",
-        F.lit("audio").alias("modality"),
-        F.col("sample_rate").cast("long").alias("dim_a"),
-        F.lit(1).cast("long").alias("dim_b"),
-        long0.alias("n_units"),
-        F.col("duration_ms").cast("long").alias("duration_ms"),
-        long0.alias("level_x10000"),
-        long0.alias("motion_x10000"),
-    )
-    vid = q_y4m_codec_features(spark, sf_dir).select(
-        "media_id",
-        F.lit("video").alias("modality"),
-        F.col("width").cast("long").alias("dim_a"),
-        F.col("height").cast("long").alias("dim_b"),
-        F.col("n_frames").cast("long").alias("n_units"),
-        F.col("duration_ms").cast("long").alias("duration_ms"),
-        x10k("mean_luma").alias("level_x10000"),
-        x10k("motion").alias("motion_x10000"),
-    )
-    png = _png_codec_features(spark, sf_dir).select(
-        "media_id",
-        F.lit("png").alias("modality"),
-        F.col("width").cast("long").alias("dim_a"),
-        F.col("height").cast("long").alias("dim_b"),
-        F.lit(1).cast("long").alias("n_units"),
-        long0.alias("duration_ms"),
-        x10k("mean_luma").alias("level_x10000"),
-        long0.alias("motion_x10000"),
-    )
-    jpeg = _jpeg_codec_features(spark, sf_dir).select(
-        "media_id",
-        F.lit("jpeg").alias("modality"),
-        F.col("width").cast("long").alias("dim_a"),
-        F.col("height").cast("long").alias("dim_b"),
-        F.lit(1).cast("long").alias("n_units"),
-        long0.alias("duration_ms"),
-        x10k("mean_luma").alias("level_x10000"),
-        long0.alias("motion_x10000"),
-    )
-    mp3 = _mp3_codec_features(spark, sf_dir).select(
-        "media_id",
-        F.lit("mp3").alias("modality"),
-        F.col("sample_rate").cast("long").alias("dim_a"),
-        F.col("bitrate_kbps").cast("long").alias("dim_b"),
-        F.col("n_frames").cast("long").alias("n_units"),
-        F.col("duration_ms").cast("long").alias("duration_ms"),
-        long0.alias("level_x10000"),
-        long0.alias("motion_x10000"),
-    )
+
+    def rows(feats, modality, dim_a, dim_b, n_units, duration_ms=0,
+             level=None, motion=None):
+        """One report row per item: str args name columns, ints are
+        literals; the luma/motion scores read ×10000 (0 when absent)."""
+        def as_long(c):
+            return (F.col(c) if isinstance(c, str) else F.lit(c)).cast("long")
+
+        def x10k(c):
+            if c is None:
+                return as_long(0)
+            return F.round(F.col(c) * 10000).cast("long")
+
+        return feats.select(
+            "media_id",
+            F.lit(modality).alias("modality"),
+            as_long(dim_a).alias("dim_a"),
+            as_long(dim_b).alias("dim_b"),
+            as_long(n_units).alias("n_units"),
+            as_long(duration_ms).alias("duration_ms"),
+            x10k(level).alias("level_x10000"),
+            x10k(motion).alias("motion_x10000"),
+        )
+
     return (
-        img.unionByName(aud).unionByName(vid)
-        .unionByName(png).unionByName(jpeg).unionByName(mp3)
+        rows(q_bmp_codec_features(spark, sf_dir), "image", "width",
+             "height", 1, level="mean_luma")
+        .unionByName(rows(q_wav_codec_features(spark, sf_dir), "audio",
+                          "sample_rate", 1, 0, "duration_ms"))
+        .unionByName(rows(q_y4m_codec_features(spark, sf_dir), "video",
+                          "width", "height", "n_frames", "duration_ms",
+                          "mean_luma", "motion"))
+        .unionByName(rows(_png_codec_features(spark, sf_dir), "png",
+                          "width", "height", 1, level="mean_luma"))
+        .unionByName(rows(_jpeg_codec_features(spark, sf_dir), "jpeg",
+                          "width", "height", 1, level="mean_luma"))
+        .unionByName(rows(_mp3_codec_features(spark, sf_dir), "mp3",
+                          "sample_rate", "bitrate_kbps", "n_frames",
+                          "duration_ms"))
     )
 
 

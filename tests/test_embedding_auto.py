@@ -46,6 +46,22 @@ def test_hier_matches_bruteforce_fixture(spark, emb, threshold):
     assert hier == brute
 
 
+def test_blocked_slabs_match_bruteforce(spark, emb, monkeypatch):
+    """The blocked path multiplies each Arrow batch against the corpus
+    in row slabs of ~BLOCKED_SLAB_BYTES: with slabs of 7 rows, every
+    batch splits and the output must still equal brute force."""
+    import kafka_bigdata_jobs_spark.operators.similarity as sim
+
+    n = emb.count()
+    monkeypatch.setattr(sim, "BLOCKED_SLAB_BYTES", 8 * n * 7)
+    brute = _pairs(embedding_near_dup_pairs(
+        emb, "vec_id", "embedding", threshold=0.45))
+    slabs = _pairs(sim.embedding_near_dup_pairs_blocked(
+        emb, "vec_id", "embedding", threshold=0.45))
+    assert len(brute) > 0
+    assert slabs == brute
+
+
 def test_auto_identical_output_across_cutover(spark, emb):
     """The dispatch decision must be invisible in the result: force each
     path via max_side_bytes and compare against brute force."""
@@ -287,9 +303,11 @@ def test_distributed_fit_bit_equal_and_k_tracks_n(spark, monkeypatch):
     (a) produce the exact output (same covering-radius theorem — fit
     choice is quality-only, every pair is exact-verified), and
     (b) keep K tracking n/leaf_target where the DRIVER fit's sample
-    cap would clamp it.  The cap is monkeypatched down so the unit
-    corpus sits 'past the ceiling' the same way a 100M-row corpus
-    sits past the real 1M-row cap."""
+    cap would clamp it.  The fit path follows only from the input
+    size against ``FIT_SAMPLE_ROWS_CAP``: at the real cap the unit
+    corpus takes the driver fit; with the cap monkeypatched down it
+    sits 'past the ceiling' the same way a 100M-row corpus sits past
+    the real 1M-row cap, and the distributed fit runs."""
     import kafka_bigdata_jobs_spark.operators.similarity as sim
     from kafka_bigdata_jobs_spark.operators.similarity import (
         embedding_near_dup_pairs_blocked,
@@ -304,37 +322,37 @@ def test_distributed_fit_bit_equal_and_k_tracks_n(spark, monkeypatch):
         df, "vec_id", "embedding", threshold=0.97, dim=dim))
     assert len(blocked) > 0
 
-    # forced distributed, real cap: bit-equal output
-    st = HierStats()
-    dist = _pairs(embedding_near_dup_pairs_hier(
-        df, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=6, fit_mode="distributed", stats=st))
-    assert st.fit_mode == "distributed"
-    assert dist == blocked
+    # the fit path is not a caller option
+    for knob in ({"fit_mode": "distributed"}, {"home_probes": 8}):
+        with pytest.raises(TypeError):
+            embedding_near_dup_pairs_hier(
+                df, "vec_id", "embedding", threshold=0.97, dim=dim, **knob)
 
-    # past-the-ceiling regime: driver fit clamps K, auto goes
-    # distributed and K keeps tracking n/leaf_target
-    monkeypatch.setattr(sim, "FIT_SAMPLE_ROWS_CAP", 256)
+    # real cap: the driver fit, bit-equal output
     st = HierStats()
     drv = _pairs(embedding_near_dup_pairs_hier(
         df, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=6, fit_mode="driver", fit_sample_rows=64, stats=st))
+        leaf_target=6, stats=st))
     assert st.fit_mode == "driver"
-    k_driver = st.k
-    assert drv == blocked  # clamped K hurts cost, never correctness
+    assert drv == blocked
+
+    # past-the-ceiling regime: the distributed fit runs and K keeps
+    # tracking n/leaf_target
+    monkeypatch.setattr(sim, "FIT_SAMPLE_ROWS_CAP", 256)
     st = HierStats()
-    auto = _pairs(embedding_near_dup_pairs_hier(
+    dist = _pairs(embedding_near_dup_pairs_hier(
         df, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=6, fit_mode="auto", fit_sample_rows=64, stats=st))
+        leaf_target=6, fit_sample_rows=64, stats=st))
     assert st.fit_mode == "distributed"
-    k_dist = st.k
-    assert auto == blocked
-    # the cap clamped the driver fit's K to ~cap/4 (±per-branch
-    # rounding in _fit_two_level's proportional leaf allocation)
-    assert k_driver <= int(1.25 * 256 // 4)
-    assert k_dist >= 2 * k_driver, (
-        f"distributed fit K={k_dist} does not track n/leaf_target="
-        f"{n // 6} past the (patched) driver cap (driver K={k_driver})")
+    assert dist == blocked
+    # a driver fit clamped by the cap reaches at most K ~ cap/4 (±
+    # per-branch rounding in _fit_two_level's proportional leaf
+    # allocation): the distributed K must clear twice that bound
+    k_clamped = int(1.25 * 256 // 4)
+    assert st.k >= 2 * k_clamped, (
+        f"distributed fit K={st.k} does not track n/leaf_target="
+        f"{n // 6} past the (patched) driver cap (clamped driver "
+        f"K <= {k_clamped})")
 
 
 def test_on_blowup_fallback_routes_to_semdedup(spark):

@@ -126,9 +126,7 @@ def test_ordered_covers_registry_exactly(entry_mod):
 
 
 def test_fresh_group_internal_ordering(entry_mod):
-    """Within the never-checked group: oracle-backed first, then the
-    invariant-as-data reports, demoted rows-only queries last (their
-    invariants are republished by the reports and pinned by pytest)."""
+    """Within the never-checked group: oracle-backed first."""
     from kafka_bigdata_jobs_spark import suite
 
     reg = suite.registry()
@@ -138,8 +136,3 @@ def test_fresh_group_internal_ordering(entry_mod):
         pytest.skip("no never-checked queries remain")
     oracle_backed = [n for n in fresh if reg[n].oracle is not None]
     assert fresh[:len(oracle_backed)] == oracle_backed
-    rows_only = fresh[len(oracle_backed):]
-    prio = [n for n in rows_only if n in entry_mod._PRIORITY_ROWS_ONLY]
-    assert set(rows_only[:len(prio)]) == set(prio)
-    demoted = [n for n in rows_only if n in entry_mod._DEMOTED_ROWS_ONLY]
-    assert rows_only[len(rows_only) - len(demoted):] == demoted

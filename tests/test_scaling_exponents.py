@@ -315,7 +315,7 @@ def test_hier_pair_search_probed_and_bounded(scaling):
     assert row["exp_x30_x100"] <= 1.45, (
         f"hier pair search e(x30→x100)={row['exp_x30_x100']} regressed "
         "past the documented r8 ceiling — re-profile the phase times "
-        "(HierStats.phase_seconds, tools/stage_probe.py) first")
+        "(HierStats.phase_seconds, tools/embpairs_probe.py) first")
     # qualifying pairs are planted to grow ∝ n (10% twins per corpus):
     # superlinear OUTPUT growth means the generator or threshold broke.
     assert row["rows_x10"] <= 12 * row["rows_x1"], (

@@ -1,25 +1,37 @@
 """Scaling probe for the hierarchical exact pair search
 (``embedding_near_dup_pairs_hier`` — the ``embedding_close_pairs`` auto
-path past ``max_side_bytes``; r5 verdict item 1 "and a SCALING row for
-the celled path").
+path past ``max_side_bytes``).
 
 The suite's ``embeddings`` fixture is 2 000 rows at sf0.1 — three
 orders below where the hier path dispatches — so this probe generates
-its own corpora at 50k/150k/500k/1.5M rows with the structure the
-operator exists for (and that real embedding corpora have): content
-CLUSTERS.  The x30 leg (r6 verdict item 6) confirms the three-level
-quantizer's flattening EMPIRICALLY one scale past where the r6
-two-level Θ(n·√K) term was measured, rather than by stage math alone.
-Cluster count grows with the corpus (more distinct content regions at
-larger crawls), cluster width 15–30° so random same-cluster pairs stay
-BELOW the 0.95 threshold (cos 15°² ≈ 0.933 plus ≤0.008 cross-term
-jitter in 64-d), and 10% of points carry a planted twin at 1–4°
-(cos ≥ 0.9976) — so the qualifying-pair count grows LINEARLY with n
-and the measured exponent reflects the PLAN, not an output explosion.
+its own corpora at 50k/150k/500k/1.5M/5M (and, on request, 15M)
+rows with the structure the operator exists for (and that real
+embedding corpora have): content CLUSTERS.  Cluster count grows with
+the corpus (more distinct content regions at larger crawls), cluster
+width 15–30° so random same-cluster pairs stay BELOW the 0.95
+threshold (cos 15°² ≈ 0.933 plus ≤0.008 cross-term jitter in 64-d), and
+10% of points carry a planted twin at 1–4° (cos ≥ 0.9976) — so the
+qualifying-pair count grows LINEARLY with n and the measured exponent
+reflects the PLAN, not an output explosion.
+
+Each probed scale also records the best attempt's per-PHASE driver
+seconds (``HierStats.phase_seconds``) as ``phases_<scale>``, and each
+pair of consecutive probed scales gets per-phase exponents
+(``phase_exp_<lo>_<hi>``), so a superlinear leg is attributed to a
+phase instead of one conflated wall number.  Phases:
+
+- scan:      corpus scan + normalize + cache materialization
+- fit:       quantizer fit (sample, two-level Lloyd, esc-cap scan)
+- assign:    pass-1 Arrow home assignment + K-row radius aggregate
+- replicate: pass-2 Arrow replication + guard count
+- tail:      tagged union + leaf-grain pair matmul + distinct +
+             exact-verify joins + output count (the probe times the
+             ``count()`` inside ``stats.phase(spark, "tail")``)
 
 Honesty notes recorded with the row:
 - x1 output is checked pair-for-pair against the numpy-blocked exact
-  path (same contract both sides of the auto cutover).
+  path (same contract both sides of the auto cutover) whenever x1 is
+  probed.
 - Timings are COLD: the fit memo is cleared per attempt, so each run
   pays sample-fit + assignment + replication + pair join + exact
   verify — the full production build.
@@ -29,7 +41,13 @@ Honesty notes recorded with the row:
   no structure, not a plan defect; SemDeDup-class corpora are the
   workload.  (SCALE.md carries the same caveat.)
 
-Usage: python tools/embpairs_probe.py [--attempts 2] [--out SCALING.json]
+The row REPLACES ``operator_variants.embedding_near_dup_pairs_hier`` in
+``--out``; a run over a subset of scales writes only that subset's keys,
+so point ``--out`` elsewhere for spot checks.  The x300 corpus (15M
+rows) is probed only when named.
+
+Usage: python tools/embpairs_probe.py [--scales x1,x3,x10,x30,x100]
+       [--attempts 2] [--out SCALING.json]
 """
 
 from __future__ import annotations
@@ -48,7 +66,11 @@ import numpy as np  # noqa: E402
 from kafka_bigdata_jobs_spark.session import get_spark  # noqa: E402
 
 SIZES = {"x1": 50_000, "x3": 150_000, "x10": 500_000, "x30": 1_500_000,
-         "x100": 5_000_000}
+         "x100": 5_000_000, "x300": 15_000_000}
+#: Total-wall exponents the SCALING row names (each written when both
+#: of its scales were probed).
+NAMED_EXPONENTS = (("x3", "x10"), ("x1", "x10"), ("x10", "x30"),
+                   ("x30", "x100"))
 DIM = 64
 THRESHOLD = 0.95
 CONE_POINTS = 1_000  # flat cluster size: regions grow in NUMBER with n
@@ -98,100 +120,75 @@ def _gen_corpus(n: int, seed: int, path: str) -> None:
     pq.write_table(tbl, path, row_group_size=65536)
 
 
-def fit_ceiling_probe(out_path: str) -> None:
-    """r7 verdict item 1 demonstration at probe scale: patch the
-    driver fit-sample cap DOWN to 8192 rows so the x10 corpus (500k
-    rows) sits past the ceiling the same way a 100M-row corpus sits
-    past the real 1M-row cap, then run the SAME corpus through the
-    clamped driver fit and the two-stage distributed fit.  Records K,
-    mean live-leaf population, cold wall, and pair-set equality —
-    'K tracks n/leaf_target with leaf populations pinned' is the
-    done-criterion, output equality the safety gate."""
-    import json as _json
-
-    from kafka_bigdata_jobs_spark.operators import similarity as sim
-
-    path = os.path.join(DATA_ROOT, "x10.parquet")
+def _corpus(scale: str) -> str:
+    """Path of the scale's corpus, generated on first use."""
+    path = os.path.join(DATA_ROOT, f"{scale}.parquet")
     if not os.path.exists(path):
-        _gen_corpus(SIZES["x10"], seed=1234, path=path)
-    real_cap = sim.FIT_SAMPLE_ROWS_CAP
-    sim.FIT_SAMPLE_ROWS_CAP = 8192
-    row: dict = {"patched_cap_rows": 8192, "corpus_rows": SIZES["x10"]}
-    try:
-        spark = get_spark("kbj-spark-embpairs-fitceil")
-        spark.sparkContext.setLogLevel("ERROR")
-        pair_sets = {}
-        for mode in ("driver", "distributed"):
-            spark.catalog.clearCache()
-            sim._TWO_LEVEL_FIT_CACHE.clear()
-            df = spark.read.parquet(path)
-            stats = sim.HierStats()
-            t0 = time.monotonic()
-            out = sim.embedding_near_dup_pairs_hier(
-                df, "vec_id", "embedding", threshold=THRESHOLD,
-                dim=DIM, fit_mode=mode, stats=stats)
-            pair_sets[mode] = {(r["id_a"], r["id_b"], r["cosine"])
-                               for r in out.collect()}
-            wall = time.monotonic() - t0
-            assert stats.fit_mode == mode
-            k = stats.k
-            row[f"{mode}_wall"] = round(wall, 3)
-            row[f"{mode}_k_leaves"] = int(k)
-            row[f"{mode}_mean_leaf_rows"] = round(SIZES["x10"] / k, 1)
-            row[f"{mode}_replication"] = (
-                None if stats.replication is None
-                else round(stats.replication, 1))
-            print(f"fit-ceiling {mode}: wall={wall:.1f}s K={k} "
-                  f"leaf_rows={SIZES['x10']/k:.0f} "
-                  f"pairs={len(pair_sets[mode])}", flush=True)
-            import gc
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
-        row["pairs_equal"] = pair_sets["driver"] == pair_sets["distributed"]
-        row["pairs"] = len(pair_sets["distributed"])
-        row["note"] = (
-            "driver cap patched to 8192 rows puts the 500k-row x10 "
-            "corpus ~4x past the K-tracking ceiling (the real 1M cap "
-            "binds at ~16M rows): the clamped driver fit's leaf "
-            "populations grow toward n^2/K pair work while the "
-            "two-stage executor fit keeps K ~ n/leaf_target; outputs "
-            "bit-equal either way (fit choice is quality-only)")
-        spark.stop()
-    finally:
-        sim.FIT_SAMPLE_ROWS_CAP = real_cap
-    try:
-        with open(out_path, encoding="utf-8") as fh:
-            out = _json.load(fh)
-    except (OSError, ValueError):
-        out = {}
-    out.setdefault("operator_variants", {})[
-        "embedding_hier_distributed_fit"] = row
-    with open(out_path, "w", encoding="utf-8") as fh:
-        _json.dump(out, fh, indent=1, sort_keys=True)
-    print(f"wrote {out_path} embedding_hier_distributed_fit row")
+        print(f"generating {scale} ({SIZES[scale]} rows) ...", flush=True)
+        _gen_corpus(SIZES[scale], seed=1234, path=path)
+    return path
+
+
+def _exp(lo: str, hi: str, t_lo: float, t_hi: float) -> float:
+    """Scaling exponent of a time between two probed scales."""
+    return round(math.log(max(t_hi, 1e-3) / max(t_lo, 1e-3))
+                 / math.log(SIZES[hi] / SIZES[lo]), 2)
+
+
+def probe_row(results: dict, verified_x1: bool | None = None) -> dict:
+    """The SCALING row from per-scale probe results.
+
+    ``results`` maps each probed scale (a ``SIZES`` key) to its best
+    cold attempt: ``{"seconds", "pairs", "replication", "phases"}``
+    (``replication`` None when the guard was skipped, ``phases`` the
+    attempt's ``HierStats.phase_seconds``).  ``verified_x1`` is the x1
+    equality gate's outcome, None when x1 was not probed.
+    """
+    row: dict = {}
+    probed = sorted(results, key=list(SIZES).index)
+    for scale in probed:
+        res = results[scale]
+        row[scale] = round(res["seconds"], 3)
+        row[f"rows_{scale}"] = res["pairs"]
+        if res["replication"] is not None:
+            # mean covering-radius replication factor from the runtime
+            # guard — the cost-blowup early signal (flat == healthy)
+            row[f"rep_{scale}"] = round(res["replication"], 1)
+        row[f"phases_{scale}"] = {
+            ph: round(sec, 3) for ph, sec in res["phases"].items()}
+    for lo, hi in NAMED_EXPONENTS:
+        if lo in results and hi in results:
+            row[f"exp_{lo}_{hi}"] = _exp(lo, hi, row[lo], row[hi])
+    for lo, hi in zip(probed, probed[1:]):
+        ph_hi = row[f"phases_{hi}"]
+        row[f"phase_exp_{lo}_{hi}"] = {
+            **{ph: _exp(lo, hi, t, ph_hi[ph])
+               for ph, t in row[f"phases_{lo}"].items()},
+            "total": _exp(lo, hi, row[lo], row[hi])}
+    if verified_x1 is not None:
+        row["verified_vs_blocked_x1"] = verified_x1
+    row["note"] = (
+        "cold fit+assign+replicate+pair+exact-verify on clustered "
+        f"corpora (cones of {CONE_POINTS}, 10% planted twins, "
+        f"threshold {THRESHOLD}); qualifying pairs grow linearly by "
+        "construction — see tools/embpairs_probe.py docstring; corpora "
+        "written with 64k-row parquet row groups so the scan "
+        "parallelizes like a real multi-file corpus")
+    return row
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--scales", default="x1,x3,x10,x30,x100",
+                    help=f"comma-separated subset of {','.join(SIZES)}")
     ap.add_argument("--attempts", type=int, default=2)
     ap.add_argument("--out", default="SCALING.json")
-    ap.add_argument("--fit-ceiling", action="store_true",
-                    help="run only the distributed-fit ceiling probe")
     args = ap.parse_args()
-
-    if args.fit_ceiling:
-        fit_ceiling_probe(args.out)
-        return
+    scales = set(args.scales.split(","))
+    if not scales <= set(SIZES):
+        ap.error(f"--scales takes a subset of {','.join(SIZES)}")
 
     from kafka_bigdata_jobs_spark.operators import similarity as sim
-
-    paths = {}
-    for scale, n in SIZES.items():
-        p = os.path.join(DATA_ROOT, f"{scale}.parquet")
-        if not os.path.exists(p):
-            print(f"generating {scale} ({n} rows) ...", flush=True)
-            _gen_corpus(n, seed=1234, path=p)
-        paths[scale] = p
 
     def run_cold(spark, path: str):
         spark.catalog.clearCache()
@@ -202,79 +199,57 @@ def main() -> None:
         out = sim.embedding_near_dup_pairs_hier(
             df, "vec_id", "embedding", threshold=THRESHOLD, dim=DIM,
             stats=stats)
-        n_pairs = out.count()
-        # Shuffle files (the tagged replicas·vectors relation) only get
-        # deleted when the JVM GCs the dropped RDD references; without
-        # this nudge nine probe runs ACCUMULATE ~8 GB each and the x10
-        # warm-up dies on SPILL_OUT_OF_MEMORY / no-space-left (measured,
-        # 2026-08-16).  Belt: GC after every run.  Suspenders: a fresh
-        # session per scale below.
+        with stats.phase(spark, "tail"):
+            n_pairs = out.count()
+        total = time.monotonic() - t0
+        # Shuffle files of the tagged relation are deleted only when the
+        # JVM GCs the dropped RDD references: without this nudge nine
+        # runs accumulated ~8 GB each and the x10 warm-up died on
+        # no-space-left (measured 2026-08-16).
         import gc
         gc.collect()
         spark.sparkContext._jvm.System.gc()
-        return time.monotonic() - t0, n_pairs, stats.replication
+        return total, n_pairs, stats
 
-    row: dict = {}
-    for scale, path in SIZES.items():
-        p = paths[scale]
+    results: dict = {}
+    verified = None
+    for scale in sorted(scales, key=list(SIZES).index):
+        path = _corpus(scale)
         # Fresh session per scale: its blockmgr dir (accumulated shuffle
-        # files) is removed on stop(), so each scale starts disk-clean.
+        # files) is removed on stop(), so each scale starts disk-clean —
+        # try/finally keeps that true when a run crashes (ADVICE r6).
         spark = get_spark("kbj-spark-embpairs-probe")
-        spark.sparkContext.setLogLevel("ERROR")
-        run_cold(spark, p)  # untimed warm-up: codegen/JIT, parquet footers
-        best, rows, rep = math.inf, -1, None
-        for _ in range(max(2, args.attempts)):
-            dt, rows, rep = run_cold(spark, p)
-            best = min(best, dt)
-        row[scale] = round(best, 3)
-        row[f"rows_{scale}"] = rows
-        if rep is not None:
-            # mean covering-radius replication factor from the runtime
-            # guard — the cost-blowup early signal (flat == healthy)
-            row[f"rep_{scale}"] = round(rep, 1)
-        print(f"{scale:4s} hier {best:8.2f}s pairs={rows} rep={rep}",
-              flush=True)
-        spark.stop()
+        try:
+            spark.sparkContext.setLogLevel("ERROR")
+            run_cold(spark, path)  # untimed warm-up: codegen/JIT, footers
+            best = None
+            for _ in range(max(2, args.attempts)):
+                total, pairs, st = run_cold(spark, path)
+                if best is None or total < best["seconds"]:
+                    best = {"seconds": total, "pairs": pairs,
+                            "replication": st.replication,
+                            "phases": dict(st.phase_seconds),
+                            "k": st.k, "fit_mode": st.fit_mode}
+            results[scale] = best
+            print(f"{scale:4s} hier {best['seconds']:8.2f}s "
+                  + " ".join(f"{k}={v}" for k, v in best.items()
+                             if k != "seconds"), flush=True)
+            if scale == "x1":
+                # equality gate vs the blocked exact path (the auto twin)
+                df1 = spark.read.parquet(path)
+                hier, blocked = (
+                    {(r["id_a"], r["id_b"], r["cosine"]) for r in search(
+                        df1, "vec_id", "embedding", threshold=THRESHOLD,
+                        dim=DIM).collect()}
+                    for search in (sim.embedding_near_dup_pairs_hier,
+                                   sim.embedding_near_dup_pairs_blocked))
+                verified = hier == blocked
+                print(f"x1 equality vs blocked: {verified} "
+                      f"({len(hier)} pairs)", flush=True)
+        finally:
+            spark.stop()
 
-    # x1 equality gate vs the blocked exact path (the auto twin).
-    # try/finally so the gate session's blockmgr dirs are removed even
-    # on a comparison crash — the same disk hygiene as the per-scale
-    # sessions (ADVICE r6).
-    spark = get_spark("kbj-spark-embpairs-probe")
-    try:
-        spark.sparkContext.setLogLevel("ERROR")
-        df1 = spark.read.parquet(paths["x1"])
-        hier = {(r["id_a"], r["id_b"], r["cosine"])
-                for r in sim.embedding_near_dup_pairs_hier(
-                    df1, "vec_id", "embedding", threshold=THRESHOLD,
-                    dim=DIM).collect()}
-        blocked = {(r["id_a"], r["id_b"], r["cosine"])
-                   for r in sim.embedding_near_dup_pairs_blocked(
-                       df1, "vec_id", "embedding", threshold=THRESHOLD,
-                       dim=DIM).collect()}
-        row["verified_vs_blocked_x1"] = hier == blocked
-        print(f"x1 equality vs blocked: {row['verified_vs_blocked_x1']} "
-              f"({len(hier)} pairs)", flush=True)
-    finally:
-        spark.stop()
-
-    def _exp(lo: str, hi: str) -> float:
-        return round(
-            math.log(max(row[hi], 1e-3) / max(row[lo], 1e-3))
-            / math.log(SIZES[hi] / SIZES[lo]), 2)
-
-    row["exp_x3_x10"] = _exp("x3", "x10")
-    row["exp_x1_x10"] = _exp("x1", "x10")
-    row["exp_x10_x30"] = _exp("x10", "x30")
-    row["exp_x30_x100"] = _exp("x30", "x100")
-    row["note"] = (
-        "cold fit+assign+replicate+pair+exact-verify on clustered "
-        f"corpora (cones of {CONE_POINTS}, 10% planted twins, "
-        f"threshold {THRESHOLD}); qualifying pairs grow linearly by "
-        "construction — see tools/embpairs_probe.py docstring; corpora "
-        "written with 64k-row parquet row groups so the scan "
-        "parallelizes like a real multi-file corpus")
-
+    row = probe_row(results, verified)
     try:
         with open(args.out, encoding="utf-8") as fh:
             out = json.load(fh)
