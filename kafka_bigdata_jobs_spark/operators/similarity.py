@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import session_memo
+
 
 def as_double_vec(col: Column) -> Column:
     return col.cast("array<double>")
@@ -501,10 +503,6 @@ def _guard_replication(rep: DataFrame, n_rows: int, max_replication: float,
         )
     return rep, mean_rep
 
-
-#: Memo for sample-fitted two-level quantizers, keyed like
-#: _KMEANS_MODEL_CACHE (evicted with its session's application id).
-_TWO_LEVEL_FIT_CACHE: dict[tuple, tuple] = {}
 
 #: Driver-memory ceiling on the auto-scaled hier fit sample (rows).
 #: 1M rows × 64 dims × 8 B = 512 MB driver-side during the fit — the
@@ -1147,36 +1145,42 @@ def _hier_fit(base, n_rows: int, *, leaf_target: int, seed: int,
     """Hier phase 1: the bounded-sample quantizer fit, memoized per
     corpus snapshot.  Returns ``(bcenters, leaf_centers, leaf_branch,
     esc_cap)``."""
-    import numpy as np
-
-    spark = base.sparkSession
     # go distributed exactly where the driver fit's sample cap would
     # otherwise stop K from tracking n/leaf_target (the ~16M-row
     # ceiling; see _fit_two_level_distributed)
     want_rows = max(fit_sample_rows, 4 * max(1, n_rows // leaf_target))
     use_dist = want_rows > FIT_SAMPLE_ROWS_CAP
     stats.fit_mode = "distributed" if use_dist else "driver"
-    app = spark.sparkContext.applicationId
-    memo_key = None
-    if cache_key is not None:
-        memo_key = (cache_key, leaf_target, seed, dim, fit_sample_rows,
-                    use_dist, app)
-        for dead in [x for x in _TWO_LEVEL_FIT_CACHE if x[-1] != app]:
-            del _TWO_LEVEL_FIT_CACHE[dead]
-    fit = _TWO_LEVEL_FIT_CACHE.get(memo_key) if memo_key else None
-    if fit is None and use_dist:
-        fit = _fit_two_level_distributed(
-            base, n_rows, leaf_target, fit_sample_rows, seed, dim,
-            fit_seconds=stats.fit_seconds)
-        if len(fit[1]) == 0:
+
+    def build():
+        if use_dist:
+            fit = _fit_two_level_distributed(
+                base, n_rows, leaf_target, fit_sample_rows, seed, dim,
+                fit_seconds=stats.fit_seconds)
+            if len(fit[1]):
+                return fit
             # stage-B Bernoulli sample came back empty (only possible
             # on tiny corpora): the bounded driver fit is exact there
-            fit = None
             stats.fit_mode = "driver"
-        elif memo_key is not None:
-            _TWO_LEVEL_FIT_CACHE[memo_key] = fit
-    if fit is not None:
-        return fit
+        return _hier_driver_fit(base, n_rows, want_rows,
+                                leaf_target=leaf_target, seed=seed, dim=dim,
+                                stats=stats)
+
+    if cache_key is None:
+        return build()
+    return session_memo(
+        base.sparkSession,
+        ("two_level_fit", cache_key, leaf_target, seed, dim,
+         fit_sample_rows, use_dist),
+        build)
+
+
+def _hier_driver_fit(base, n_rows: int, want_rows: int, *,
+                     leaf_target: int, seed: int, dim: int, stats: HierStats):
+    """:func:`_hier_fit`'s driver path: a two-level fit on a seeded
+    sample of at most :data:`FIT_SAMPLE_ROWS_CAP` rows."""
+    import numpy as np
+
     # Bernoulli sample, NO .limit(): limit keeps the FIRST rows in
     # file order, so on a corpus written in content-cluster order it
     # silently excludes the tail clusters from the fit — their
@@ -1239,14 +1243,11 @@ def _hier_fit(base, n_rows: int, *, leaf_target: int, seed: int,
     # scan's 3.8; with the absolute cap the radii match the exact
     # scan at every probe scale).
     t = time.monotonic()
-    esc_cap = _esc_cap_max(spark, sample, *two_level,
+    esc_cap = _esc_cap_max(base.sparkSession, sample, *two_level,
                            base=base, frac=frac, seed=seed,
                            dim=dim, n_rows=n_rows) + 0.05
     _lap(stats.fit_seconds, "esc_cap", t)
-    fit = (*two_level, esc_cap)
-    if memo_key is not None:
-        _TWO_LEVEL_FIT_CACHE[memo_key] = fit
-    return fit
+    return (*two_level, esc_cap)
 
 
 def _hier_assign(base, fit, id_type, *, dim: int, seed: int,
@@ -2172,13 +2173,10 @@ def l2_normalize(vec_col: str, dim: int) -> Column:
 # Fitted-quantizer memo: the index BUILD (k-means fit / PQ codebooks) is a
 # one-time artifact in any real deployment — queries run against a prebuilt
 # index.  Callers opt in with an explicit ``cache_key`` naming the corpus
-# snapshot (e.g. the sf_dir); the memo key includes every fit parameter, so
-# a hit returns the byte-identical quantizer the same call would have
-# trained.  JVM-tied models are additionally keyed by Spark applicationId
-# so a new session never sees a stale JVM handle.  No implicit keying off
-# DataFrame identity: an unnamed corpus always refits.
-_KMEANS_MODEL_CACHE: dict = {}
-_PQ_BOOKS_CACHE: dict = {}
+# snapshot (e.g. the sf_dir); the session memo key includes every fit
+# parameter, so a hit returns the byte-identical quantizer the same call
+# would have trained, and a new session never sees a stale JVM handle.  No
+# implicit keying off DataFrame identity: an unnamed corpus always refits.
 
 
 def kmeans_ivf_cells(
@@ -2215,57 +2213,41 @@ def kmeans_ivf_cells(
     ).withColumn("__nv", l2_normalize("__dv", dim))
     ml_df = normed.withColumn("__features", array_to_vector(F.col("__nv")))
     spark = corpus.sparkSession
-    memo_key = None
-    if cache_key is not None:
-        memo_key = (
-            cache_key,
-            n_cells,
-            max_iter,
-            seed,
-            dim,
-            KMEANS_FIT_SAMPLE_ROWS,
-            spark.sparkContext.applicationId,
-        )
-        # Evict models tied to stopped sessions — JVM handles are dead
-        # once their application is gone (ADVICE r3 hygiene).
-        app = spark.sparkContext.applicationId
-        for dead in [k for k in _KMEANS_MODEL_CACHE if k[-1] != app]:
-            del _KMEANS_MODEL_CACHE[dead]
-        hit = _KMEANS_MODEL_CACHE.get(memo_key)
-        if hit is not None:
-            assigned = hit.transform(ml_df).select(id_col, vec_col, "__cell")
-            centers = spark.createDataFrame(
-                [(i, [float(x) for x in c]) for i, c in enumerate(hit.clusterCenters())],
-                "cell_id int, center array<double>",
-            )
-            return assigned, centers
-    # The fit iterates over its input maxIter(+init) times: cache it so
-    # each pass reads memory, not parquet+normalize, and right-size the
-    # partitioning to the sample (a 32-partition layout on a k-means
-    # SAMPLE means ~32 near-empty tasks per iteration — measured 51 s
-    # vs ~4 s for the identical fit).  Seeded random init skips
-    # k-means||'s extra distributed passes; with bounded iterations on
-    # a quantizer (not a final clustering) quality is equivalent.
-    n = ml_df.count()
-    fit_df = ml_df
-    if n > KMEANS_FIT_SAMPLE_ROWS:
-        # 1.05 headroom keeps the Bernoulli sample's expected size at the
-        # cap; exactness doesn't matter, determinism (fixed seed) does.
-        fit_df = ml_df.sample(
-            fraction=min(1.0, 1.05 * KMEANS_FIT_SAMPLE_ROWS / n), seed=seed)
-        n = KMEANS_FIT_SAMPLE_ROWS
-    fit_input = fit_df.coalesce(max(1, min(8, n // 2000 + 1))).cache()
-    model = KMeans(
-        k=n_cells,
-        seed=seed,
-        maxIter=max_iter,
-        initMode="random",
-        featuresCol="__features",
-        predictionCol="__cell",
-    ).fit(fit_input)
-    fit_input.unpersist()
-    if memo_key is not None:
-        _KMEANS_MODEL_CACHE[memo_key] = model
+
+    def fit():
+        # The fit iterates over its input maxIter(+init) times: cache it
+        # so each pass reads memory, not parquet+normalize, and right-size
+        # the partitioning to the sample (a 32-partition layout on a
+        # k-means SAMPLE means ~32 near-empty tasks per iteration —
+        # measured 51 s vs ~4 s for the identical fit).  Seeded random
+        # init skips k-means||'s extra distributed passes; with bounded
+        # iterations on a quantizer (not a final clustering) quality is
+        # equivalent.
+        n = ml_df.count()
+        fit_df = ml_df
+        if n > KMEANS_FIT_SAMPLE_ROWS:
+            # 1.05 headroom keeps the Bernoulli sample's expected size at
+            # the cap; exactness doesn't matter, determinism (fixed seed)
+            # does.
+            fit_df = ml_df.sample(
+                fraction=min(1.0, 1.05 * KMEANS_FIT_SAMPLE_ROWS / n),
+                seed=seed)
+            n = KMEANS_FIT_SAMPLE_ROWS
+        fit_input = fit_df.coalesce(max(1, min(8, n // 2000 + 1))).cache()
+        model = KMeans(
+            k=n_cells,
+            seed=seed,
+            maxIter=max_iter,
+            initMode="random",
+            featuresCol="__features",
+            predictionCol="__cell",
+        ).fit(fit_input)
+        fit_input.unpersist()
+        return model
+
+    model = fit() if cache_key is None else session_memo(
+        spark, ("kmeans_model", cache_key, n_cells, max_iter, seed, dim,
+                KMEANS_FIT_SAMPLE_ROWS), fit)
     assigned = model.transform(ml_df).select(id_col, vec_col, "__cell")
     centers = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
@@ -2414,40 +2396,41 @@ def pq_fit_codebooks(
     import numpy as np
 
     assert dim % m == 0, "dim must divide into m subspaces"
-    memo_key = None
-    if cache_key is not None:
-        # Pure-NumPy artifact: session-independent, so no appId in the key.
-        memo_key = (cache_key, m, n_centroids, dim, seed, fit_sample_rows, iters)
-        hit = _PQ_BOOKS_CACHE.get(memo_key)
-        if hit is not None:
-            return hit
-    sub = dim // m
-    n = corpus.count()
-    fit_df = corpus.select(as_double_vec(F.col(vec_col)).alias("v"))
-    if n > fit_sample_rows:
-        fit_df = fit_df.sample(fraction=min(1.0, 1.05 * fit_sample_rows / n), seed=seed)
-    X = np.array([r["v"] for r in fit_df.collect()], dtype=np.float64)
-    norms = np.linalg.norm(X, axis=1, keepdims=True)
-    norms[norms == 0.0] = 1.0
-    X = X / norms
-    k_eff = max(2, min(n_centroids, len(X) // 4))
-    rng = np.random.RandomState(seed)
-    books = np.empty((m, k_eff, sub))
-    for j in range(m):
-        S = X[:, j * sub : (j + 1) * sub]
-        C = S[rng.choice(len(S), size=k_eff, replace=False)]
-        for _ in range(iters):
-            # assign: nearest centroid by squared L2
-            d2 = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            for c in range(k_eff):
-                pts = S[a == c]
-                if len(pts):
-                    C[c] = pts.mean(axis=0)
-        books[j] = C
-    if memo_key is not None:
-        _PQ_BOOKS_CACHE[memo_key] = books
-    return books
+
+    def fit():
+        sub = dim // m
+        n = corpus.count()
+        fit_df = corpus.select(as_double_vec(F.col(vec_col)).alias("v"))
+        if n > fit_sample_rows:
+            fit_df = fit_df.sample(
+                fraction=min(1.0, 1.05 * fit_sample_rows / n), seed=seed)
+        X = np.array([r["v"] for r in fit_df.collect()], dtype=np.float64)
+        norms = np.linalg.norm(X, axis=1, keepdims=True)
+        norms[norms == 0.0] = 1.0
+        X = X / norms
+        k_eff = max(2, min(n_centroids, len(X) // 4))
+        rng = np.random.RandomState(seed)
+        books = np.empty((m, k_eff, sub))
+        for j in range(m):
+            S = X[:, j * sub : (j + 1) * sub]
+            C = S[rng.choice(len(S), size=k_eff, replace=False)]
+            for _ in range(iters):
+                # assign: nearest centroid by squared L2
+                d2 = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+                a = d2.argmin(axis=1)
+                for c in range(k_eff):
+                    pts = S[a == c]
+                    if len(pts):
+                        C[c] = pts.mean(axis=0)
+            books[j] = C
+        return books
+
+    if cache_key is None:
+        return fit()
+    return session_memo(
+        corpus.sparkSession,
+        ("pq_books", cache_key, m, n_centroids, dim, seed, fit_sample_rows,
+         iters), fit)
 
 
 def pq_encode(

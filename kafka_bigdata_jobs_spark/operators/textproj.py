@@ -31,13 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: (applicationId, sf_dir) -> cached projection.  Keyed by the Spark
-#: application so a restarted session never sees a stale plan handle.
-_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, sf_dir)
+from ..session import session_cached
 
 
 def tokenized_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,16 +45,11 @@ def tokenized_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`guarded_word_count` on the array, which reproduces
     ``textstats.word_count``'s empty-text → 0 special case.
     """
-    key = _key(spark, sf_dir)
-    # Evict handles bound to stopped sessions (same hygiene as
-    # suite._evict_dead_sessions, ADVICE r3).
-    for dead in [k for k in _CACHE if k[0] != key[0]]:
-        del _CACHE[dead]
-    if key not in _CACHE:
+    def build() -> DataFrame:
         from ..schemas import load_table
 
         text = F.col("text")
-        proj = load_table(spark, sf_dir, "documents").select(
+        return load_table(spark, sf_dir, "documents").select(
             "doc_id",
             "source",
             "lang",
@@ -68,17 +57,8 @@ def tokenized_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length(F.regexp_replace(text, r"[^A-Za-z]", "")).alias("n_alpha"),
             F.split(F.trim(text), r"\s+").alias("words"),
         )
-        _CACHE[key] = proj.cache()
-    df = _CACHE[key]
-    # catalog.clearCache() (bench isolation) drops the CacheManager entry
-    # but not this handle — re-mark so downstream actions don't silently
-    # re-split the corpus on every action, and store the re-marked
-    # handle back so later calls see it (ADVICE r3).
-    lvl = df.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
-        df = df.cache()
-        _CACHE[key] = df
-    return df
+
+    return session_cached(spark, ("tokenized_documents", sf_dir), build)
 
 
 def guarded_word_count(words: F.Column) -> F.Column:
@@ -87,13 +67,3 @@ def guarded_word_count(words: F.Column) -> F.Column:
     empty = (F.size(words) == 1) & (F.element_at(words, 1) == "")
     return F.when(empty, 0).otherwise(F.size(words))
 
-
-def clear_cache(spark: SparkSession | None = None) -> None:
-    """Unpersist and drop cached projections (tests / session teardown)."""
-    for key in list(_CACHE):
-        if spark is None or key[0] == spark.sparkContext.applicationId:
-            try:
-                _CACHE[key].unpersist()
-            except Exception:
-                pass
-            del _CACHE[key]

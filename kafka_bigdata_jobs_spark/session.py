@@ -17,7 +17,7 @@ import subprocess
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Runtime confs that are safe to (re)apply to an existing session.
 RUNTIME_CONF = {
@@ -353,3 +353,59 @@ def ensure_package_shipped(spark: SparkSession) -> None:
         # to the environment (the in-repo/local-mode path still works).
         pass
     sc._kbj_pkg_shipped = True
+
+
+#: ``(applicationId, family, *parts)`` -> a session-scoped intermediate:
+#: a pair relation, a graph projection, a fitted quantizer, a tokenizer
+#: table.  Built once per session and read by every query that needs it;
+#: in production each is a write-once materialized artifact.
+_MEMO: dict[tuple, object] = {}
+
+
+def session_memo(spark: SparkSession, key: tuple, build):
+    """``build()``, built once per session and ``key`` (a
+    ``(family, *parts)`` tuple naming the intermediate and every input
+    that shapes it).  Every call first drops other applications'
+    entries: a long-lived process cycling sessions would otherwise keep
+    dead-session handles (DataFrames, JVM models) forever."""
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _MEMO if k[0] != app]:
+        del _MEMO[k]
+    key = (app, *key)
+    if key not in _MEMO:
+        _MEMO[key] = build()
+    return _MEMO[key]
+
+
+def session_cached(spark: SparkSession, key: tuple, build) -> DataFrame:
+    """:func:`session_memo` for a DataFrame kept ``.cache()``d.
+
+    ``catalog.clearCache()`` (bench isolation) drops the CacheManager
+    entry but not the memo's handle, so a hit whose storage level is
+    gone is re-marked in place (``cache()`` returns the same handle, so
+    the memo keeps the re-marked one and later calls do not re-cache)
+    and repopulated at once.  The re-mark is EAGER: a lazily re-marked
+    relation leaves its first consumer racing several plan branches
+    against cache population -- the branch recompute race
+    ``near_dup_pairs`` documents internally, measured landing anywhere
+    between 4.7 s and 20 s for the same query at the same scale.  One
+    ``count()`` here makes every consumer after an eviction read a
+    populated cache.
+    """
+    df = session_memo(spark, key, lambda: build().cache())
+    lvl = df.storageLevel
+    if not (lvl.useMemory or lvl.useDisk):
+        df.cache().count()
+    return df
+
+
+def forget(spark: SparkSession, *families: str) -> None:
+    """Drop this session's memo entries -- all of them, or only those of
+    ``families`` -- unpersisting cached DataFrames (tests, cold-build
+    timing)."""
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _MEMO
+              if k[0] == app and (not families or k[1] in families)]:
+        v = _MEMO.pop(k)
+        if isinstance(v, DataFrame):
+            v.unpersist()

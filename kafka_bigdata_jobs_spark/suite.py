@@ -26,7 +26,7 @@ from .operators import relational as R
 from .operators import temporal as TP
 from .operators import text as TX
 from .schemas import load_table
-from .session import apply_runtime_conf
+from .session import apply_runtime_conf, session_cached, session_memo
 
 
 @dataclass(frozen=True)
@@ -162,79 +162,36 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-#: (applicationId, sf_dir) -> cached char-shingle near-dup pair relation.
-#: Three queries (near_dup_pairs_minhash, near_dup_clusters,
-#: near_dup_retention) consume the SAME MinHash-LSH funnel output at
-#: threshold 0.8; in production the dedup pair list is a materialized
-#: intermediate (you never re-run the funnel per downstream question),
-#: so the suite shares one cached relation per session — the textproj
-#: pattern applied to the dedup family.
-_NEAR_DUP_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _evict_dead_sessions(cache: dict, app_id: str) -> None:
-    """Drop cache entries bound to stopped Spark sessions: a long-lived
-    process cycling sessions would otherwise accumulate dead-session
-    DataFrame handles forever (ADVICE r3)."""
-    for k in [k for k in cache if k[0] != app_id]:
-        del cache[k]
-
-
-def _session_cached_df(cache: dict, spark: SparkSession, sf_dir: str,
-                       build) -> DataFrame:
-    """Shared (applicationId, sf_dir)-keyed .cache() memo for the
-    materialized-intermediate relations below.  Evicts dead-session
-    entries, builds+caches on miss, and — because catalog.clearCache()
-    (bench isolation) drops the CacheManager entry but not this handle —
-    re-marks an uncached handle AND stores it back so later calls see
-    the re-cached one instead of re-caching every time (ADVICE r3).
-
-    The re-mark is EAGER (r5): a lazily re-marked relation leaves its
-    first consumer racing multiple plan branches against cache
-    population — the same branch-recompute race near_dup_pairs
-    documents internally, measured landing anywhere between 4.7 s and
-    20 s for the same query at the same scale.  One count() here makes
-    every post-eviction consumer read a populated cache
-    deterministically."""
-    app = spark.sparkContext.applicationId
-    _evict_dead_sessions(cache, app)
-    key = (app, sf_dir)
-    if key not in cache:
-        cache[key] = build().cache()
-    df = cache[key]
-    lvl = df.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
-        df = df.cache()
-        cache[key] = df
-        df.count()
-    return df
-
-
 def _shared_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The char-shingle near-dup pair relation.  Three queries
+    (near_dup_pairs_minhash, near_dup_clusters, near_dup_retention)
+    consume the SAME MinHash-LSH funnel output at threshold 0.8; in
+    production the dedup pair list is a materialized intermediate (you
+    never re-run the funnel per downstream question), so the suite
+    shares one cached relation per session — the textproj pattern
+    applied to the dedup family."""
     from .operators.dedup import near_dup_pairs
 
-    return _session_cached_df(
-        _NEAR_DUP_PAIRS_CACHE, spark, sf_dir,
+    return session_cached(
+        spark, ("near_dup_pairs", sf_dir),
         lambda: near_dup_pairs(
             _t(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.8
         ),
     )
 
 
-#: Same sharing for the embedding-cosine pair relation (threshold 0.45),
-#: consumed by embedding_close_pairs and embedding_dedup_retention.
-_EMB_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shared_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Same sharing for the embedding-cosine pair relation (threshold
+    0.45), consumed by embedding_close_pairs and
+    embedding_dedup_retention."""
     # Size-dispatched (r5 verdict item 1): blocked matmul below the
     # side-matrix bound (all driver SFs — bit-exact vs the oracle),
     # cell-partitioned exact pair search above it, same output either
     # side of the cutover (tests/test_embedding_auto.py).
     from .operators.similarity import embedding_near_dup_pairs_auto
 
-    return _session_cached_df(
-        _EMB_PAIRS_CACHE, spark, sf_dir,
+    return session_cached(
+        spark, ("embedding_pairs", sf_dir),
         lambda: embedding_near_dup_pairs_auto(
             _t(spark, sf_dir, "embeddings"), "vec_id", "embedding",
             threshold=0.45, cache_key=f"embpairs:{sf_dir}",
@@ -7995,24 +7952,17 @@ def q_supplier_copurchase_similarity(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-#: (applicationId, sf_dir) -> trained BPE merge table.  The merge table
-#: is a tokenizer ARTIFACT: trained once per corpus snapshot, applied
-#: many times (bpe_learned_merges reports it, bpe_tokenize_census
-#: deploys it) — same amortization as the ANN fit memo.  Driver-side
-#: list of 8 tuples: negligible memory, session-keyed.
-_BPE_MERGES_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _shared_bpe_merges(spark: SparkSession, sf_dir: str) -> list:
+    """The trained BPE merge table.  It is a tokenizer ARTIFACT: trained
+    once per corpus snapshot, applied many times (bpe_learned_merges
+    reports it, bpe_tokenize_census deploys it) — same amortization as
+    the ANN fit memo.  Driver-side list of 8 tuples: negligible memory,
+    session-keyed."""
     from .operators.bpe import bpe_learn
 
-    app = spark.sparkContext.applicationId
-    _evict_dead_sessions(_BPE_MERGES_CACHE, app)
-    key = (app, sf_dir)
-    if key not in _BPE_MERGES_CACHE:
-        docs = _t(spark, sf_dir, "documents")
-        _BPE_MERGES_CACHE[key] = bpe_learn(docs, "text", n_merges=8)
-    return _BPE_MERGES_CACHE[key]
+    return session_memo(
+        spark, ("bpe_merges", sf_dir),
+        lambda: bpe_learn(_t(spark, sf_dir, "documents"), "text", n_merges=8))
 
 
 @register(
@@ -8474,16 +8424,6 @@ def q_conversion_latency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # customer_supplier_pagerank).
 # ---------------------------------------------------------------------------
 
-#: (applicationId, sf_dir) -> canonical supplier co-purchase edge
-#: relation (supp_u < supp_v sharing >= 3 customers).  Two queries
-#: (supplier_graph_triangles, supplier_graph_clustering) analyze the
-#: SAME projected graph; in production the projection is a materialized
-#: intermediate, so the suite shares one cached relation per session —
-#: the near-dup-pairs pattern applied to the graph family.
-_COPURCHASE_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-_BIPARTITE_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shared_bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached customer<->supplier bipartite edge relation
     (both directions, ids interleaved: customer = 2k, supplier = 2k+1)
@@ -8505,7 +8445,7 @@ def _shared_bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             cs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
         )
 
-    return _session_cached_df(_BIPARTITE_EDGES_CACHE, spark, sf_dir, build)
+    return session_cached(spark, ("bipartite_edges", sf_dir), build)
 
 _COPURCHASE_EDGES_SQL = """
       SELECT a.supp AS u, b.supp AS v
@@ -8515,30 +8455,26 @@ _COPURCHASE_EDGES_SQL = """
 """
 
 
-#: (applicationId, sf_dir) -> per-node (node, degree, n_tri) relation.
-#: The triangle census is ALSO shared: both graph-structure queries
-#: consume it, and oriented_triangles eagerly checkpoints its (one row
-#: per node, supplier-bounded) output, so the handle stays valid with
-#: no live lineage.
-_TRIANGLES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shared_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-node ``(node, degree, n_tri)`` relation, shared by both
+    graph-structure queries.  oriented_triangles eagerly checkpoints its
+    (one row per node, supplier-bounded) output, so the handle stays
+    valid with no live lineage: memoized, but not ``.cache()``d."""
     from .operators.graph import oriented_triangles
 
-    app = spark.sparkContext.applicationId
-    _evict_dead_sessions(_TRIANGLES_CACHE, app)
-    key = (app, sf_dir)
-    if key not in _TRIANGLES_CACHE:
-        # Eagerly checkpointed by oriented_triangles (no live lineage) —
-        # needs eviction but not the .cache() re-mark dance.
-        _TRIANGLES_CACHE[key] = oriented_triangles(
-            _shared_copurchase_edges(spark, sf_dir), "u", "v"
-        )
-    return _TRIANGLES_CACHE[key]
+    return session_memo(
+        spark, ("triangle_counts", sf_dir),
+        lambda: oriented_triangles(
+            _shared_copurchase_edges(spark, sf_dir), "u", "v"))
 
 
 def _shared_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Canonical supplier co-purchase edge relation (supp_u < supp_v
+    sharing >= 3 customers).  Two queries (supplier_graph_triangles,
+    supplier_graph_clustering) analyze the SAME projected graph; in
+    production the projection is a materialized intermediate, so the
+    suite shares one cached relation per session — the near-dup-pairs
+    pattern applied to the graph family."""
     def build() -> DataFrame:
         li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
         o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -8562,7 +8498,7 @@ def _shared_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("u", "v")
         )
 
-    return _session_cached_df(_COPURCHASE_EDGES_CACHE, spark, sf_dir, build)
+    return session_cached(spark, ("copurchase_edges", sf_dir), build)
 
 
 @register(

@@ -150,7 +150,7 @@ def test_degenerate_language_agrees_across_engines(spark, tmp_path):
     import duckdb
 
     from kafka_bigdata_jobs_spark import suite
-    from kafka_bigdata_jobs_spark.operators.textproj import clear_cache
+    from kafka_bigdata_jobs_spark.session import forget
     from tests.oracle_harness import compare
 
     rows = [
@@ -171,7 +171,7 @@ def test_degenerate_language_agrees_across_engines(spark, tmp_path):
         f"CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{sf}/documents.parquet/*.parquet')"
     )
-    clear_cache(spark)  # don't inherit another sf_dir's projection
+    forget(spark, "tokenized_documents")  # no other sf_dir's projection
     try:
         for name in ("dup_span_profile", "substring_dedup_retention"):
             q = suite.registry()[name]
@@ -181,7 +181,7 @@ def test_degenerate_language_agrees_across_engines(spark, tmp_path):
             assert got["xx"][bp] == 0 and got["yy"][bp] == 0
             assert got["en"][bp] > 0  # docs 4/5 are full duplicates
     finally:
-        clear_cache(spark)
+        forget(spark, "tokenized_documents")
 
 
 # -- randomized property: both operators vs their pure-Python twins --------

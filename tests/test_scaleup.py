@@ -10,15 +10,16 @@ the probe measures a workload nobody runs).  These tests generate a
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools import scaleup
+from tools import scaleup  # noqa: E402
 
 
 @pytest.fixture(scope="module")

@@ -63,7 +63,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 
-from kafka_bigdata_jobs_spark.session import get_spark  # noqa: E402
+from kafka_bigdata_jobs_spark.session import forget, get_spark  # noqa: E402
 
 SIZES = {"x1": 50_000, "x3": 150_000, "x10": 500_000, "x30": 1_500_000,
          "x100": 5_000_000, "x300": 15_000_000}
@@ -192,7 +192,7 @@ def main() -> None:
 
     def run_cold(spark, path: str):
         spark.catalog.clearCache()
-        sim._TWO_LEVEL_FIT_CACHE.clear()
+        forget(spark, "two_level_fit")
         df = spark.read.parquet(path)
         stats = sim.HierStats()
         t0 = time.monotonic()

@@ -48,7 +48,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_bigdata_jobs_spark import suite  # noqa: E402
-from kafka_bigdata_jobs_spark.session import get_spark  # noqa: E402
+from kafka_bigdata_jobs_spark.session import forget, get_spark  # noqa: E402
 
 SCALES = {
     "x1": "/root/testdata/sf0.1",
@@ -138,24 +138,24 @@ def probe_cold_builds(spark, attempts: int, out_path: str) -> None:
     (family, scale)."""
     FAMILIES = {
         "near_dup_funnel": (
-            suite._shared_near_dup_pairs, suite._NEAR_DUP_PAIRS_CACHE,
+            suite._shared_near_dup_pairs, "near_dup_pairs",
             "128-hash signature agg + banded LSH self-join; "
             "shingle/signature passes are linear, the banded join is "
             "candidate-bound",
         ),
         "embedding_pairs": (
-            suite._shared_embedding_pairs, suite._EMB_PAIRS_CACHE,
+            suite._shared_embedding_pairs, "embedding_pairs",
             "blocked matmul candidate gen at these sizes (auto path "
             "below max_side_bytes): linear scan x per-worker matrix",
         ),
     }
     results: dict[str, dict] = {}
-    for fam, (get, memo, why) in FAMILIES.items():
+    for fam, (get, family, why) in FAMILIES.items():
         row: dict = {"rationale": why}
         for scale, d in SCALES.items():
             def once():
                 spark.catalog.clearCache()
-                memo.clear()
+                forget(spark, family)
                 t0 = time.monotonic()
                 get(spark, d).write.mode("overwrite").format("noop").save()
                 return time.monotonic() - t0
@@ -221,8 +221,8 @@ def main() -> None:
     # measures THEIR plan — components, ranking windows — not a racy
     # rebuild of the upstream relation.
     COLD_CARRIERS = {
-        "near_dup_pairs_minhash": suite._NEAR_DUP_PAIRS_CACHE,
-        "embedding_close_pairs": suite._EMB_PAIRS_CACHE,
+        "near_dup_pairs_minhash": "near_dup_pairs",
+        "embedding_close_pairs": "embedding_pairs",
     }
     WARM_CONSUMERS = {
         "near_dup_clusters": suite._shared_near_dup_pairs,
@@ -232,9 +232,9 @@ def main() -> None:
 
     def run_once(name, fn, d):
         spark.catalog.clearCache()  # time queries independently
-        memo = COLD_CARRIERS.get(name)
-        if memo is not None:
-            memo.clear()
+        family = COLD_CARRIERS.get(name)
+        if family is not None:
+            forget(spark, family)
         warm = WARM_CONSUMERS.get(name)
         if warm is not None:
             warm(spark, d).count()  # untimed
