@@ -1,11 +1,18 @@
-# Developer targets — all run on the local[32] sandbox layout.
+# Developer targets.  Local sessions size themselves from this host
+# (session.host_conf: cores in the affinity mask, driver heap capped at
+# 3/4 of RAM); SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override.
 
 PY ?= python
 
 .PHONY: test bench perfbench-smoke correctness-local correctness-local-incr coverage queries-md scaledata scaleprobe scaleprobe-cold embpairs-probe round-numbers ann-recall-scale
 
+# Tier-1 (ROADMAP.md): the whole suite on this host's cores, Spark
+# scratch under /tmp/spark-local, no .pytest_cache left in the tree.
 test:
-	$(PY) -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
+	SPARK_LOCAL_DIRS=/tmp/spark-local \
+	timeout -k 10 2670 $(PY) -m pytest tests/ -q \
+		--continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	$(PY) bench.py

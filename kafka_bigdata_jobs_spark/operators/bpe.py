@@ -80,7 +80,6 @@ def bpe_learn(
     text_col: str,
     n_merges: int = 8,
     min_pair_weight: int = 2,
-    vocab_limit: int = DRIVER_VOCAB_LIMIT,
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns
     ``[(rank, left, right, pair_weight), ...]`` (exact integers,
@@ -91,14 +90,14 @@ def bpe_learn(
 
     The corpus is reduced to its word-type relation distributedly; the
     merge loop runs driver-side on that bounded relation when it has at
-    most ``vocab_limit`` types (one collect, then pure in-memory
+    most :data:`DRIVER_VOCAB_LIMIT` types (one collect, then pure in-memory
     learning — no per-merge Spark jobs), else falls back to the
     per-merge distributed loop.  Both paths produce identical tables.
     """
     words = word_counts(df, text_col)
     n_types = words.count()
-    if n_types <= vocab_limit:
-        rows = words.collect()  # bounded: <= vocab_limit word types
+    if n_types <= DRIVER_VOCAB_LIMIT:
+        rows = words.collect()  # bounded: <= DRIVER_VOCAB_LIMIT word types
         return _learn_from_counts(
             [(r["word"], int(r["n"])) for r in rows], n_merges, min_pair_weight
         )

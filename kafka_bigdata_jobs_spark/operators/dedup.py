@@ -811,7 +811,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    driver_edge_limit: int = DRIVER_EDGE_LIMIT,
 ) -> DataFrame:
     """Exact connected components by min-label propagation — the step
     that turns near-dup PAIRS into dedup CLUSTERS (keep one doc per
@@ -819,7 +818,7 @@ def connected_components(
 
     Size dispatch: the edge list here is the OUTPUT of near-dup pruning
     — typically orders of magnitude smaller than the corpus (dup pairs
-    only).  Below ``driver_edge_limit`` edges the whole graph fits
+    only).  Up to :data:`DRIVER_EDGE_LIMIT` edges the whole graph fits
     trivially in driver memory, where union-find solves it in
     O(E α(E)) with zero Spark jobs — while the distributed loop pays
     ~seconds of scheduling per iteration regardless of data size.  So:
@@ -849,8 +848,8 @@ def connected_components(
     if not caller_cached:
         edges = edges.persist()
 
-    n_edges = edges.limit(driver_edge_limit + 1).count()
-    if n_edges <= driver_edge_limit:
+    n_edges = edges.limit(DRIVER_EDGE_LIMIT + 1).count()
+    if n_edges <= DRIVER_EDGE_LIMIT:
         pair_rows = edges.select(
             F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
         ).collect()
@@ -878,7 +877,7 @@ def connected_components(
         # size statistics, so the planner assumes worst-case size and a
         # downstream equi-join lands on SortMergeJoin (measured: the
         # embedding_dedup_retention consumer paid 2 Exchange + 2 Sort
-        # to join this ≤2·driver_edge_limit-row relation against the
+        # to join this ≤2·DRIVER_EDGE_LIMIT-row relation against the
         # corpus).  The driver path is size-bounded BY CONSTRUCTION —
         # ≤ 2 M node rows ≈ 32 MB at the default limit — so hint it
         # broadcastable; the hint never changes join results, and the

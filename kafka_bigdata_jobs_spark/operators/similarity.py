@@ -226,6 +226,11 @@ def topk_neighbors_hyperplane_lsh(
 #: ``cell_col``) — at that scale exact all-pairs is the wrong query.
 MAX_SIDE_MATRIX_BYTES = 2 << 30
 
+#: Candidate cut slack of the blocked path: numpy nominates pairs at
+#: ``threshold - BLOCKED_MARGIN`` (covers its pairwise-summation FP
+#: drift vs the sequential oracle order); the exact expression decides.
+BLOCKED_MARGIN = 1e-6
+
 #: Bytes per block·corpusᵀ similarity slab in the blocked path (a whole
 #: 10k-row Arrow batch against a 50k-row corpus is one 4 GB slab, ~12 GB
 #: peak with its norm outer product and quotient).
@@ -247,8 +252,8 @@ class CoveringRadiusBlowupError(RuntimeError):
     misses; (b) ANN top-k per point (``topk_neighbors_ivf_kmeans`` /
     ``topk_neighbors_hyperplane_lsh`` / PQ) and threshold the neighbor
     lists; (c) raise ``threshold`` so θ_t stops rivaling the data's
-    own angular spread; (d) ``max_replication=None`` to accept the
-    quadratic cost knowingly.
+    own angular spread; (d) the knowingly-quadratic exact all-pairs
+    :func:`embedding_near_dup_pairs`.
     """
 
 
@@ -271,10 +276,8 @@ class HierStats:
     overwrite each other's numbers.
     """
 
-    #: auto dispatch: 'blocked', 'hier' or 'semdedup_fallback'
+    #: auto dispatch: 'blocked' or 'hier'
     path: str | None = None
-    #: auto result semantics: 'exact' or 'semdedup_cells'
-    method: str | None = None
     #: hier quantizer fit: 'driver' (bounded sample) or 'distributed'
     #: (two-stage executor fit past the driver sample cap)
     fit_mode: str | None = None
@@ -285,7 +288,7 @@ class HierStats:
     #: leaves in the hier replication scan's dense wide tier
     wide_leaves: int | None = None
     #: guard-measured mean replication factor (None: guard skipped —
-    #: small corpus or ``max_replication=None``)
+    #: corpus below :data:`GUARD_MIN_ROWS`)
     replication: float | None = None
     #: driver wall seconds per hier phase (see :meth:`phase`)
     phase_seconds: dict[str, float] = field(default_factory=dict)
@@ -314,8 +317,6 @@ def embedding_near_dup_pairs_blocked(
     vec_col: str,
     threshold: float = 0.95,
     dim: int = 64,
-    margin: float = 1e-6,
-    max_side_bytes: int = MAX_SIDE_MATRIX_BYTES,
 ) -> DataFrame:
     """All pairs with cosine ≥ threshold, via numpy-blocked candidate
     generation + exact expression verification.
@@ -327,14 +328,13 @@ def embedding_near_dup_pairs_blocked(
     ``mapInPandas`` task then runs a vectorized block·corpusᵀ matmul —
     dense linear algebra is where a Pandas UDF beats row-expressions by
     an order of magnitude — emitting candidate id pairs above
-    ``threshold - margin`` (margin covers numpy's pairwise-summation FP
-    drift vs the sequential oracle order).  Stage 2 recomputes the
+    ``threshold -`` :data:`BLOCKED_MARGIN`.  Stage 2 recomputes the
     candidates' cosines with the bit-stable unrolled expression, so the
     OUTPUT is identical to :func:`embedding_near_dup_pairs` — numpy
     only decides which pairs get verified, never a final value.
 
     The per-WORKER matrix bounds this at corpus_size·dim·8 bytes; the
-    ``max_side_bytes`` guard raises past it instead of silently
+    :data:`MAX_SIDE_MATRIX_BYTES` guard raises past it instead of silently
     OOM-ing executors — beyond that, partition by LSH/IVF cell first
     (``cell_col`` on the exact variant) so each block only multiplies
     against its cell.
@@ -354,15 +354,16 @@ def embedding_near_dup_pairs_blocked(
     ).cache()
     n_rows = base.count()
     est_bytes = n_rows * dim * 8
-    if est_bytes > max_side_bytes:
+    if est_bytes > MAX_SIDE_MATRIX_BYTES:
         raise ValueError(
-            f"corpus matrix ~{est_bytes >> 20} MiB exceeds max_side_bytes "
-            f"({max_side_bytes >> 20} MiB) per worker; use "
+            f"corpus matrix ~{est_bytes >> 20} MiB exceeds "
+            f"MAX_SIDE_MATRIX_BYTES ({MAX_SIDE_MATRIX_BYTES >> 20} MiB) "
+            "per worker; use "
             "embedding_near_dup_pairs(cell_col=...) to restrict the pair "
             "search to LSH/IVF cells before blocking"
         )
     corpus_art = write_side_artifact(base.select("__id", "__v"), "embcorpus")
-    cut = threshold - margin
+    cut = threshold - BLOCKED_MARGIN
 
     cand_schema = T.StructType(
         [T.StructField("id_a", T.LongType()), T.StructField("id_b", T.LongType())]
@@ -469,12 +470,12 @@ def embedding_near_dup_pairs(
     )
 
 
-def _guard_replication(rep: DataFrame, n_rows: int, max_replication: float,
+def _guard_replication(rep: DataFrame, n_rows: int,
                        threshold: float) -> tuple[DataFrame, float]:
     """Cache + count the replica relation BEFORE the leaf exchange and
     pair matmul (the point of no return for the quadratic failure
     mode), and raise :class:`CoveringRadiusBlowupError` past
-    ``max_replication``.  Returns the cached relation (reused by the
+    :data:`MAX_REPLICATION`.  Returns the cached relation (reused by the
     downstream tail, so the guard costs one pass over cached rows, not
     a recompute) and the measured mean replication factor.
 
@@ -488,27 +489,49 @@ def _guard_replication(rep: DataFrame, n_rows: int, max_replication: float,
     harnesses do exactly this)."""
     rep = rep.cache()
     mean_rep = rep.count() / float(n_rows)
-    if mean_rep > max_replication:
+    if mean_rep > MAX_REPLICATION:
         rep.unpersist()
         raise CoveringRadiusBlowupError(
             f"mean covering-radius replication factor {mean_rep:.1f} "
-            f"exceeds max_replication={max_replication}: at threshold "
+            f"exceeds MAX_REPLICATION={MAX_REPLICATION}: at threshold "
             f"{threshold} the corpus has no usable cluster structure and "
             "the EXACT pair search degenerates toward all-pairs. Use the "
             "approximate paths instead — SemDeDup-style within-cell "
             "pairs (embedding_near_dup_pairs(cell_col=...) over "
             "kmeans_ivf_cells) or ANN top-k (topk_neighbors_ivf_kmeans "
-            "/ hyperplane LSH / PQ) — or raise the threshold, or pass "
-            "max_replication=None to accept the quadratic cost knowingly."
+            "/ hyperplane LSH / PQ) — or raise the threshold, or run the "
+            "exact all-pairs embedding_near_dup_pairs to accept the "
+            "quadratic cost knowingly."
         )
     return rep, mean_rep
 
 
+#: Hier runtime guard (see :func:`embedding_near_dup_pairs_hier`): a
+#: mean covering-radius replication factor above this raises
+#: :class:`CoveringRadiusBlowupError` before the pair matmul.
+#: Clustered corpora measure ~9–12; structureless ones ≈ the live-leaf
+#: count.
+MAX_REPLICATION = 32.0
+
+#: Corpus rows below which the hier path skips the guard: a smaller
+#: worst case is trivial, and the guard's extra count action would
+#: dominate unit-test-sized runs.  The tail's partition floor reads
+#: the measured factor, so it is skipped below this size too.
+GUARD_MIN_ROWS = 50_000
+
+#: Target rows per hier leaf (K ≈ n / LEAF_TARGET): small leaves keep
+#: the in-leaf candidate surface ≈ n·LEAF_TARGET·replication.
+LEAF_TARGET = 64
+
+#: Floor on the hier fit sample (rows); it grows to 4 rows per leaf up
+#: to :data:`FIT_SAMPLE_ROWS_CAP`.
+FIT_SAMPLE_ROWS_MIN = 32768
+
 #: Driver-memory ceiling on the auto-scaled hier fit sample (rows).
 #: 1M rows × 64 dims × 8 B = 512 MB driver-side during the fit — the
-#: point past which K stops tracking n/leaf_target and leaf
-#: populations start growing again (≈ corpora past 16M rows at the
-#: default leaf_target; the quantizer metadata shipped in task
+#: point past which K stops tracking n/LEAF_TARGET and leaf
+#: populations start growing again (≈ corpora past 16M rows at
+#: LEAF_TARGET; the quantizer metadata shipped in task
 #: closures is then K·dim·8 ≈ 128 MB, the matching executor ceiling).
 FIT_SAMPLE_ROWS_CAP = 1 << 20
 
@@ -517,7 +540,7 @@ FIT_SAMPLE_ROWS_CAP = 1 << 20
 HOME_PROBES = 8
 
 #: Fit-sample cap of the flat k-means quantizer (:func:`kmeans_ivf_cells`,
-#: behind the IVF / IVF-PQ indexes and the SemDeDup fallback cells):
+#: behind the IVF / IVF-PQ indexes and the SemDeDup within-cell pairs):
 #: ~1000 points per cell at the suite's 8-cell index, flat as n grows.
 KMEANS_FIT_SAMPLE_ROWS = 8192
 
@@ -997,19 +1020,18 @@ def _fit_two_level(sample_mat, k_leaf: int, n_branches: int, seed: int,
     )
 
 
-def _fit_two_level_distributed(base, n_rows: int, leaf_target: int,
-                               fit_sample_rows: int, seed: int, dim: int,
+def _fit_two_level_distributed(base, n_rows: int, seed: int, dim: int,
                                fit_seconds: dict[str, float] | None = None):
     """Two-STAGE quantizer fit that lifts the FIT_SAMPLE_ROWS_CAP
     driver ceiling (r7 verdict item 1): the driver-side fit needs ≥4
-    sample rows per leaf, so past ~16M-row corpora (4·n/leaf_target >
-    cap) K stopped tracking n/leaf_target, leaf populations grew ∝ n,
+    sample rows per leaf, so past ~16M-row corpora (4·n/LEAF_TARGET >
+    cap) K stopped tracking n/LEAF_TARGET, leaf populations grew ∝ n,
     and the in-leaf pair matmul reverted toward Θ(n²/K) — the exact
     defect class the r7 x30 profiling fixed, one order of magnitude up.
 
     Stage A (driver, bounded): fit the B branch centers on a Bernoulli
-    sample of max(fit_sample_rows, 4·B) rows.  B = 2·K^⅔ grows only as
-    (n/leaf_target)^⅔, so the DRIVER sample binds at B = cap/4 ≈ 262k
+    sample of max(FIT_SAMPLE_ROWS_MIN, 4·B) rows.  B = 2·K^⅔ grows only as
+    (n/LEAF_TARGET)^⅔, so the DRIVER sample binds at B = cap/4 ≈ 262k
     branches ≈ a 3e9-row corpus — three orders past the old ceiling.
 
     Stage B (executors): a distributed Bernoulli sample of ~4·K rows —
@@ -1018,7 +1040,7 @@ def _fit_two_level_distributed(base, n_rows: int, leaf_target: int,
     quality-only, the covering-radius completeness theorem never
     depends on how homes or fits were chosen), then each branch's
     leaves are fit INSIDE ``applyInArrow`` groups: a branch holding m
-    sample rows fits ⌈m/4⌉ leaves, so K tracks n/leaf_target with the
+    sample rows fits ⌈m/4⌉ leaves, so K tracks n/LEAF_TARGET with the
     same ≥4-points-per-leaf contract while no single machine ever
     holds more than one branch's sample (expected 4·K/B = Θ(K^⅓) rows;
     pathological skew concentrates the sample in one group, which is
@@ -1035,7 +1057,7 @@ def _fit_two_level_distributed(base, n_rows: int, leaf_target: int,
 
     What remains bounded by a single machine: the K leaf centers
     themselves (K·dim·8 B driver + task-closure metadata — 512 MB at
-    K=1M ≈ a 64M-row corpus at the default leaf_target; float32
+    K=1M ≈ a 64M-row corpus at LEAF_TARGET; float32
     shipping and per-super center sharding are the next two doublings,
     documented in SCALE.md).  ``fit_seconds`` receives the driver
     seconds of each sub-step."""
@@ -1046,10 +1068,10 @@ def _fit_two_level_distributed(base, n_rows: int, leaf_target: int,
     # stage-B closures call _lloyd_rounds by module reference: ship the
     # package so a driver running from an arbitrary cwd still works
     ensure_package_shipped(base.sparkSession)
-    k_target = max(4, n_rows // leaf_target)
+    k_target = max(4, n_rows // LEAF_TARGET)
     n_branches = max(2, min(k_target,
                             round(2.0 * k_target ** (2.0 / 3.0))))
-    a_rows = min(max(fit_sample_rows, 4 * n_branches),
+    a_rows = min(max(FIT_SAMPLE_ROWS_MIN, 4 * n_branches),
                  FIT_SAMPLE_ROWS_CAP)
     frac = min(1.0, 1.05 * a_rows / n_rows)
     fs = {} if fit_seconds is None else fit_seconds
@@ -1140,43 +1162,44 @@ def _fit_two_level_distributed(base, n_rows: int, leaf_target: int,
     return np.asarray(bcenters), leaf_centers, leaf_branch, esc_cap
 
 
-def _hier_fit(base, n_rows: int, *, leaf_target: int, seed: int,
-              fit_sample_rows: int, cache_key, dim: int, stats: HierStats):
+def _hier_fit(base, n_rows: int, *, seed: int, cache_key, dim: int,
+              stats: HierStats):
     """Hier phase 1: the bounded-sample quantizer fit, memoized per
     corpus snapshot.  Returns ``(bcenters, leaf_centers, leaf_branch,
-    esc_cap)``."""
+    esc_cap)``.  The memo key carries :data:`LEAF_TARGET` and
+    :data:`FIT_SAMPLE_ROWS_MIN` as read now, so a patched constant
+    never reads a stale fit."""
     # go distributed exactly where the driver fit's sample cap would
-    # otherwise stop K from tracking n/leaf_target (the ~16M-row
+    # otherwise stop K from tracking n/LEAF_TARGET (the ~16M-row
     # ceiling; see _fit_two_level_distributed)
-    want_rows = max(fit_sample_rows, 4 * max(1, n_rows // leaf_target))
+    leaf_target, min_rows = LEAF_TARGET, FIT_SAMPLE_ROWS_MIN
+    want_rows = max(min_rows, 4 * max(1, n_rows // leaf_target))
     use_dist = want_rows > FIT_SAMPLE_ROWS_CAP
     stats.fit_mode = "distributed" if use_dist else "driver"
 
     def build():
         if use_dist:
             fit = _fit_two_level_distributed(
-                base, n_rows, leaf_target, fit_sample_rows, seed, dim,
-                fit_seconds=stats.fit_seconds)
+                base, n_rows, seed, dim, fit_seconds=stats.fit_seconds)
             if len(fit[1]):
                 return fit
             # stage-B Bernoulli sample came back empty (only possible
             # on tiny corpora): the bounded driver fit is exact there
             stats.fit_mode = "driver"
-        return _hier_driver_fit(base, n_rows, want_rows,
-                                leaf_target=leaf_target, seed=seed, dim=dim,
-                                stats=stats)
+        return _hier_driver_fit(base, n_rows, want_rows, seed=seed,
+                                dim=dim, stats=stats)
 
     if cache_key is None:
         return build()
     return session_memo(
         base.sparkSession,
-        ("two_level_fit", cache_key, leaf_target, seed, dim,
-         fit_sample_rows, use_dist),
+        ("two_level_fit", cache_key, leaf_target, seed, dim, min_rows,
+         use_dist),
         build)
 
 
 def _hier_driver_fit(base, n_rows: int, want_rows: int, *,
-                     leaf_target: int, seed: int, dim: int, stats: HierStats):
+                     seed: int, dim: int, stats: HierStats):
     """:func:`_hier_fit`'s driver path: a two-level fit on a seeded
     sample of at most :data:`FIT_SAMPLE_ROWS_CAP` rows."""
     import numpy as np
@@ -1197,7 +1220,7 @@ def _hier_driver_fit(base, n_rows: int, want_rows: int, *,
     # and with K capped, leaf POPULATIONS grow ∝ n and the in-leaf
     # pair matmul grows ∝ n²/K (measured: the x30 probe leg ran
     # e(x10→x30)=1.37 with K stuck at 8192 and 183-row leaves,
-    # vs ≤1.0 everywhere K tracked n/leaf_target).  The
+    # vs ≤1.0 everywhere K tracked n/LEAF_TARGET).  The
     # FIT_SAMPLE_ROWS_CAP ceiling bounds driver memory; past it
     # the quadratic-leaf regime honestly resumes (constant note).
     eff_rows = min(want_rows, FIT_SAMPLE_ROWS_CAP)
@@ -1209,7 +1232,7 @@ def _hier_driver_fit(base, n_rows: int, want_rows: int, *,
         keep = np.random.default_rng(seed).choice(
             len(sample), size=eff_rows, replace=False)
         sample = sample[np.sort(keep)]
-    k_leaf = max(4, min(n_rows // leaf_target, len(sample) // 4))
+    k_leaf = max(4, min(n_rows // LEAF_TARGET, len(sample) // 4))
     # 2·K^⅔ branches: the three-level balance (see docstring) wants
     # B ∝ K^⅔ so leaves-per-branch is Θ(K^⅓); the constant keeps
     # branch covering radii at least as tight as r6's measured-best
@@ -1730,7 +1753,7 @@ def _hier_tail(base, home, rep, id_type, *, threshold: float, dim: int,
     # (``repartition + mapInArrow``) instead of
     # ``groupBy().applyInArrow``, whose physical plan appends a full
     # row SORT of the path's biggest relation after the exchange plus
-    # one Python call per leaf (~K calls of ~leaf_target rows).
+    # one Python call per leaf (~K calls of ~LEAF_TARGET rows).
     # Sorting the (int32 leaf_id) key column inside the worker costs
     # Θ(rows log rows) on 4-byte keys, not Θ(rows log rows) UnsafeRow
     # comparisons on ~150 B rows, and the pair math is batched per
@@ -1871,12 +1894,8 @@ def embedding_near_dup_pairs_hier(
     vec_col: str,
     threshold: float = 0.95,
     dim: int = 64,
-    leaf_target: int = 64,
     seed: int = 42,
-    fit_sample_rows: int = 32768,
     cache_key: str | None = None,
-    max_replication: float | None = 32.0,
-    guard_min_rows: int = 50_000,
     stats: HierStats | None = None,
 ) -> DataFrame:
     """Exact-COMPLETE cosine pair search with a THREE-LEVEL quantizer
@@ -1934,8 +1953,8 @@ def embedding_near_dup_pairs_hier(
     Why three levels (the inverted-multi-index shape; Babenko &
     Lempitsky 2012): the flat form scores every row against every cell
     — Θ(n·K) with K ∝ n is a hidden quadratic — and the per-leaf pair
-    matmul needs SMALL cells (``leaf_target`` rows) to keep the
-    candidate surface ≈ n·leaf_target·replication.  Small cells mean
+    matmul needs SMALL cells (:data:`LEAF_TARGET` rows) to keep the
+    candidate surface ≈ n·LEAF_TARGET·replication.  Small cells mean
     large K.  A two-level assignment costs Θ(n·(B + P·K/B)), minimized
     at B ∝ √K — still a Θ(n·√K) term, which r6 measured as the one
     remaining scale ceiling.  Balancing THREE levels (``S`` supers over
@@ -1972,7 +1991,7 @@ def embedding_near_dup_pairs_hier(
     The quantizer (≤ K·dim doubles) is driver-held metadata shipped in
     task closures; the corpus never leaves executors.
 
-    Full-corpus passes are linear in n at fixed ``leaf_target`` apart
+    Full-corpus passes are linear in n at fixed ``LEAF_TARGET`` apart
     from the replication scan's Θ(n·B): Arrow assignment, Arrow
     replication, one groupBy over K radius rows, the one leaf-keyed
     exchange of the tagged relation (replication-factor × corpus
@@ -1984,10 +2003,10 @@ def embedding_near_dup_pairs_hier(
     structureless data (the approximate alternatives are the
     SemDeDup/ANN paths).
 
-    RUNTIME GUARD (r6 verdict item 2): once ``n ≥ guard_min_rows`` the
-    replica relation — materialized before the expensive pair matmul —
-    is cached and counted, and a mean replication factor above
-    ``max_replication`` raises :class:`CoveringRadiusBlowupError`
+    RUNTIME GUARD (r6 verdict item 2): once ``n ≥`` :data:`GUARD_MIN_ROWS`
+    the replica relation — materialized before the expensive pair
+    matmul — is cached and counted, and a mean replication factor above
+    :data:`MAX_REPLICATION` raises :class:`CoveringRadiusBlowupError`
     naming the approximate alternatives instead of silently shuffling
     a quadratic candidate surface (the r6 disk-filling incidents were
     exactly this, caught only by a human reading ``df -h``).  Clustered
@@ -2039,10 +2058,8 @@ def embedding_near_dup_pairs_hier(
             F.lit(0.0).alias("cosine"),
         ).where(F.lit(False))
     with stats.phase(spark, "fit"):
-        fit = _hier_fit(
-            base, n_rows, leaf_target=leaf_target, seed=seed,
-            fit_sample_rows=fit_sample_rows, cache_key=cache_key,
-            dim=dim, stats=stats)
+        fit = _hier_fit(base, n_rows, seed=seed, cache_key=cache_key,
+                        dim=dim, stats=stats)
     stats.k = len(fit[1])
     with stats.phase(spark, "assign"):
         home, radius = _hier_assign(base, fit, id_type, dim=dim,
@@ -2051,12 +2068,8 @@ def embedding_near_dup_pairs_hier(
     with stats.phase(spark, "replicate"):
         rep = _hier_replicate(base, fit, radius, id_type,
                               threshold=threshold, dim=dim, stats=stats)
-        if max_replication is not None and n_rows >= guard_min_rows:
-            # Runtime blowup guard (docstring): small corpora skip it —
-            # a sub-guard_min_rows worst case is trivial, and the extra
-            # count action would dominate unit-test-sized runs.
-            rep, mean_rep = _guard_replication(
-                rep, n_rows, max_replication, threshold)
+        if n_rows >= GUARD_MIN_ROWS:
+            rep, mean_rep = _guard_replication(rep, n_rows, threshold)
     stats.replication = mean_rep
     return _hier_tail(base, home, rep, id_type, threshold=threshold,
                       dim=dim, n_rows=n_rows, mean_rep=mean_rep)
@@ -2068,16 +2081,13 @@ def embedding_near_dup_pairs_auto(
     vec_col: str,
     threshold: float = 0.95,
     dim: int = 64,
-    max_side_bytes: int = MAX_SIDE_MATRIX_BYTES,
     seed: int = 42,
     cache_key: str | None = None,
-    max_replication: float | None = 32.0,
-    on_blowup: str = "raise",
-    guard_min_rows: int = 50_000,
     stats: HierStats | None = None,
 ) -> DataFrame:
     """Size-dispatched exact cosine pair search (r5 verdict item 1):
-    below ``max_side_bytes`` the numpy-blocked matmul candidate path
+    up to :data:`MAX_SIDE_MATRIX_BYTES` of corpus matrix the
+    numpy-blocked matmul candidate path
     (:func:`embedding_near_dup_pairs_blocked` — fastest when every
     worker can hold the corpus matrix), above it the three-level
     cell-partitioned :func:`embedding_near_dup_pairs_hier` path, which
@@ -2091,75 +2101,23 @@ def embedding_near_dup_pairs_auto(
     (no materialization).  The hierarchical form sizes itself (≈ n/64
     leaves, 2·K^⅔ branches, √(P·B) supers; past the driver fit-sample
     cap the two-stage executor fit keeps K tracking n — see
-    :func:`_fit_two_level_distributed`).  ``max_replication`` forwards
-    to the hier path's runtime blowup guard
-    (:class:`CoveringRadiusBlowupError`) — the big-corpus path fails
-    loudly on structureless data instead of shuffling a quadratic
-    candidate surface.
+    :func:`_fit_two_level_distributed`).  Its runtime blowup guard
+    raises :class:`CoveringRadiusBlowupError` on structureless data
+    instead of shuffling a quadratic candidate surface; the error names
+    the approximate alternatives.
 
-    ``on_blowup`` (r7 verdict item 5): ``"raise"`` (default) lets the
-    guard's named error propagate — right for interactive use.
-    ``"fallback"`` is the unattended-pipeline mode: a tripped guard
-    routes to the APPROXIMATE SemDeDup-style within-cell pair search
-    (k-means cells sized to the corpus, pairs within each cell only —
-    the Abbas et al. 2023 shape, which accepts boundary misses) with a
-    loud log line, and every result row carries a ``method`` column
-    (``"exact"`` or ``"semdedup_cells"``) so downstream consumers can
-    see which semantics they got.  The fallback NEVER activates
-    without the guard actually tripping — clustered corpora keep the
-    exact path and ``method="exact"`` (pinned in tests).
-
-    ``stats`` (a :class:`HierStats`) records the chosen ``path`` and
-    ``method`` and is forwarded to the hier path.
+    ``stats`` (a :class:`HierStats`) records the chosen ``path`` and is
+    forwarded to the hier path.
     """
-    if on_blowup not in ("raise", "fallback"):
-        raise ValueError(f"on_blowup={on_blowup!r}: expected "
-                         "'raise' or 'fallback'")
     stats = HierStats() if stats is None else stats
-
-    def _tag(res: DataFrame, method: str) -> DataFrame:
-        stats.method = method
-        if on_blowup == "fallback":
-            return res.withColumn("method", F.lit(method))
-        return res
-
-    n_rows = df.count()
-    est_bytes = n_rows * dim * 8
-    if est_bytes <= max_side_bytes:
+    if df.count() * dim * 8 <= MAX_SIDE_MATRIX_BYTES:
         stats.path = "blocked"
-        return _tag(embedding_near_dup_pairs_blocked(
-            df, id_col, vec_col, threshold=threshold, dim=dim,
-            max_side_bytes=max_side_bytes,
-        ), "exact")
-    try:
-        stats.path = "hier"
-        return _tag(embedding_near_dup_pairs_hier(
-            df, id_col, vec_col, threshold=threshold, dim=dim,
-            seed=seed, cache_key=cache_key,
-            max_replication=max_replication,
-            guard_min_rows=guard_min_rows, stats=stats,
-        ), "exact")
-    except CoveringRadiusBlowupError as err:
-        if on_blowup != "fallback":
-            raise
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "embedding_near_dup_pairs_auto: covering-radius guard "
-            "tripped (%s); falling back to APPROXIMATE SemDeDup-style "
-            "within-cell pairs — output rows carry "
-            "method='semdedup_cells'", err)
-        stats.path = "semdedup_fallback"
-        fb_cells = max(16, min(4096, n_rows // 256))
-        assigned, _centers = kmeans_ivf_cells(
-            df.where(F.expr(dot_sql(vec_col, vec_col, dim)) > 0),
-            id_col, vec_col, n_cells=fb_cells, seed=seed, dim=dim,
-            cache_key=cache_key,
-        )
-        res = embedding_near_dup_pairs(
-            assigned, id_col, vec_col, threshold=threshold,
-            cell_col="__cell", dim=dim)
-        return _tag(res, "semdedup_cells")
+        return embedding_near_dup_pairs_blocked(
+            df, id_col, vec_col, threshold=threshold, dim=dim)
+    stats.path = "hier"
+    return embedding_near_dup_pairs_hier(
+        df, id_col, vec_col, threshold=threshold, dim=dim, seed=seed,
+        cache_key=cache_key, stats=stats)
 
 
 def l2_normalize(vec_col: str, dim: int) -> Column:

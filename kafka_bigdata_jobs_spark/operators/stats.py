@@ -261,6 +261,12 @@ def _corr_topk_from_sums(sums: DataFrame, top_k: int) -> DataFrame:
     )
 
 
+#: Most series per block of :func:`series_corr_pairs_gram`: bounds
+#: per-task memory (two blocks' dense key × bucket matrices); the block
+#: count is result-invariant.
+GRAM_BLOCK_KEYS = 4096
+
+
 def series_corr_pairs_gram(
     df: DataFrame,
     key_col: str,
@@ -268,7 +274,6 @@ def series_corr_pairs_gram(
     cents_col: str,
     min_buckets: int = 5,
     top_k: int = 10,
-    block_keys: int = 4096,
     n_keys: int | None = None,
 ) -> DataFrame:
     """All-pairs series correlation via BLOCK×BLOCK integer Gram
@@ -277,7 +282,7 @@ def series_corr_pairs_gram(
     The bucket equi-join formulation shuffles Σ_bucket n_b² pair rows
     through a join whose key domain is tiny (days) — at cluster scale
     that is a handful of hot partitions.  Here keys are hash-sharded
-    into blocks of ≤ ``block_keys`` series; the (key, bucket, value)
+    into blocks of ≤ :data:`GRAM_BLOCK_KEYS` series; the (key, bucket, value)
     grain is written ONCE as a block-partitioned parquet side-artifact
     (``operators/artifact.py`` — a distributed write, no driver
     collect: round-1 collected the whole relation to the driver,
@@ -289,7 +294,7 @@ def series_corr_pairs_gram(
     the join path, so outputs are bit-equal (pinned by an equivalence
     test AND the same DuckDB oracle).
 
-    Scale shape: per-task memory is O(2 · block_keys · n_buckets ·
+    Scale shape: per-task memory is O(2 · GRAM_BLOCK_KEYS · n_buckets ·
     16 B) regardless of total key count; total work is the unavoidable
     O(K²) pair surface, spread over (B choose 2)+B independent tasks.
     The bucket axis (days/weeks) is the SMALL dimension by construction
@@ -322,9 +327,9 @@ def series_corr_pairs_gram(
 
     if n_keys is None:
         n_keys = df.select(key_col).distinct().count()
-    n_blocks = max(1, math.ceil(n_keys / block_keys))
+    n_blocks = max(1, math.ceil(n_keys / GRAM_BLOCK_KEYS))
     # Parallelism floor (r9; guide §2.6 idle capacity): below
-    # ``block_keys`` keys the whole K² pair surface ran as ONE block
+    # ``GRAM_BLOCK_KEYS`` keys the whole K² pair surface ran as ONE block
     # pair — one task on one core — while the rest of the cluster sat
     # idle (measured: correlated_user_spend_pairs 11.0 s at sf0.1,
     # 1500 keys = 1 block on local[32]; the Gram products are int64,
@@ -643,16 +648,14 @@ def series_corr_pairs_auto(
     cents_col: str,
     min_buckets: int = 5,
     top_k: int = 10,
-    exact_key_limit: int | None = None,
 ) -> DataFrame:
     """Dispatch on key count: exact all-pairs blocked Gram up to
     :data:`EXACT_PAIR_KEY_LIMIT` keys, SAX-banded prefilter + exact
     verify above it (see :func:`series_corr_pairs_banded` for the
     recall contract).  The distinct-key count is computed once and
     passed down so the Gram path doesn't recount."""
-    limit = EXACT_PAIR_KEY_LIMIT if exact_key_limit is None else exact_key_limit
     n_keys = df.select(key_col).distinct().count()
-    if n_keys <= limit:
+    if n_keys <= EXACT_PAIR_KEY_LIMIT:
         return series_corr_pairs_gram(
             df, key_col, bucket_col, cents_col,
             min_buckets=min_buckets, top_k=top_k, n_keys=n_keys,

@@ -72,6 +72,12 @@ def _commit_state(state_dir: str, merged: DataFrame, batch_id: int) -> None:
 
 @dataclass
 class ParquetSink:
+    """``foreachBatch`` parquet writer for fan-out jobs.  AT-LEAST-ONCE:
+    it ignores ``batch_id``, so a batch replayed after a crash (written,
+    then the commit log not yet updated) appends its files again.
+    Single-sink jobs should use :func:`run_to_parquet`, whose native
+    sink commits files exactly once."""
+
     path: str
     mode: str = "append"
     partition_by: tuple[str, ...] = ()

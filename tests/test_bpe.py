@@ -85,12 +85,21 @@ def test_bpe_is_deterministic(spark):
     )
 
 
-def test_driver_and_distributed_paths_agree(spark):
-    """vocab_limit=0 forces the per-merge distributed fallback; it must
-    produce the identical merge table to the driver-side learner."""
+def test_driver_and_distributed_paths_agree(spark, monkeypatch):
+    """DRIVER_VOCAB_LIMIT=0 forces the per-merge distributed fallback; it
+    must produce the identical merge table to the driver-side learner."""
+    from kafka_bigdata_jobs_spark.operators import bpe
+
+    calls = []
+    real = bpe._bpe_learn_distributed
+    monkeypatch.setattr(bpe, "_bpe_learn_distributed",
+                        lambda *a: calls.append(1) or real(*a))
     docs = load_table(spark, SF_SMOKE, "documents")
     driver_side = bpe_learn(docs, "text", n_merges=8)
-    distributed = bpe_learn(docs, "text", n_merges=8, vocab_limit=0)
+    assert not calls
+    monkeypatch.setattr(bpe, "DRIVER_VOCAB_LIMIT", 0)
+    distributed = bpe_learn(docs, "text", n_merges=8)
+    assert calls == [1]
     assert driver_side == distributed
 
 

@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _run(*args):
@@ -11,7 +14,7 @@ def _run(*args):
         [sys.executable, "-m", "kafka_bigdata_jobs_spark", *args],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=180,
     )
 

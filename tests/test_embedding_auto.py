@@ -1,14 +1,16 @@
 """Size-dispatched exact embedding pair search (r5 verdict item 1).
 
 ``embedding_near_dup_pairs_auto`` must produce IDENTICAL output on both
-sides of the ``max_side_bytes`` cutover: the numpy-blocked matmul path
+sides of the ``MAX_SIDE_MATRIX_BYTES`` cutover: the numpy-blocked matmul path
 below it, the three-level leaf-partitioned hier path (covering-radius
 multi-assignment) above it.  The hier path's completeness is a theorem
 (triangle inequality on sphere angles — see the
 ``embedding_near_dup_pairs_hier`` docstring); these tests check the
 implementation against the brute-force upper-triangle join
 bit-for-bit, including on synthetic data engineered so qualifying
-pairs STRADDLE leaf boundaries.
+pairs STRADDLE leaf boundaries.  Paths and guards are not caller
+options: tests force a branch by monkeypatching the module constant
+the operator reads at call time.
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ import copy
 import numpy as np
 import pytest
 
+import kafka_bigdata_jobs_spark.operators.similarity as sim
 from kafka_bigdata_jobs_spark.operators.similarity import (
     HierStats,
     embedding_near_dup_pairs,
@@ -50,8 +53,6 @@ def test_blocked_slabs_match_bruteforce(spark, emb, monkeypatch):
     """The blocked path multiplies each Arrow batch against the corpus
     in row slabs of ~BLOCKED_SLAB_BYTES: with slabs of 7 rows, every
     batch splits and the output must still equal brute force."""
-    import kafka_bigdata_jobs_spark.operators.similarity as sim
-
     n = emb.count()
     monkeypatch.setattr(sim, "BLOCKED_SLAB_BYTES", 8 * n * 7)
     brute = _pairs(embedding_near_dup_pairs(
@@ -62,20 +63,20 @@ def test_blocked_slabs_match_bruteforce(spark, emb, monkeypatch):
     assert slabs == brute
 
 
-def test_auto_identical_output_across_cutover(spark, emb):
+def test_auto_identical_output_across_cutover(spark, emb, monkeypatch):
     """The dispatch decision must be invisible in the result: force each
-    path via max_side_bytes and compare against brute force."""
+    path via MAX_SIDE_MATRIX_BYTES and compare against brute force."""
     brute = _pairs(embedding_near_dup_pairs(
         emb, "vec_id", "embedding", threshold=0.45))
+    monkeypatch.setattr(sim, "MAX_SIDE_MATRIX_BYTES", 1 << 30)
     st = HierStats()
     below = _pairs(embedding_near_dup_pairs_auto(
-        emb, "vec_id", "embedding", threshold=0.45,
-        max_side_bytes=1 << 30, stats=st))
+        emb, "vec_id", "embedding", threshold=0.45, stats=st))
     assert st.path == "blocked"
+    monkeypatch.setattr(sim, "MAX_SIDE_MATRIX_BYTES", 1)
     st = HierStats()
     above = _pairs(embedding_near_dup_pairs_auto(
-        emb, "vec_id", "embedding", threshold=0.45, max_side_bytes=1,
-        stats=st))
+        emb, "vec_id", "embedding", threshold=0.45, stats=st))
     assert st.path == "hier"
     assert below == brute
     assert above == brute
@@ -85,7 +86,7 @@ def test_auto_identical_output_across_cutover(spark, emb):
             emb, "vec_id", "embedding", threshold=0.45, n_cells=8)
 
 
-def test_hier_complete_on_boundary_straddling_pairs(spark):
+def test_hier_complete_on_boundary_straddling_pairs(spark, monkeypatch):
     """Synthetic stress: tight planted near-dup pairs whose members sit
     in DIFFERENT leaves unless the covering-radius replication works.
     Two broad arcs of points with planted pairs at the arc boundary;
@@ -116,12 +117,13 @@ def test_hier_complete_on_boundary_straddling_pairs(spark):
     brute = _pairs(embedding_near_dup_pairs(
         df, "vec_id", "embedding", threshold=0.97, dim=dim))
     assert len(brute) >= n_planted  # the planted pairs qualify
+    monkeypatch.setattr(sim, "LEAF_TARGET", 24)
     hier = _pairs(embedding_near_dup_pairs_hier(
-        df, "vec_id", "embedding", threshold=0.97, dim=dim, leaf_target=24))
+        df, "vec_id", "embedding", threshold=0.97, dim=dim))
     assert hier == brute
 
 
-def test_hier_zero_vector_does_not_poison_radii(spark):
+def test_hier_zero_vector_does_not_poison_radii(spark, monkeypatch):
     """A zero-norm vector in a cell used to make that cell's covering
     radius NaN, silently losing the cell's REAL pairs — now it is
     excluded up front (output-equivalent: its cosine is NaN and can
@@ -139,8 +141,9 @@ def test_hier_zero_vector_does_not_poison_radii(spark):
     brute = _pairs(embedding_near_dup_pairs(
         df, "vec_id", "embedding", threshold=0.99, dim=dim))
     assert (0, 100, 1.0) in brute
+    monkeypatch.setattr(sim, "LEAF_TARGET", 10)
     got = _pairs(embedding_near_dup_pairs_hier(
-        df, "vec_id", "embedding", threshold=0.99, dim=dim, leaf_target=10))
+        df, "vec_id", "embedding", threshold=0.99, dim=dim))
     assert got == brute
 
 
@@ -163,12 +166,12 @@ def _clustered_corpus(rng, n_clusters, per_cluster, dim, width_deg=8.0,
     return rows
 
 
-def test_hier_three_level_supers_bit_equal(spark):
+def test_hier_three_level_supers_bit_equal(spark, monkeypatch):
     """r6 verdict item 1: with enough branches the SUPER level must
     activate (stats.levels == 3) and the output must stay bit-identical
     to the numpy-blocked exact path — the same contract the x1 probe
     gate enforces at 50k rows, pinned here at unit-test scale.
-    leaf_target=4 over 3000 rows yields ~750 leaves → ~165 branches →
+    LEAF_TARGET=4 over 3000 rows yields ~750 leaves → ~165 branches →
     ~36 supers, so every three-level code path (super scan, probed-
     branch merge, super-radius replication prune) executes."""
     from kafka_bigdata_jobs_spark.operators.similarity import (
@@ -182,15 +185,15 @@ def test_hier_three_level_supers_bit_equal(spark):
     blocked = _pairs(embedding_near_dup_pairs_blocked(
         df, "vec_id", "embedding", threshold=0.97, dim=dim))
     assert len(blocked) > 0  # in-cluster pairs qualify by construction
+    monkeypatch.setattr(sim, "LEAF_TARGET", 4)
     st = HierStats()
     hier = _pairs(embedding_near_dup_pairs_hier(
-        df, "vec_id", "embedding", threshold=0.97, dim=dim, leaf_target=4,
-        stats=st))
+        df, "vec_id", "embedding", threshold=0.97, dim=dim, stats=st))
     assert st.levels == 3
     assert hier == blocked
 
 
-def test_replication_guard_trips_on_structureless_corpus(spark):
+def test_replication_guard_trips_on_structureless_corpus(spark, monkeypatch):
     """r6 verdict item 2: uniform high-dim noise at a θ_t that rivals
     the data's own angular spread degenerates the exact pair search
     toward all-pairs; the guard must fail loudly BEFORE the pair
@@ -207,14 +210,23 @@ def test_replication_guard_trips_on_structureless_corpus(spark):
         v = rng.normal(size=dim)
         rows.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    monkeypatch.setattr(sim, "LEAF_TARGET", 16)
+    monkeypatch.setattr(sim, "GUARD_MIN_ROWS", 0)
     with pytest.raises(CoveringRadiusBlowupError,
-                       match="replication factor.*all-pairs"):
+                       match="replication factor.*all-pairs") as err:
         embedding_near_dup_pairs_hier(
-            df, "vec_id", "embedding", threshold=0.7, dim=dim,
-            leaf_target=16, guard_min_rows=0)
+            df, "vec_id", "embedding", threshold=0.7, dim=dim)
+    # the remedies name the exact all-pairs path, not an off-switch
+    assert "embedding_near_dup_pairs" in str(err.value)
+    # the same corpus through auto's hier side raises too: a tripped
+    # guard has no silent fallback
+    monkeypatch.setattr(sim, "MAX_SIDE_MATRIX_BYTES", 1)
+    with pytest.raises(CoveringRadiusBlowupError):
+        embedding_near_dup_pairs_auto(
+            df, "vec_id", "embedding", threshold=0.7, dim=dim)
 
 
-def test_replication_guard_passes_clustered_corpus(spark):
+def test_replication_guard_passes_clustered_corpus(spark, monkeypatch):
     """The guard must NOT trip on the workload the operator exists for:
     tight content clusters keep the measured replication factor far
     under the ceiling, and the guarded run still returns the exact
@@ -229,13 +241,14 @@ def test_replication_guard_passes_clustered_corpus(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     blocked = _pairs(embedding_near_dup_pairs_blocked(
         df, "vec_id", "embedding", threshold=0.97, dim=dim))
+    monkeypatch.setattr(sim, "LEAF_TARGET", 8)
+    monkeypatch.setattr(sim, "GUARD_MIN_ROWS", 0)
     st = HierStats()
     hier = _pairs(embedding_near_dup_pairs_hier(
-        df, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=8, guard_min_rows=0, stats=st))
+        df, "vec_id", "embedding", threshold=0.97, dim=dim, stats=st))
     assert hier == blocked
     rep = st.replication
-    assert rep is not None and rep < 32.0, (
+    assert rep is not None and rep < sim.MAX_REPLICATION, (
         f"clustered corpus measured replication {rep} — the guard "
         "would reject the operator's own workload")
 
@@ -261,8 +274,6 @@ def test_hier_fit_sample_covers_file_tail(spark, monkeypatch):
     tail rows (verified by inverting this assert against it); the
     unbiased sampler carries ~3%.
     """
-    import kafka_bigdata_jobs_spark.operators.similarity as sim
-
     rng = np.random.default_rng(7)
     n, dim = 4000, 8
     c1 = rng.normal(size=dim); c1 /= np.linalg.norm(c1)
@@ -285,9 +296,9 @@ def test_hier_fit_sample_covers_file_tail(spark, monkeypatch):
         return real_fit(sample_mat, *args, **kwargs)
 
     monkeypatch.setattr(sim, "_fit_two_level", spy)
+    monkeypatch.setattr(sim, "FIT_SAMPLE_ROWS_MIN", 512)
     embedding_near_dup_pairs_hier(
-        df, "vec_id", "embedding", threshold=0.95, dim=dim,
-        fit_sample_rows=512).count()
+        df, "vec_id", "embedding", threshold=0.95, dim=dim).count()
     sample = captured["sample"]
     # tail-cluster membership: closer to c2 than c1
     tail = (sample @ c2) > (sample @ c1)
@@ -302,13 +313,12 @@ def test_distributed_fit_bit_equal_and_k_tracks_n(spark, monkeypatch):
     """r7 verdict item 1: the two-stage executor-side leaf fit must
     (a) produce the exact output (same covering-radius theorem — fit
     choice is quality-only, every pair is exact-verified), and
-    (b) keep K tracking n/leaf_target where the DRIVER fit's sample
+    (b) keep K tracking n/LEAF_TARGET where the DRIVER fit's sample
     cap would clamp it.  The fit path follows only from the input
     size against ``FIT_SAMPLE_ROWS_CAP``: at the real cap the unit
     corpus takes the driver fit; with the cap monkeypatched down it
     sits 'past the ceiling' the same way a 100M-row corpus sits past
     the real 1M-row cap, and the distributed fit runs."""
-    import kafka_bigdata_jobs_spark.operators.similarity as sim
     from kafka_bigdata_jobs_spark.operators.similarity import (
         embedding_near_dup_pairs_blocked,
     )
@@ -329,20 +339,20 @@ def test_distributed_fit_bit_equal_and_k_tracks_n(spark, monkeypatch):
                 df, "vec_id", "embedding", threshold=0.97, dim=dim, **knob)
 
     # real cap: the driver fit, bit-equal output
+    monkeypatch.setattr(sim, "LEAF_TARGET", 6)
     st = HierStats()
     drv = _pairs(embedding_near_dup_pairs_hier(
-        df, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=6, stats=st))
+        df, "vec_id", "embedding", threshold=0.97, dim=dim, stats=st))
     assert st.fit_mode == "driver"
     assert drv == blocked
 
     # past-the-ceiling regime: the distributed fit runs and K keeps
-    # tracking n/leaf_target
+    # tracking n/LEAF_TARGET
     monkeypatch.setattr(sim, "FIT_SAMPLE_ROWS_CAP", 256)
+    monkeypatch.setattr(sim, "FIT_SAMPLE_ROWS_MIN", 64)
     st = HierStats()
     dist = _pairs(embedding_near_dup_pairs_hier(
-        df, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=6, fit_sample_rows=64, stats=st))
+        df, "vec_id", "embedding", threshold=0.97, dim=dim, stats=st))
     assert st.fit_mode == "distributed"
     assert dist == blocked
     # a driver fit clamped by the cap reaches at most K ~ cap/4 (±
@@ -350,74 +360,36 @@ def test_distributed_fit_bit_equal_and_k_tracks_n(spark, monkeypatch):
     # allocation): the distributed K must clear twice that bound
     k_clamped = int(1.25 * 256 // 4)
     assert st.k >= 2 * k_clamped, (
-        f"distributed fit K={st.k} does not track n/leaf_target="
+        f"distributed fit K={st.k} does not track n/LEAF_TARGET="
         f"{n // 6} past the (patched) driver cap (clamped driver "
         f"K <= {k_clamped})")
 
 
-def test_on_blowup_fallback_routes_to_semdedup(spark):
-    """r7 verdict item 5: an unattended 100-TB pipeline wants graceful
-    degradation, not death at hour N.  on_blowup='fallback' must
-    (a) on a structureless corpus: catch the guard's named error,
-    route to the APPROXIMATE SemDeDup within-cell pair search, tag
-    rows method='semdedup_cells', and produce exactly the within-cell
-    path's output; (b) on clustered data: NEVER activate — the exact
-    path runs and rows say method='exact'."""
-    from kafka_bigdata_jobs_spark.operators.similarity import (
-        CoveringRadiusBlowupError,
-        kmeans_ivf_cells,
-    )
+def test_within_cell_pairs_are_same_cell_bruteforce_pairs(spark):
+    """The approximate remedy the blowup error names: pairs WITHIN
+    ``kmeans_ivf_cells`` cells only.  Every such pair shares a cell and
+    is an exact brute-force pair (same cosine); only cross-cell pairs
+    may be missing."""
+    from kafka_bigdata_jobs_spark.operators.similarity import kmeans_ivf_cells
 
-    # (a) structureless: uniform high-dim noise at a threshold that
-    # rivals its angular spread (same corpus family as the guard test)
     rng = np.random.default_rng(29)
-    dim, n = 16, 3000
+    dim, n = 16, 600
     rows = []
     for vid in range(n):
         v = rng.normal(size=dim)
         rows.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
-    noise = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>")
-    # raise mode: the named error propagates (the default contract)
-    with pytest.raises(CoveringRadiusBlowupError):
-        embedding_near_dup_pairs_auto(
-            noise, "vec_id", "embedding", threshold=0.7, dim=dim,
-            max_side_bytes=1, guard_min_rows=0, max_replication=2.0)
-    st = HierStats()
-    got = embedding_near_dup_pairs_auto(
-        noise, "vec_id", "embedding", threshold=0.7, dim=dim,
-        max_side_bytes=1, guard_min_rows=0, max_replication=2.0,
-        on_blowup="fallback", stats=st)
-    assert st.path == "semdedup_fallback"
-    assert st.method == "semdedup_cells"
-    assert got.columns == ["id_a", "id_b", "cosine", "method"]
-    got_rows = {(r["id_a"], r["id_b"], r["cosine"]) for r in got.collect()}
-    assert {r["method"] for r in got.select("method").distinct().collect()
-            } <= {"semdedup_cells"}
-    # the fallback must BE the SemDeDup within-cell path's output
-    fb_cells = max(16, min(4096, n // 256))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     assigned, _ = kmeans_ivf_cells(
-        noise, "vec_id", "embedding", n_cells=fb_cells, seed=42, dim=dim)
-    want = {(r["id_a"], r["id_b"], r["cosine"])
-            for r in embedding_near_dup_pairs(
-                assigned, "vec_id", "embedding", threshold=0.7,
-                cell_col="__cell", dim=dim).collect()}
-    assert got_rows == want
-
-    # (b) clustered: fallback never silently activates
-    rng2 = np.random.default_rng(31)
-    crows = _clustered_corpus(rng2, n_clusters=40, per_cluster=40, dim=8)
-    cdf = spark.createDataFrame(
-        crows, "vec_id long, embedding array<double>")
-    brute = _pairs(embedding_near_dup_pairs(
-        cdf, "vec_id", "embedding", threshold=0.97, dim=8))
-    st = HierStats()
-    res = embedding_near_dup_pairs_auto(
-        cdf, "vec_id", "embedding", threshold=0.97, dim=8,
-        max_side_bytes=1, guard_min_rows=0, on_blowup="fallback", stats=st)
-    assert st.method == "exact"
-    assert res.columns == ["id_a", "id_b", "cosine", "method"]
-    assert _pairs(res.drop("method")) == brute
+        df, "vec_id", "embedding", n_cells=16, seed=42, dim=dim)
+    cell = {r["vec_id"]: r["__cell"] for r in assigned.collect()}
+    brute = set(_pairs(embedding_near_dup_pairs(
+        df, "vec_id", "embedding", threshold=0.7, dim=dim)))
+    within = _pairs(embedding_near_dup_pairs(
+        assigned, "vec_id", "embedding", threshold=0.7, cell_col="__cell",
+        dim=dim))
+    assert within
+    assert all(cell[a] == cell[b] for a, b, _ in within)
+    assert set(within) <= brute
 
 
 def test_exact_home_prepare_matches_inline_build():
@@ -488,7 +460,7 @@ def test_tail_partition_floor_binds_only_at_scale():
     assert bytes_tagged / (got - 1) > LEAF_PART_TARGET_BYTES
 
 
-def test_stats_record_is_per_call(spark):
+def test_stats_record_is_per_call(spark, monkeypatch):
     """Each hier call fills only the HierStats record it was handed:
     two calls on different corpora in one session keep their own K,
     replication factor and phase times, and the first record is
@@ -502,14 +474,15 @@ def test_stats_record_is_per_call(spark):
     big = spark.createDataFrame(
         _clustered_corpus(rng, n_clusters=60, per_cluster=50, dim=dim),
         "vec_id long, embedding array<double>")
+    monkeypatch.setattr(sim, "GUARD_MIN_ROWS", 0)
     first, second = HierStats(), HierStats()
     embedding_near_dup_pairs_hier(
         small, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=64, guard_min_rows=0, stats=first).count()
+        stats=first).count()
     snapshot = copy.deepcopy(first)
+    monkeypatch.setattr(sim, "LEAF_TARGET", 4)
     out = embedding_near_dup_pairs_hier(
-        big, "vec_id", "embedding", threshold=0.97, dim=dim,
-        leaf_target=4, guard_min_rows=0, stats=second)
+        big, "vec_id", "embedding", threshold=0.97, dim=dim, stats=second)
     with second.phase(spark, "tail"):
         out.count()
     assert first == snapshot

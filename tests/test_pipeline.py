@@ -114,10 +114,11 @@ def test_connected_components_chain_and_clique(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_connected_components_cutover_boundary(spark):
+def test_connected_components_cutover_boundary(spark, monkeypatch):
     """The driver/distributed dispatch (DRIVER_EDGE_LIMIT) must be
     invisible to callers: at edge counts straddling the limit, both
     paths return identical min-label components (VERDICT r1 item 10)."""
+    from kafka_bigdata_jobs_spark.operators import dedup
     from kafka_bigdata_jobs_spark.operators.dedup import connected_components
 
     # 8 edges: a 5-chain (diameter stresses the iterative path), a
@@ -128,15 +129,20 @@ def test_connected_components_cutover_boundary(spark):
     expected = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
                 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
     # limit above the edge count -> driver union-find; below -> the
-    # distributed min-label loop.  Same output either side.
-    for limit in (len(rows), len(rows) - 1):
-        got = {
-            r["node"]: r["comp"]
-            for r in connected_components(
-                edges, driver_edge_limit=limit
-            ).collect()
-        }
-        assert got == expected, f"paths diverge at driver_edge_limit={limit}"
+    # distributed min-label loop (the only path that checkpoints its
+    # labels).  Same output either side.
+    checkpoints = []
+    real = type(edges).localCheckpoint
+    monkeypatch.setattr(type(edges), "localCheckpoint",
+                        lambda df, *a, **kw: checkpoints.append(1)
+                        or real(df, *a, **kw))
+    for limit, distributed in ((len(rows), False), (len(rows) - 1, True)):
+        monkeypatch.setattr(dedup, "DRIVER_EDGE_LIMIT", limit)
+        checkpoints.clear()
+        got = {r["node"]: r["comp"]
+               for r in connected_components(edges).collect()}
+        assert bool(checkpoints) == distributed, limit
+        assert got == expected, f"paths diverge at DRIVER_EDGE_LIMIT={limit}"
 
 
 def test_sample_k_per_group_deterministic_and_bounded(spark):

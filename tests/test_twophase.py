@@ -183,21 +183,28 @@ def test_banded_pairs_are_subset_exact(spark):
             assert (r["n"], r["corr"]) == exact[pair], pair
 
 
-def test_auto_dispatch_cutover_boundary(spark):
-    """At/below the key-count limit the exact Gram runs (all-pairs
-    output); above it the banded funnel runs (subset, planted pair
-    still on top)."""
+def test_auto_dispatch_cutover_boundary(spark, monkeypatch):
+    """At/below the key-count limit (EXACT_PAIR_KEY_LIMIT) the exact
+    Gram runs (all-pairs output); above it the banded funnel runs
+    (subset, planted pair still on top)."""
+    from kafka_bigdata_jobs_spark.operators import stats
     from kafka_bigdata_jobs_spark.operators.stats import (
         series_corr_pairs,
         series_corr_pairs_auto,
     )
 
+    calls = []
+    real = stats.series_corr_pairs_banded
+    monkeypatch.setattr(stats, "series_corr_pairs_banded",
+                        lambda *a, **kw: calls.append(1) or real(*a, **kw))
     df = _planted_series(spark)  # 60 distinct keys
     exact = series_corr_pairs(df, "k", "day", "v", 5, 10).collect()
-    at_limit = series_corr_pairs_auto(
-        df, "k", "day", "v", 5, 10, exact_key_limit=60).collect()
+    monkeypatch.setattr(stats, "EXACT_PAIR_KEY_LIMIT", 60)
+    at_limit = series_corr_pairs_auto(df, "k", "day", "v", 5, 10).collect()
+    assert not calls
     assert [tuple(r) for r in at_limit] == [tuple(r) for r in exact]
-    above = series_corr_pairs_auto(
-        df, "k", "day", "v", 5, 10, exact_key_limit=59).collect()
+    monkeypatch.setattr(stats, "EXACT_PAIR_KEY_LIMIT", 59)
+    above = series_corr_pairs_auto(df, "k", "day", "v", 5, 10).collect()
+    assert calls == [1]
     assert (above[0]["key_a"], above[0]["key_b"]) == (0, 1)
     assert above[0]["corr"] == exact[0]["corr"]

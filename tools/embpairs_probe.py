@@ -1,6 +1,6 @@
 """Scaling probe for the hierarchical exact pair search
 (``embedding_near_dup_pairs_hier`` — the ``embedding_close_pairs`` auto
-path past ``max_side_bytes``).
+path past ``MAX_SIDE_MATRIX_BYTES``).
 
 The suite's ``embeddings`` fixture is 2 000 rows at sf0.1 — three
 orders below where the hier path dispatches — so this probe generates

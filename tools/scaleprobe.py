@@ -146,7 +146,7 @@ def probe_cold_builds(spark, attempts: int, out_path: str) -> None:
         "embedding_pairs": (
             suite._shared_embedding_pairs, "embedding_pairs",
             "blocked matmul candidate gen at these sizes (auto path "
-            "below max_side_bytes): linear scan x per-worker matrix",
+            "below MAX_SIDE_MATRIX_BYTES): linear scan x per-worker matrix",
         ),
     }
     results: dict[str, dict] = {}
